@@ -1,7 +1,7 @@
 // Consumer quickstart for the graft library — compiled and run OUTSIDE
 // sbt by scripts/quickstart.sh, against the `sbt publishLocal` jar +
 // the Spark distribution jars, exactly as a downstream project would
-// consume it. One batch call and one streaming call.
+// consume it: the batch and streaming calls of the README snippet.
 import org.apache.spark.sql.SparkSession
 
 object QuickStart {
@@ -34,7 +34,17 @@ object QuickStart {
     val nWin = windows.count()
     println(s"[quickstart] streaming: event-time windows = $nWin")
 
-    require(nDups > 0 && nWin > 0, "quickstart produced empty results")
+    // ---- streaming: bounded log (plan only) + SSE frames over the
+    // event log (AvailableNow) ----
+    val log = graft.streaming.RetentionState
+      .streamBoundedLog(spark, data, capacity = 100000)
+    require(log.isStreaming, "bounded log is not a streaming plan")
+    graft.streaming.SseSink.serve(spark, data,
+      new graft.streaming.SseSink.InMemory("quickstart"))
+    val nFrames = graft.streaming.SseSink.InMemoryTransport.frames("quickstart").size
+    println(s"[quickstart] streaming: SSE frames = $nFrames")
+
+    require(nDups > 0 && nWin > 0 && nFrames > 0, "quickstart produced empty results")
     println("[quickstart] OK")
     spark.stop()
   }

@@ -165,6 +165,8 @@ object SemanticDedup {
       val r = centRows(j)
       cids(j) = r.getInt(0)
       val e = r.getSeq[Any](1)
+      require(e.length == d,
+        s"centroid ${cids(j)} has dimension ${e.length}, expected $d")
       var i = 0
       while (i < d) {
         flat(j * d + i) = e(i).asInstanceOf[Number].doubleValue

@@ -80,10 +80,11 @@ object CentOps {
   }
 
   /** First min(n, k) cids under (ns asc, cid asc) — the
-    * `slice(array_sort(...), 1, n).cid` contract. Bounded insertion
-    * (n is a probe width, small by construction). */
+    * `slice(array_sort(...), 1, n).cid` contract, so n ≤ 0 is empty.
+    * Bounded insertion (n is a probe width, small by construction). */
   def topn(e: ArrayData, ef: Boolean, flat: Array[Double],
            cids: Array[Int], n: Int): ArrayData = {
+    if (n <= 0) return new GenericArrayData(Array.emptyIntArray)
     val k = cids.length
     val d = flat.length / k
     val m = math.min(n, k)

@@ -4,15 +4,12 @@ import java.io.{IOException, OutputStream}
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.concurrent.TrieMap
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, max => maxCol}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.EventLogService
 
@@ -25,65 +22,72 @@ import graft.operators.EventLogService
   *    *` + `Content-Type: text/event-stream`, an initial `:ok`
   *    comment frame, then `data: <json>\n\n` frames flushed as they
   *    arrive (service.go:245-283);
-  *  - `since` optional: absent resumes at the LATEST log offset — a
-  *    pure live tail, seeked by offset exactly as the reference does
-  *    (service.go:254-258), so timestamp ties can't drop events;
-  *    present it is RFC3339 or a Go duration, with malformed input
-  *    answered 400 before any query runs (service.go:228-242);
+  *  - `since` optional: absent resumes at the route's LATEST retained
+  *    offset — a pure live tail, seeked by offset exactly as the
+  *    reference does (service.go:254-258), so timestamp ties can't drop
+  *    events; present it is RFC3339 or a Go duration, resolved to an
+  *    offset by the hub's in-memory index, with malformed input
+  *    answered 400 before anything is subscribed (service.go:228-242);
   *  - SSE-spec resume: frames carry `id: <offset>`, and a reconnect
   *    with `Last-Event-ID: <offset>` replays strictly after it —
-  *    exactly the missed frames (the README.md:46-48 contract the
-  *    reference code never implemented); malformed header → 400;
+  *    exactly the missed frames the ring still retains (the
+  *    README.md:46-48 contract the reference code never implemented);
+  *    malformed header → 400;
   *  - per-client disconnect: a failed frame write tears down that
-  *    client's query only (service.go:272-274 breaks on write error);
-  *    idle connections are detected via SSE comment heartbeats; a
-  *    client that stalls reading until its bounded frame queue fills
-  *    is disconnected rather than buffered without limit;
-  *  - graceful shutdown: [[stop]] stops every client query, then the
-  *    listener and its handler pool (service.go:193-215).
+  *    client's subscription only (service.go:272-274 breaks on write
+  *    error); idle connections are detected via SSE comment
+  *    heartbeats; a client that stalls reading until its bounded frame
+  *    queue fills is disconnected rather than buffered without limit;
+  *  - ingest failure: when the hub's query is no longer active, every
+  *    stream ends (a client never heartbeats against a dead feed), and
+  *    the next connect restarts the ingest into the same rings, so a
+  *    `Last-Event-ID` reconnect is gapless;
+  *  - graceful shutdown: [[stop]] closes every subscription and the
+  *    hub, then the listener and its handler pool (service.go:193-215).
   *
-  * Each connection runs its own continuous query with its own route +
-  * since filters pushed to the scan (the reference's per-handler
-  * memlog seek, service.go:244-262). Executors push frames into a
-  * per-connection bounded queue; the handler thread drains it to the
-  * socket — so a slow client back-pressures (and, at the bound,
-  * disconnects) only its own connection, never a Spark task. Built on
-  * the JDK's com.sun.net.httpserver — no dependency beyond the JRE.
+  * Every connection is a subscription on ONE [[SseHub]] — one
+  * continuous Spark query filling per-route bounded rings, each
+  * handler seeking into its route's ring (the reference's memlog
+  * architecture, service.go:100-106, 244-262). A connect runs no Spark
+  * job; only the first one (or the first after an ingest failure)
+  * starts the hub's query. The hub pushes frames into a per-subscription bounded
+  * queue; the handler thread drains it to the socket — so a slow
+  * client back-pressures (and, at the bound, disconnects) only its own
+  * connection, never the ingest. Built on the JDK's
+  * com.sun.net.httpserver — no dependency beyond the JRE.
+  *
+  * `shared` is kept only for source compatibility with callers that
+  * pass `shared = true` (the benchmark harness does); the hub is the
+  * only serving mode, so `false` is rejected. A later change to the
+  * benchmark removes the parameter together with that call.
   */
 class SseHttpServer(spark: SparkSession, dir: String,
                     port: Int = 0,
                     pollIntervalMs: Long = 100L,
                     heartbeatMs: Long = 500L,
                     maxQueuedFrames: Int = 10000,
-                    shared: Boolean = false,
+                    shared: Boolean = true,
                     nowNs: () => Long = () => System.currentTimeMillis() * 1000000L,
                     hubCapacity: Int = 100000) {
 
-  // fail at construction, not on the first shared-mode connect: a
-  // non-positive capacity would otherwise surface as SseHub's
-  // require() throwing inside the HTTP handler — a dropped client
-  // connection instead of a startup error
-  require(hubCapacity > 0, s"hubCapacity must be positive, got $hubCapacity")
+  require(shared, "shared = false (one query per connection) was removed; " +
+    "every connection is served by the hub")
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   private val pool = Executors.newCachedThreadPool()
-  private val active = TrieMap.empty[Long, StreamingQuery]
   private val activeSubs = TrieMap.empty[Long, SseHub.Subscription]
   @volatile private var closed = false
-  // shared mode: ONE hub query serves every client (the reference's
-  // memlog architecture via SseHub); started on the first subscriber.
-  // Explicit state, not a lazy val: a failed start must not be
-  // retried by stop() (lazy initializers re-run after throwing).
-  private var hubRef: Option[SseHub] = None
-  private def hubOrStart(): SseHub = synchronized {
+  // ONE hub query serves every client. Built here, so a bad capacity
+  // fails at construction rather than inside the first HTTP handler.
+  private val hub = new SseHub(spark, dir, capacity = hubCapacity,
+    pollIntervalMs = pollIntervalMs, maxQueuedFrames = maxQueuedFrames)
+
+  /** Starts the ingest on the first connect, and restarts it on the
+    * first connect after it died; restart() keeps the rings, so a
+    * resume across the outage is gapless. */
+  private def ensureIngest(): Unit = synchronized {
     if (closed) throw new IllegalStateException("server stopped")
-    hubRef.getOrElse {
-      val h = new SseHub(spark, dir, capacity = hubCapacity,
-        pollIntervalMs = pollIntervalMs, maxQueuedFrames = maxQueuedFrames)
-      hubRef = Some(h)
-      h.start()
-      h
-    }
+    if (!hub.isIngesting) hub.restart()
   }
 
   server.createContext("/health", (ex: HttpExchange) => {
@@ -96,20 +100,19 @@ class SseHttpServer(spark: SparkSession, dir: String,
 
   def start(): Int = { server.start(); boundPort }
   def boundPort: Int = server.getAddress.getPort
-  def activeClients: Int = active.size + activeSubs.size
+  def activeClients: Int = activeSubs.size
 
-  /** Graceful shutdown: new writes stop, every per-client query is
-    * stopped, then the listener and handler pool close. Runs under the
-    * same monitor as [[hubOrStart]], so a connect racing shutdown
-    * either starts its hub/query before the sweep (and is swept) or
+  /** Graceful shutdown: new writes stop, every subscription and the
+    * hub are closed, then the listener and handler pool close. Runs
+    * under the same monitor as [[ensureIngest]], so a connect racing
+    * shutdown either subscribes before the sweep (and is swept) or
     * observes `closed` and refuses; late registrations that slip past
     * the sweep re-check `closed` after registering and tear themselves
     * down (see [[streamTo]]). */
   def stop(): Unit = synchronized {
     closed = true
-    active.values.foreach(q => try q.stop() catch { case _: Exception => () })
     activeSubs.values.foreach(s => try s.close() catch { case _: Exception => () })
-    hubRef.foreach(h => try h.stop() catch { case _: Exception => () })
+    try hub.stop() catch { case _: Exception => () }
     server.stop(0)
     pool.shutdown()
   }
@@ -137,117 +140,51 @@ class SseHttpServer(spark: SparkSession, dir: String,
     // the original query string alongside the header; the header is
     // the more precise position). The reference README names this
     // contract (README.md:46-48); its code only ever did `?since=`.
-    val lastEventId = Option(ex.getRequestHeaders.getFirst("Last-Event-ID"))
-    lastEventId match {
-      case Some(v) =>
-        v.toLongOption match {
-          case None => respond(ex, 400, "Bad Request\n"); return
-          case Some(off) =>
-            try {
-              if (shared) { hubOrStart(); () } // start before streaming
-              streamTo(ex, route, sinceNs = None, afterOffset = Some(off))
-            } catch {
-              case _: IllegalStateException =>
-                respond(ex, 503, "Service Unavailable\n")
-            }
-            return
+    // None = a malformed seek position; resolved only once the ingest
+    // runs, so a seek sees the ring the catch-up batch filled
+    val seek: Option[() => Long] =
+      Option(ex.getRequestHeaders.getFirst("Last-Event-ID")) match {
+        case Some(v) => v.toLongOption.map(off => () => off)
+        case None => queryParam(ex, "since") match {
+          // the hub's in-memory ts->offset index resolves the instant
+          // (the reference's t2o role), forward-only over the ring
+          case Some(s) => EventLogService.parseSinceNs(s, nowNs()).toOption
+            .map(ns => () => hub.resolveSinceOffset(route, ns))
+          // absent since = the route's latest retained offset
+          // (service.go:254-258: seek to the log's current end; an
+          // empty log streams everything)
+          case None => Some(() => hub.latestOffset(route))
         }
-      case None => ()
-    }
-    try queryParam(ex, "since") match {
-      case Some(s) => EventLogService.parseSinceNs(s, nowNs()) match {
-        case Left(_) => respond(ex, 400, "Bad Request\n") // service.go:237
-        case Right(ns) if shared =>
-          // hub seeks are offsets: the hub's in-memory ts->offset index
-          // resolves the instant (the reference's t2o role) with the
-          // same forward-only `ts >= since` semantics as the
-          // per-client path. The two modes return the same window when
-          // timestamps are offset-monotone and the seek is within the
-          // hub's ring retention (the SseHub class doc's standing
-          // assumptions); a late event with ts >= since but an offset
-          // before the resolved one is replayed only by the per-client
-          // path, which filters the full persistent log by ts
-          streamTo(ex, route, sinceNs = None,
-            afterOffset = Some(hubOrStart().resolveSinceOffset(route, ns)))
-        case Right(ns) => streamTo(ex, route, sinceNs = Some(ns), afterOffset = None)
       }
-      case None if shared =>
-        // absent since = latest retained offset, straight from the
-        // hub's ring (service.go:254-258: seek to the log's current
-        // end; an empty log streams everything)
-        streamTo(ex, route, sinceNs = None,
-          afterOffset = Some(hubOrStart().latestOffset(route)))
-      case None =>
-        // absent since = latest OFFSET (service.go:254-258): resolve
-        // the route's high-water event_id once, batch, and tail
-        // strictly after it — an offset seek, so a late event sharing
-        // the current max timestamp is still delivered
-        val hwm = graft.sources.Tables.eventsRaw(spark, dir)
-          .where(col("event_type") === route)
-          .agg(maxCol("event_id")).head() match {
-            case r if r.isNullAt(0) => Long.MinValue // empty log: everything is new
-            case r => r.getLong(0)
-          }
-        streamTo(ex, route, sinceNs = None, afterOffset = Some(hwm))
-    }
-    catch { // hubOrStart observed `closed` before any stream bytes went out
-      case _: IllegalStateException => respond(ex, 503, "Service Unavailable\n")
+    seek match {
+      case None => respond(ex, 400, "Bad Request\n") // service.go:237
+      case Some(resolve) =>
+        try ensureIngest()
+        catch { case _: IllegalStateException => // observed `closed`
+          respond(ex, 503, "Service Unavailable\n"); return
+        }
+        streamTo(ex, hub.subscribe(route, resolve()))
     }
   }
 
-  private def streamTo(ex: HttpExchange, route: String,
-                       sinceNs: Option[Long], afterOffset: Option[Long]): Unit = {
-    ex.getResponseHeaders.add("Content-Type", "text/event-stream")
-    ex.getResponseHeaders.add("Cache-Control", "no-cache")
-    ex.sendResponseHeaders(200, 0) // chunked: the stream has no length
-    val os = ex.getResponseBody
-    os.write(":ok\n\n".getBytes(UTF_8)) // service.go:248-252
-    os.flush()
-
-    val id = SseHttpServer.nextConnId()
-    if (shared) {
-      // subscribe on the one hub query; the since instant was already
-      // resolved to an offset seek by handleRoute
-      var sub: SseHub.Subscription = null
-      try {
-        sub = hubOrStart().subscribe(route, afterOffset.getOrElse(Long.MinValue))
-        activeSubs.put(id, sub)
-        // late registration may have slipped past stop()'s sweep
-        if (closed) throw new IOException("server shutting down")
-        drainLoop(os, () => sub.poll(),
-          fatalNow = () => sub.overflowed, ended = () => sub.isClosed)
-      }
-      catch {
-        case _: IOException => () // client hung up: this sub only
-        case _: IllegalStateException => () // raced shutdown; finally cleans up
-      }
-      finally {
-        activeSubs.remove(id)
-        if (sub != null) sub.close()
-        try ex.close() catch { case _: Exception => () }
-      }
-    } else {
-      var q: StreamingQuery = null
-      try {
-        val queue = SseHttpServer.register(id, maxQueuedFrames)
-        q = SseSink.serveLive(spark, dir, new SseHttpServer.QueueTransport(id),
-          pollIntervalMs, sinceNs, Some(route), afterOffset, withIds = true)
-        active.put(id, q)
-        // late registration may have slipped past stop()'s sweep
-        if (closed) throw new IOException("server shutting down")
-        // a terminated query can never deliver another frame: treat it
-        // as ended instead of heartbeating the client forever
-        val query = q
-        drainLoop(os, () => queue.poll(),
-          fatalNow = () => queue.overflowed, ended = () => !query.isActive)
-      }
-      catch { case _: IOException => () } // client hung up: this query only
-      finally {
-        active.remove(id)
-        SseHttpServer.unregister(id)
-        if (q != null) { try q.stop() catch { case _: Exception => () } }
-        try ex.close() catch { case _: Exception => () }
-      }
+  private def streamTo(ex: HttpExchange, sub: SseHub.Subscription): Unit = {
+    activeSubs.put(sub.id, sub)
+    try {
+      // late registration may have slipped past stop()'s sweep
+      if (closed) throw new IOException("server shutting down")
+      ex.getResponseHeaders.add("Content-Type", "text/event-stream")
+      ex.getResponseHeaders.add("Cache-Control", "no-cache")
+      ex.sendResponseHeaders(200, 0) // chunked: the stream has no length
+      val os = ex.getResponseBody
+      os.write(":ok\n\n".getBytes(UTF_8)) // service.go:248-252
+      os.flush()
+      drainLoop(os, sub)
+    }
+    catch { case _: IOException => () } // client hung up: this sub only
+    finally {
+      activeSubs.remove(sub.id)
+      sub.close()
+      try ex.close() catch { case _: Exception => () }
     }
   }
 
@@ -257,25 +194,25 @@ class SseHttpServer(spark: SparkSession, dir: String,
     * queue that hit its bound means the client stalled while frames
     * kept arriving — disconnect it, as the reference does on a failed
     * write, instead of buffering without limit. */
-  private def drainLoop(os: OutputStream, poll: () => String,
-                        fatalNow: () => Boolean, ended: () => Boolean): Unit = {
+  private def drainLoop(os: OutputStream, sub: SseHub.Subscription): Unit = {
     var lastWrite = System.currentTimeMillis()
     while (!closed) {
       // overflow disconnects IMMEDIATELY (the stream already has a
       // gap — frames were dropped at the add end; a busy feed could
       // keep the queue non-empty forever, so this cannot wait for a
       // drain), per the reference's failed-write teardown
-      if (fatalNow())
+      if (sub.overflowed)
         throw new IOException("client too slow")
-      val frame = poll()
+      val frame = sub.poll()
       if (frame != null) {
         os.write(frame.getBytes(UTF_8))
         os.flush()
         lastWrite = System.currentTimeMillis()
-      } else if (ended()) {
-        // checked only once the queue is DRAINED: a terminated query's
-        // already-buffered tail frames are still delivered before the
-        // disconnect (an ended()-first loop would drop them)
+      } else if (sub.isClosed || !hub.isIngesting) {
+        // a dead ingest can never deliver another frame: end the
+        // stream instead of heartbeating the client forever. Checked
+        // only once the queue is DRAINED, so frames already buffered
+        // when the feed ended are still delivered first
         throw new IOException("feed closed")
       } else if (System.currentTimeMillis() - lastWrite >= heartbeatMs) {
         os.write(":\n\n".getBytes(UTF_8))
@@ -285,32 +222,5 @@ class SseHttpServer(spark: SparkSession, dir: String,
         Thread.sleep(20)
       }
     }
-  }
-}
-
-object SseHttpServer {
-  // Per-connection frame queues live in a STATIC registry (like
-  // SseSink.InMemoryTransport): the ForeachWriter is serialized per
-  // task, so a transport must carry only the connection id and look
-  // the shared queue up JVM-side — a captured queue reference would
-  // deserialize into a private copy and frames would vanish. The id
-  // counter is static too, so several server instances in one JVM
-  // can never collide on a connection id.
-  private val connIds = new AtomicLong(0L)
-  private def nextConnId(): Long = connIds.incrementAndGet()
-
-  private val queues = TrieMap.empty[Long, SseHub.BoundedQueue]
-  private def register(id: Long, cap: Int): SseHub.BoundedQueue = {
-    val q = new SseHub.BoundedQueue(cap)
-    queues.put(id, q)
-    q
-  }
-  private def unregister(id: Long): Unit = queues.remove(id)
-
-  /** Executor-side transport: frames land in the per-connection queue
-    * the handler thread drains (dropped if the client already left). */
-  final class QueueTransport(connId: Long) extends SseSink.SseTransport {
-    def send(route: String, frame: String): Unit =
-      queues.get(connId).foreach(_.add(frame))
   }
 }

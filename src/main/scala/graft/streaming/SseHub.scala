@@ -18,13 +18,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * service.go:244-262), including the in-memory timestamp→offset
   * index (timestamp2offset.go) so connects never run a Spark job.
   *
-  * This is the scale path for many concurrent clients: N subscribers
-  * cost ONE streaming query + N bounded queues, where
-  * [[SseSink.serveLive]]/[[SseHttpServer]] run one query per client
-  * (simpler, with per-client predicate pushdown — the right trade for
-  * few clients). Like the reference's memlog, the ring is bounded: a
-  * client seeking before the oldest retained offset replays only what
-  * capacity kept (memlog.WithMaxSegmentSize semantics).
+  * N subscribers cost ONE streaming query + N bounded queues; this is
+  * the serving core behind every [[SseHttpServer]] connection. Like
+  * the reference's memlog, the ring is bounded: a client seeking
+  * before the oldest retained offset replays only what capacity kept
+  * (memlog.WithMaxSegmentSize semantics).
   *
   * Ordering: within a source partition frames arrive in offset order;
   * across partitions interleaving can occur, exactly as the
@@ -69,7 +67,9 @@ class SseHub(spark: SparkSession, dir: String,
     routeCapacities.getOrElse(route, capacity)
 
   private val subs = TrieMap.empty[Long, Subscription]
-  private var query: Option[StreamingQuery] = None
+  // volatile: serving threads poll [[isIngesting]] without the monitor
+  // that start/restart hold while waiting for the catch-up batch
+  @volatile private var query: Option[StreamingQuery] = None
 
   /** Start the single shared ingest query (idempotent) and wait for
     * its initial catch-up micro-batch, so connect-time seeks resolve
@@ -87,11 +87,11 @@ class SseHub(spark: SparkSession, dir: String,
         .foreach(new HubWriter(hubId))
         .trigger(Trigger.ProcessingTime(pollIntervalMs))
         .start()
+      query = Some(q)
       val deadline = System.currentTimeMillis() + 30000L
       while (q.recentProgress.isEmpty && q.isActive &&
              System.currentTimeMillis() < deadline)
         Thread.sleep(50)
-      query = Some(q)
       q
     }
   }
@@ -106,7 +106,8 @@ class SseHub(spark: SparkSession, dir: String,
     * new frames, and events that landed during the outage are picked
     * up by the replacement's catch-up batch. An offset already evicted
     * from its route ring at restart time IS re-delivered — same
-    * semantics as a task retry outliving `capacity` newer events. */
+    * semantics as a task retry outliving `capacity` newer events. On
+    * a hub that never started, this is [[start]]. */
   def restart(): StreamingQuery = synchronized {
     query.foreach(q => try q.stop() catch { case _: Exception => () })
     query = None
@@ -128,6 +129,11 @@ class SseHub(spark: SparkSession, dir: String,
 
   def activeSubscribers: Int = subs.size
 
+  /** The ingest query is running. False before [[start]], after
+    * [[stop]], and once the query failed or was stopped — then no
+    * subscription receives another live frame until [[restart]]. */
+  def isIngesting: Boolean = query.exists(_.isActive)
+
   /** Offset span retained across ALL routes (diagnostics). */
   def retainedRange: Option[(Long, Long)] = lock.synchronized {
     val nonEmpty = rings.values.filter(!_.ring.isEmpty)
@@ -143,13 +149,16 @@ class SseHub(spark: SparkSession, dir: String,
   }
 
   /** In-memory timestamp→offset seek over the route's retained ring
-    * (the reference's t2o.NearestOffset role, but with [[SseSink]]'s
-    * forward-only `ts >= since` semantics so shared and per-client
-    * serving return the same windows): smallest retained offset whose
-    * ts is at/after the instant, minus one (strictly-after
-    * subscription); no such event → the latest retained offset (pure
-    * live tail); empty ring → everything (the reference's empty-log
-    * path, service.go:254-258). No Spark job runs. */
+    * (the reference's t2o.NearestOffset role, with forward-only
+    * `ts >= since` semantics): smallest retained offset whose ts is
+    * at/after the instant, minus one (strictly-after subscription); no
+    * such event → the latest retained offset (pure live tail); empty
+    * ring → everything (the reference's empty-log path,
+    * service.go:254-258). No Spark job runs. The window follows
+    * OFFSETS, as in the reference: an event whose ts precedes the
+    * instant but whose offset follows the resolved one is delivered;
+    * one whose ts is at/after the instant but whose offset precedes
+    * it (a late arrival, or one the ring no longer retains) is not. */
   def resolveSinceOffset(route: String, sinceNs: Long): Long = lock.synchronized {
     rings.get(route).filter(!_.ring.isEmpty) match {
       case Some(r) =>
@@ -268,18 +277,12 @@ object SseHub {
   /** Bounded frame buffer: overflow marks the subscriber dead rather
     * than growing the heap (the serving layer turns that into a
     * disconnect, as [[SseHttpServer]] does). */
-  final class BoundedQueue(cap: Int) {
+  private[streaming] final class BoundedQueue(cap: Int) {
     private val q = new java.util.concurrent.LinkedBlockingQueue[String](cap)
     @volatile var overflowed = false
     def add(frame: String): Unit = if (!q.offer(frame)) overflowed = true
     def poll(): String = q.poll()
     def size: Int = q.size()
-    def drain(): Seq[String] = {
-      val out = Vector.newBuilder[String]
-      var f = q.poll()
-      while (f != null) { out += f; f = q.poll() }
-      out.result()
-    }
   }
 
   // Static registries: the ForeachWriter serializes per task, so it

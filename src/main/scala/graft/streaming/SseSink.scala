@@ -9,18 +9,18 @@ import org.apache.spark.sql.{DataFrame, ForeachWriter, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** A11: SSE serving sink — the Spark realization of the reference's
-  * HTTP event-stream handler
-  * (/root/reference/internal/kinesis2sse/service.go:217-283). Each
-  * event is framed as `data: <json>\n\n` (service.go:271) and handed
-  * to a transport.
+/** A11: SSE framing sink — the reference's HTTP event-stream frame
+  * (kinesis2sse service.go:217-283) as a run-to-completion stream.
+  * Each event is framed as `data: <json>\n\n` (service.go:271) and
+  * handed to a transport.
   *
-  * The default transport is an in-process registry (what the tests
-  * read); a production deployment replaces [[SseTransport]] with a
-  * push to connected HTTP clients. The ForeachWriter runs on
-  * executors — one transport connection per partition, frames within a
-  * partition delivered in order, exactly like one SSE client per
-  * shard-consumer in the reference.
+  * [[serve]] drains everything available once and returns; live
+  * serving to HTTP clients is [[SseHttpServer]] over [[SseHub]],
+  * which reuses [[frameCol]]. The default transport is an in-process
+  * registry (what the tests read); a downstream consumer supplies its
+  * own [[SseTransport]]. The ForeachWriter runs on executors — one
+  * transport connection per partition, frames within a partition
+  * delivered in order, like one consumer per shard in the reference.
   */
 object SseSink {
 
@@ -66,58 +66,8 @@ object SseSink {
     q.awaitTermination()
   }
 
-  /** Catch-up-then-follow, the reference handler's actual serving mode
-    * (service.go:252-283: replay from the resolved offset, then stay
-    * attached and flush each new event as it lands): a CONTINUOUS
-    * ProcessingTime query that drains everything available and keeps
-    * polling the source for new files/records, pushing frames to the
-    * transport as they arrive. Returns the live query — the caller
-    * owns its lifecycle (the reference side of this is the client
-    * hanging up).
-    *
-    * `sinceNs` is the PER-CLIENT resume position (the reference runs
-    * one independent memlog seek per connected handler,
-    * service.go:244-262): each subscription is its own continuous
-    * query whose `ts >= since` filter is pushed to the scan, so two
-    * concurrent clients with different positions each replay exactly
-    * their own window and then share the live tail. */
-  def serveLive(spark: org.apache.spark.sql.SparkSession, dir: String,
-                transport: SseTransport,
-                pollIntervalMs: Long = 100L,
-                sinceNs: Option[Long] = None,
-                route: Option[String] = None,
-                afterOffset: Option[Long] = None,
-                withIds: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
-    framesStream(spark, dir, sinceNs, route, afterOffset, withIds).writeStream
-      .foreach(writer(transport))
-      .trigger(Trigger.ProcessingTime(pollIntervalMs))
-      .start()
-
-  /** `id: <event_id>` line ahead of the frame — the SSE-spec field a
-    * client echoes back as `Last-Event-ID` on reconnect. Offsets ARE
-    * event ids here, so the browser's automatic resume lands on the
-    * same strictly-after offset seek the no-since default uses (the
-    * reference README names this contract, README.md:46-48; its code
-    * never implemented it). */
-  def idFrameCol: org.apache.spark.sql.Column =
-    concat(lit("id: "), col("event_id").cast("string"), lit("\n"), frameCol)
-
-  /** `sinceNs` is the timestamp seek; `afterOffset` is the OFFSET seek
-    * (strictly-after event_id) — the reference's no-since default
-    * resumes at the latest log offset, not the latest timestamp
-    * (service.go:254-258), so timestamp ties never drop events.
-    * `withIds` prepends the SSE `id:` field (HTTP serving paths). */
   private def framesStream(spark: org.apache.spark.sql.SparkSession,
-                           dir: String,
-                           sinceNs: Option[Long] = None,
-                           route: Option[String] = None,
-                           afterOffset: Option[Long] = None,
-                           withIds: Boolean = false): DataFrame = {
-    val ev = EventStreams.readEvents(spark, dir)
-    val routed = route.fold(ev)(rt => ev.where(col("event_type") === rt))
-    val timed = sinceNs.fold(routed)(n => routed.where(col("ts") >= n))
-    afterOffset.fold(timed)(o => timed.where(col("event_id") > o))
-      .select(col("event_type"),
-        (if (withIds) idFrameCol else frameCol).as("frame"))
-  }
+                           dir: String): DataFrame =
+    EventStreams.readEvents(spark, dir)
+      .select(col("event_type"), frameCol.as("frame"))
 }

@@ -130,4 +130,18 @@ class AdviceFixSpec extends SparkSpec {
       s"all-NaN row not on (cid 0, -2.0): ${lit0(0)}")
     assert(lit0(1).getDouble(2) == 1.0, s"real row mis-scored: ${lit0(1)}")
   }
+
+  test("literal assignment rejects a ragged centroid row") {
+    import spark.implicits._
+    val emb = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
+    // the second centroid carries a third element the flat matrix has
+    // no slot for: it must fail loudly, never be scored truncated
+    val cents = Seq(
+      org.apache.spark.sql.Row(0, Seq(1.0, 0.0)),
+      org.apache.spark.sql.Row(1, Seq(0.0, 1.0, 5.0)))
+    val e = intercept[IllegalArgumentException] {
+      SemanticDedup.assignToLiteral(spark, emb, cents)
+    }
+    assert(e.getMessage.contains("dimension"), s"wrong failure: $e")
+  }
 }

@@ -115,4 +115,18 @@ class CentScoreSpec extends SparkSpec {
       assert(r.getSeq[Int](1) == Seq(2, 9))
     }
   }
+
+  test("graft_cent_topn with n <= 0 returns an empty array") {
+    // slice(array_sort(...), 1, 0) is empty; the bounded insertion
+    // must not read a selection slot that a zero-width probe never has
+    val cents = mkCents(5, 9)
+    val flat = cents.flatMap(_._2).toArray
+    val cids = cents.map(_._1).toArray
+    val e = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.fill[Any](d)(0.5))
+    for (n <- Seq(0, -1, -7)) {
+      val top = graft.plans.CentOps.topn(e, ef = false, flat, cids, n)
+      assert(top.numElements() == 0, s"n=$n")
+    }
+  }
 }

@@ -12,9 +12,10 @@ import graft.streaming.SseHttpServer
 
 /** The literal HTTP transport: real clients over a real socket —
   * /health, CORS, the 400 path, `:ok` preamble, catch-up + live tail
-  * with route/since filters, latest-offset default, per-client
-  * disconnect, `Last-Event-ID` resume, graceful shutdown
-  * (service.go:74-119, 217-283).
+  * with route/since seeks, latest-offset default, per-client
+  * disconnect, `Last-Event-ID` resume, ring-bounded replay, ingest
+  * failure + restart, graceful shutdown (service.go:74-119, 217-283).
+  * Every connection rides the server's one hub query.
   *
   * Streaming clients are RAW sockets speaking HTTP/1.0 (close-
   * delimited responses), not HttpURLConnection: the JDK client's
@@ -50,14 +51,21 @@ class SseHttpSpec extends SparkSpec {
     cond
   }
 
-  private def withServer(f: (SseHttpServer, File) => Unit): Unit = {
+  /** Runs `f` against a hub server over events `ids`; however many
+    * clients `f` connects, they must all ride ONE streaming query. */
+  private def withServer(ids: Range = 1 to 5, hubCapacity: Int = 100000)(
+      f: (SseHttpServer, File) => Unit): Unit = {
     val base = Files.createTempDirectory("graft_http").toFile
-    writeEvents(new File(base, "events.parquet"), 1 to 5, append = false)
-    val srv = new graft.streaming.SseHttpServer(spark, base.getPath,
-      heartbeatMs = 200L)
+    writeEvents(new File(base, "events.parquet"), ids, append = false)
+    val srv = new SseHttpServer(spark, base.getPath,
+      heartbeatMs = 200L, hubCapacity = hubCapacity)
+    val before = spark.streams.active.length
     srv.start()
-    try f(srv, new File(base, "events.parquet"))
-    finally srv.stop()
+    try {
+      f(srv, new File(base, "events.parquet"))
+      assert(spark.streams.active.length <= before + 1,
+        s"${spark.streams.active.length - before} streaming queries for one hub")
+    } finally srv.stop()
   }
 
   /** Non-streaming endpoints (health/400/404) via HttpURLConnection. */
@@ -86,6 +94,8 @@ class SseHttpSpec extends SparkSpec {
     val lines = new ConcurrentLinkedQueue[String]()
     val respHeaders = TrieMap.empty[String, String]
     @volatile var status: Int = -1
+    /** The server closed the stream (or the socket died). */
+    @volatile var ended = false
     private val reader = new Thread(() => {
       try {
         val br = new BufferedReader(
@@ -110,6 +120,7 @@ class SseHttpSpec extends SparkSpec {
           while (b != null) { lines.add(b); b = br.readLine() }
         }
       } catch { case _: Exception => () }
+      ended = true
     })
     reader.setDaemon(true)
     reader.start()
@@ -126,7 +137,7 @@ class SseHttpSpec extends SparkSpec {
   }
 
   test("GET /health answers 200 with CORS") {
-    withServer { (srv, _) =>
+    withServer() { (srv, _) =>
       val c = get(srv.boundPort, "/health")
       assert(c.getResponseCode == 200)
       assert(c.getHeaderField("Access-Control-Allow-Origin") == "*")
@@ -134,7 +145,7 @@ class SseHttpSpec extends SparkSpec {
   }
 
   test("malformed since answers 400 before any query runs") {
-    withServer { (srv, _) =>
+    withServer() { (srv, _) =>
       val c = get(srv.boundPort, "/routes/click?since=yesterday")
       assert(c.getResponseCode == 400)
       assert(srv.activeClients == 0)
@@ -143,26 +154,32 @@ class SseHttpSpec extends SparkSpec {
   }
 
   test("SSE stream: :ok preamble, catch-up from since, route filter, live tail") {
-    withServer { (srv, evDir) =>
-      val c = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z")
-      assert(c.awaitStatus() == 200)
-      assert(c.respHeaders.get("content-type").exists(_.startsWith("text/event-stream")))
-      assert(c.respHeaders.get("access-control-allow-origin").contains("*"))
-      // catch-up: clicks 2 and 4 exist at connect time
-      assert(eventually()(c.has(2) && c.has(4)), "catch-up frames missing")
-      assert(c.lines.asScala.head == ":ok", "missing :ok preamble")
-      // live tail: appended clicks stream to the open connection
-      writeEvents(evDir, 6 to 10, append = true)
-      assert(eventually()(c.has(6) && c.has(8) && c.has(10)), "tail frames missing")
+    withServer(1 to 10) { (srv, evDir) =>
+      val cA = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z")
+      val cB = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:07Z")
+      assert(cA.awaitStatus() == 200)
+      assert(cA.respHeaders.get("content-type").exists(_.startsWith("text/event-stream")))
+      assert(cA.respHeaders.get("access-control-allow-origin").contains("*"))
+      assert(eventually()(srv.activeClients == 2), "clients never attached")
+      // catch-up: clicks 2..10 exist at connect time
+      assert(eventually()((2 to 10 by 2).forall(cA.has)), "client A window incomplete")
+      assert(cA.lines.asScala.head == ":ok", "missing :ok preamble")
+      // B's instant resolves to the nearest offset at/after 07s: clicks 8, 10
+      assert(eventually()(cB.has(8) && cB.has(10)), "client B window incomplete")
+      assert(!cB.has(6), "client B replayed before its seek")
+      // live tail: appended clicks stream to both open connections
+      writeEvents(evDir, 11 to 14, append = true)
+      assert(eventually()(cA.has(12) && cA.has(14) && cB.has(12) && cB.has(14)),
+        "tail frames missing")
       // route filter: view events never cross this route's stream
-      for (i <- Seq(1, 3, 5, 7, 9))
-        assert(!c.has(i), s"view event $i leaked into /routes/click")
-      c.close()
+      for (i <- 1 to 13 by 2)
+        assert(!cA.has(i) && !cB.has(i), s"view event $i leaked into /routes/click")
+      cA.close(); cB.close()
     }
   }
 
   test("absent since resumes at the latest offset (pure live tail)") {
-    withServer { (srv, evDir) =>
+    withServer() { (srv, evDir) =>
       val c = new SseClient(srv.boundPort, "/routes/click")
       assert(c.awaitStatus() == 200)
       assert(eventually()(c.lines.asScala.nonEmpty), "no preamble") // :ok
@@ -175,7 +192,7 @@ class SseHttpSpec extends SparkSpec {
   }
 
   test("client disconnect tears down only that client's query") {
-    withServer { (srv, _) =>
+    withServer() { (srv, _) =>
       val cA = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z")
       val cB = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z")
       assert(eventually()(srv.activeClients == 2), "clients never attached")
@@ -187,34 +204,8 @@ class SseHttpSpec extends SparkSpec {
     }
   }
 
-  test("shared mode: many HTTP clients ride ONE hub query, seeks resolved to offsets") {
-    val base = Files.createTempDirectory("graft_http_hub").toFile
-    writeEvents(new File(base, "events.parquet"), 1 to 10, append = false)
-    val srv = new graft.streaming.SseHttpServer(spark, base.getPath,
-      heartbeatMs = 200L, shared = true)
-    srv.start()
-    try {
-      val before = spark.streams.active.length
-      val cA = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z")
-      val cB = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:07Z")
-      assert(eventually()(srv.activeClients == 2), "clients never attached")
-      // the whole point: one streaming query for any number of clients
-      assert(spark.streams.active.length <= before + 1,
-        s"shared mode started ${spark.streams.active.length - before} queries")
-      assert(eventually()(cA.has(2) && cA.has(4) && cA.has(10)),
-        "client A window incomplete")
-      // B's instant resolves to the nearest offset at/after 07s: clicks 8, 10
-      assert(eventually()(cB.has(8) && cB.has(10)), "client B window incomplete")
-      assert(!cB.has(6), "client B replayed before its seek")
-      writeEvents(new File(base, "events.parquet"), 11 to 12, append = true)
-      assert(eventually()(cA.has(12) && cB.has(12)), "shared tail not fanned out")
-      cA.close(); cB.close()
-      assert(eventually()(srv.activeClients == 0), "disconnects not reaped")
-    } finally srv.stop()
-  }
-
   test("Last-Event-ID resume: a dropped client reconnects and receives exactly the missed frames") {
-    withServer { (srv, evDir) =>
+    withServer() { (srv, evDir) =>
       // first connection: catch-up delivers clicks 2 and 4, each frame
       // preceded by its SSE id line (id == event_id == offset)
       val c1 = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z")
@@ -224,7 +215,8 @@ class SseHttpSpec extends SparkSpec {
       c1.close() // the drop
       // events land while the client is away
       writeEvents(evDir, 6 to 10, append = true)
-      // reconnect with the last id it saw: exactly the missed clicks
+      // reconnect with the last id it saw: exactly the missed clicks —
+      // since=T0 alone would replay 2..10, so the header must win
       val c2 = new SseClient(srv.boundPort,
         "/routes/click?since=2024-01-15T00:00:00Z",
         headers = Seq("Last-Event-ID" -> "4"))
@@ -235,73 +227,20 @@ class SseHttpSpec extends SparkSpec {
         "frames before Last-Event-ID re-delivered (header must win over since)")
       assert(!c2.has(7) && !c2.has(9), "route filter lost on resume")
       c2.close()
-      // malformed header answers 400 before any query runs
-      val c3 = get(srv.boundPort, "/routes/click",
-        headers = Seq("Last-Event-ID" -> "not-an-offset"))
-      assert(c3.getResponseCode == 400)
+      // a malformed header answers 400 before anything is subscribed
+      for (bad <- Seq("not-an-offset", "4; DROP TABLE")) {
+        val c3 = get(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z",
+          headers = Seq("Last-Event-ID" -> bad))
+        assert(c3.getResponseCode == 400, bad)
+      }
     }
-  }
-
-  test("Last-Event-ID resume in shared hub mode") {
-    val base = Files.createTempDirectory("graft_http_lei").toFile
-    writeEvents(new File(base, "events.parquet"), 1 to 6, append = false)
-    val srv = new graft.streaming.SseHttpServer(spark, base.getPath,
-      heartbeatMs = 200L, shared = true)
-    srv.start()
-    try {
-      val c1 = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z")
-      assert(eventually()(c1.has(2) && c1.has(4) && c1.has(6)))
-      assert(c1.ids == Set(2L, 4L, 6L))
-      c1.close()
-      writeEvents(new File(base, "events.parquet"), 7 to 10, append = true)
-      val c2 = new SseClient(srv.boundPort, "/routes/click",
-        headers = Seq("Last-Event-ID" -> "6"))
-      assert(eventually()(c2.has(8) && c2.has(10)),
-        "hub replay from Last-Event-ID incomplete")
-      assert(!c2.has(2) && !c2.has(4) && !c2.has(6),
-        "hub re-delivered frames at/before Last-Event-ID")
-      c2.close()
-    } finally srv.stop()
-  }
-
-  test("shared mode: Last-Event-ID wins over since (header precedence matrix)") {
-    // the per-client mode's precedence case lives in the reconnect test
-    // above (c2 sends BOTH since=T0 and Last-Event-ID: 4 and must not
-    // see 2/4); this is the same matrix cell for the hub serving mode
-    val base = Files.createTempDirectory("graft_http_prec").toFile
-    writeEvents(new File(base, "events.parquet"), 1 to 10, append = false)
-    val srv = new graft.streaming.SseHttpServer(spark, base.getPath,
-      heartbeatMs = 200L, shared = true)
-    srv.start()
-    try {
-      // since=T0 alone would replay clicks 2..10; the header must win
-      // and deliver strictly after offset 6 only
-      val c = new SseClient(srv.boundPort,
-        "/routes/click?since=2024-01-15T00:00:00Z",
-        headers = Seq("Last-Event-ID" -> "6"))
-      assert(c.awaitStatus() == 200)
-      assert(eventually()(c.has(8) && c.has(10)), "post-header frames missing")
-      assert(!c.has(2) && !c.has(4) && !c.has(6),
-        "header did not win over since in shared mode")
-      c.close()
-      // malformed header answers 400 in shared mode too, before any
-      // hub subscription is created
-      val bad = get(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z",
-        headers = Seq("Last-Event-ID" -> "4; DROP TABLE"))
-      assert(bad.getResponseCode == 400)
-    } finally srv.stop()
   }
 
   test("Last-Event-ID beyond ring eviction resumes from the oldest retained offset") {
     // memlog semantics (service.go:101, memlog.WithMaxSegmentSize): a
     // seek before the oldest retained offset replays only what capacity
     // kept — never an error, never a duplicate of evicted history
-    val base = Files.createTempDirectory("graft_http_evict").toFile
-    writeEvents(new File(base, "events.parquet"), 1 to 10, append = false)
-    val srv = new graft.streaming.SseHttpServer(spark, base.getPath,
-      heartbeatMs = 200L, shared = true, hubCapacity = 2)
-    srv.start()
-    try {
+    withServer(1 to 10, hubCapacity = 2) { (srv, evDir) =>
       // clicks 2,4,6,8,10 ingested; route ring (capacity 2) retains 8,10.
       // A client that saw offset 2 before a long outage reconnects:
       val c = new SseClient(srv.boundPort, "/routes/click",
@@ -312,16 +251,51 @@ class SseHttpSpec extends SparkSpec {
       assert(!c.has(4) && !c.has(6),
         "evicted frames re-delivered (capacity must bound replay)")
       // live frames still follow the truncated replay
-      writeEvents(new File(base, "events.parquet"), 11 to 12, append = true)
+      writeEvents(evDir, 11 to 12, append = true)
       assert(eventually()(c.has(12)), "live tail lost after evicted-seek replay")
       c.close()
-    } finally srv.stop()
+    }
+  }
+
+  test("dead ingest ends streams; next connect restarts it") {
+    withServer() { (srv, evDir) =>
+      val others = spark.streams.active.map(_.id).toSet
+      val c1 = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z")
+      assert(eventually()(c1.has(2) && c1.has(4)), "catch-up frames missing")
+      // the ingest dies under a connected client
+      val hubQuery = spark.streams.active.filterNot(q => others(q.id))
+      assert(hubQuery.length == 1, s"expected one hub query: ${hubQuery.toSeq}")
+      hubQuery.foreach(_.stop())
+      assert(eventually(20000L)(c1.ended),
+        "client kept heartbeating against a dead ingest")
+      assert(eventually()(srv.activeClients == 0), "ended client not reaped")
+      // events land during the outage; the reconnect restarts the
+      // ingest into the same rings and resumes after the last id seen
+      writeEvents(evDir, 6 to 8, append = true)
+      val c2 = new SseClient(srv.boundPort, "/routes/click",
+        headers = Seq("Last-Event-ID" -> "4"))
+      assert(c2.awaitStatus() == 200)
+      assert(eventually()(c2.has(6) && c2.has(8)), "outage events not replayed")
+      writeEvents(evDir, 9 to 10, append = true)
+      assert(eventually()(c2.has(10)), "restarted ingest delivered no live frame")
+      val idLines = c2.lines.asScala.filter(_.startsWith("id: ")).toSeq
+      assert(idLines == Seq("id: 6", "id: 8", "id: 10"),
+        s"resume not exactly the missed frames: $idLines")
+      c2.close()
+    }
+  }
+
+  test("shared = false is rejected at construction") {
+    val e = intercept[IllegalArgumentException] {
+      new SseHttpServer(spark, sfDir, shared = false)
+    }
+    assert(e.getMessage.contains("shared = false"), e.getMessage)
   }
 
   test("stop() is graceful: client queries stopped, listener closed") {
     val base = Files.createTempDirectory("graft_http2").toFile
     writeEvents(new File(base, "events.parquet"), 1 to 5, append = false)
-    val srv = new graft.streaming.SseHttpServer(spark, base.getPath,
+    val srv = new SseHttpServer(spark, base.getPath,
       heartbeatMs = 200L)
     srv.start()
     val before = spark.streams.active.length
@@ -329,6 +303,7 @@ class SseHttpSpec extends SparkSpec {
     assert(eventually()(srv.activeClients == 1))
     srv.stop()
     assert(eventually()(srv.activeClients == 0), "clients survived stop()")
+    assert(eventually()(c.ended), "client stream survived stop()")
     assert(eventually()(spark.streams.active.length <= before),
       "streaming queries survived stop()")
     c.close()

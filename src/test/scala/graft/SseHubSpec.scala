@@ -82,6 +82,65 @@ class SseHubSpec extends SparkSpec {
     assert(spark.streams.active.length == before, "hub query survived stop()")
   }
 
+  test("live tail: late files are served, equal to the batch frames") {
+    val base = Files.createTempDirectory("graft_hub_live").toFile
+    val evDir = new File(base, "events.parquet")
+    writeEvents(evDir, 1 to 5, append = false)
+    val hub = new graft.streaming.SseHub(spark, base.getPath)
+    hub.start()
+    try {
+      val subs = Seq(hub.subscribe("click"), hub.subscribe("view"))
+      val got = scala.collection.mutable.ArrayBuffer.empty[String]
+      def pump(): Int = { subs.foreach(got ++= _.drain()); got.size }
+      // catch-up: everything present at start is served
+      assert(eventually()(pump() >= 5), s"catch-up frames never arrived: $got")
+      // follow: a file landing AFTER the subscriptions is picked up by
+      // the same continuous query — no restart involved
+      writeEvents(evDir, 6 to 8, append = true)
+      assert(eventually()(pump() >= 8), s"tail frames never arrived: $got")
+      // the served bytes, `id:` line aside, equal the batch projection
+      val batch = graft.operators.EventLogOps.sseFrames(spark, base.getPath)
+        .select("frame").collect().map(_.getString(0)).toSet
+      val frames = got.toSeq.map(_.split("\n", 2)(1))
+      assert(frames.size == 8 && frames.toSet == batch,
+        s"served frames differ from the batch projection: $frames")
+    } finally hub.stop()
+  }
+
+  test("two since seeks replay exactly their own windows") {
+    val base = Files.createTempDirectory("graft_hub_since").toFile
+    val evDir = new File(base, "events.parquet")
+    writeEvents(evDir, 1 to 10, append = false)
+    val hub = new graft.streaming.SseHub(spark, base.getPath)
+    hub.start()
+    try {
+      assert(eventually()(hub.retainedRange.exists(_._2 >= 10L)), "ingest never landed")
+      // a client follows every route from its own instant: one seek
+      // per route, each resolved by the hub's ts->offset index
+      def client(sinceNs: Long) = Seq("click", "view")
+        .map(r => hub.subscribe(r, hub.resolveSinceOffset(r, sinceNs)))
+      val subsA = client(T0) // from the beginning
+      val subsB = client(T0 + 6L * 1000000000L) // from event 6
+      val fA = scala.collection.mutable.ArrayBuffer.empty[String]
+      val fB = scala.collection.mutable.ArrayBuffer.empty[String]
+      def pump(): Unit = { subsA.foreach(fA ++= _.drain()); subsB.foreach(fB ++= _.drain()) }
+      assert(eventually() { pump(); fA.size >= 10 && fB.size >= 5 },
+        s"catch-up incomplete: A=${fA.size} B=${fB.size}")
+      // both clients share the live tail
+      writeEvents(evDir, 11 to 12, append = true)
+      assert(eventually() { pump(); fA.size >= 12 && fB.size >= 7 },
+        s"tail frames never arrived: A=${fA.size} B=${fB.size}")
+      pump()
+      // exact windows: A = 1..12, B = 6..12 — and B must NOT have
+      // replayed anything before its own seek position
+      (1 to 12).foreach(i => assert(has(fA.toSeq, i), s"client A missing event $i"))
+      (6 to 12).foreach(i => assert(has(fB.toSeq, i), s"client B missing event $i"))
+      (1 to 5).foreach(i => assert(!has(fB.toSeq, i),
+        s"client B replayed event $i from before its since position"))
+      assert(fA.size == 12 && fB.size == 7, s"duplicate frames: A=${fA.size} B=${fB.size}")
+    } finally hub.stop()
+  }
+
   test("ring capacity bounds replay PER ROUTE like the reference memlog") {
     val base = Files.createTempDirectory("graft_hub_cap").toFile
     val evDir = new File(base, "events.parquet")

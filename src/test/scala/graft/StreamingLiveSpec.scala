@@ -6,12 +6,10 @@ import java.io.File
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.streaming.{EventStreams, SseSink}
+import graft.streaming.EventStreams
 
-/** Serving-tail behaviors the batch oracles can't cover:
-  *  - live-tail SSE: catch-up then STAY ATTACHED, flushing events that
-  *    arrive after the stream started (the reference handler's actual
-  *    serving mode, service.go:252-283);
+/** Streaming behaviors the batch oracles can't cover (live SSE
+  * tails are pinned by SseHubSpec and SseHttpSpec):
   *  - restart-resume: an explicit checkpoint lets a stopped query
   *    restart without reprocessing or duplicating output;
   *  - watermark/append windowCounts: the bounded-state continuous
@@ -30,86 +28,6 @@ class StreamingLiveSpec extends SparkSpec {
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1)
       .write.mode(if (append) "append" else "overwrite").parquet(dst.getPath)
-  }
-
-  private def eventually(timeoutMs: Long = 60000L)(cond: => Boolean): Boolean = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (System.currentTimeMillis() < deadline) {
-      if (cond) return true
-      Thread.sleep(200)
-    }
-    cond
-  }
-
-  test("live-tail SSE: frames arriving after start are flushed to the transport") {
-    val base = Files.createTempDirectory("graft_live").toFile
-    val evDir = new File(base, "events.parquet")
-    writeEvents(evDir, 1 to 5, append = false)
-    val runId = "live_" + System.nanoTime()
-    val q = SseSink.serveLive(spark, base.getPath, new SseSink.InMemory(runId))
-    try {
-      // catch-up: everything present at start is served
-      assert(eventually()(SseSink.InMemoryTransport.frames(runId).size >= 5),
-        "catch-up frames never arrived")
-      // follow: a file landing AFTER the query started is picked up by
-      // the same continuous query — no restart involved
-      writeEvents(evDir, 6 to 8, append = true)
-      assert(eventually()(SseSink.InMemoryTransport.frames(runId).size >= 8),
-        "tail frames never arrived")
-    } finally {
-      q.stop()
-      SseSink.InMemoryTransport.clear(runId)
-    }
-    // the served bytes equal the batch SSE projection over the final table
-    val runId2 = "live2_" + System.nanoTime()
-    SseSink.serve(spark, base.getPath, new SseSink.InMemory(runId2))
-    val batch = graft.operators.EventLogOps.sseFrames(spark, base.getPath)
-      .select("frame").collect().map(_.getString(0)).toSet
-    assert(SseSink.InMemoryTransport.frames(runId2).toSet == batch)
-    SseSink.InMemoryTransport.clear(runId2)
-  }
-
-  test("concurrent live-tail clients each replay exactly their own since window") {
-    val base = Files.createTempDirectory("graft_multi").toFile
-    val evDir = new File(base, "events.parquet")
-    writeEvents(evDir, 1 to 10, append = false)
-    val t0 = 1705276800000000000L
-    def has(frames: Seq[String], i: Int): Boolean =
-      frames.exists(_.contains(s""""k":"$i""""))
-    val idA = "cliA_" + System.nanoTime()
-    val idB = "cliB_" + System.nanoTime()
-    // client A resumes from the beginning; client B from event 6 — the
-    // reference's per-handler seek (service.go:244-262), realized as
-    // one continuous query per subscription with its own pushed filter
-    val qA = SseSink.serveLive(spark, base.getPath, new SseSink.InMemory(idA),
-      sinceNs = Some(t0))
-    val qB = SseSink.serveLive(spark, base.getPath, new SseSink.InMemory(idB),
-      sinceNs = Some(t0 + 6L * 1000000000L))
-    try {
-      assert(eventually()(SseSink.InMemoryTransport.frames(idA).size >= 10),
-        "client A catch-up incomplete")
-      assert(eventually()(SseSink.InMemoryTransport.frames(idB).size >= 5),
-        "client B catch-up incomplete")
-      // both clients share the live tail
-      writeEvents(evDir, 11 to 12, append = true)
-      assert(eventually()(SseSink.InMemoryTransport.frames(idA).size >= 12),
-        "client A tail frames never arrived")
-      assert(eventually()(SseSink.InMemoryTransport.frames(idB).size >= 7),
-        "client B tail frames never arrived")
-      val fA = SseSink.InMemoryTransport.frames(idA)
-      val fB = SseSink.InMemoryTransport.frames(idB)
-      // exact windows: A = 1..12, B = 6..12 — and B must NOT have
-      // replayed anything before its own seek position
-      (1 to 12).foreach(i => assert(has(fA, i), s"client A missing event $i"))
-      (6 to 12).foreach(i => assert(has(fB, i), s"client B missing event $i"))
-      (1 to 5).foreach(i => assert(!has(fB, i),
-        s"client B replayed event $i from before its since position"))
-      assert(fA.size == 12 && fB.size == 7, s"duplicate frames: A=${fA.size} B=${fB.size}")
-    } finally {
-      qA.stop(); qB.stop()
-      SseSink.InMemoryTransport.clear(idA)
-      SseSink.InMemoryTransport.clear(idB)
-    }
   }
 
   test("explicit checkpoint: restart resumes without reprocessing or duplicates") {
