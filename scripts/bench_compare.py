@@ -1,29 +1,120 @@
 #!/usr/bin/env python3
-"""Calibration-normalized bench comparison.
+"""Compare two benchmark records.
 
-Cross-epoch BENCH records are not directly comparable: the shared
-host's effective speed drifts between rounds (round 17 measured the
-same code 1.3x slower than round 16's record on the same data). Each
-BENCH record since r17 carries `calib_sec` — a fixed single-threaded
-JVM probe timed at record start — so two records can be read on one
-scale: normalized_t = t / (calib_new / calib_old) projects the NEW
-record onto the OLD record's host epoch.
+Two kinds of record are understood; the kind is read from the files.
 
-Usage: bench_compare.py OLD.json NEW.json [threshold]
-Prints per-query ratios (normalized when both records carry
-calib_sec, raw otherwise) and flags regressions above `threshold`
-(default 1.5x). Exit code 1 if any flagged regression.
+1. `perfbench/run.py` result lines (the JSON line run.py prints last,
+   `{"correct", "attempted", "failed", "metrics"}`; a file holding
+   run.py's whole stdout works too — its last JSON line is used).
+   Prints every metric's change, marking with `#` the load-immune
+   counters (Spark jobs, stages, tasks, exchanges, executions and
+   source input rows): host load cannot move them. A metric that got
+   worse by more than `threshold` (a fraction, default 0.05) while no
+   counter moved is reported as host load; if a counter moved, the
+   work itself changed and the comparison says so. Better/worse
+   follows each metric's `better` in BENCHMARK.json. Compare traced
+   (`--trace 1`) runs: only they carry the counters.
+
+2. Calibration-normalized BENCH records (`graft.Bench` output).
+   Cross-epoch BENCH records are not directly comparable: the shared
+   host's effective speed drifts between rounds (round 17 measured the
+   same code 1.3x slower than round 16's record on the same data).
+   Each BENCH record since r17 carries `calib_sec` — a fixed
+   single-threaded JVM probe timed at record start — so two records
+   can be read on one scale: normalized_t = t / (calib_new /
+   calib_old) projects the NEW record onto the OLD record's host
+   epoch. Prints per-query ratios (normalized when both records carry
+   calib_sec, raw otherwise) and flags regressions above `threshold`
+   (default 1.5x).
+
+Usage: bench_compare.py OLD NEW [threshold]
+Exit code 1 on a flagged regression that host load cannot explain.
 """
 import json
+import os
 import sys
+
+BENCHMARK = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                         os.pardir, "BENCHMARK.json")
+COUNTERS = ("spark.jobs", "spark.stages", "spark.tasks", "spark.exchanges",
+            "spark.executions", "sources.input_rows")
+
+
+def load(path):
+    """A whole-file JSON record, or the last JSON line of the file."""
+    with open(path) as fh:
+        text = fh.read()
+    try:
+        return json.loads(text)
+    except ValueError:
+        for line in reversed(text.splitlines()):
+            if line.startswith("{"):
+                return json.loads(line)
+    raise SystemExit(f"{path}: no JSON record")
+
+
+def is_counter(name):
+    return name in COUNTERS or (name.startswith("q.") and name.endswith(".jobs"))
+
+
+def compare_runs(old, new, tol) -> int:
+    better = {}
+    if os.path.exists(BENCHMARK):
+        with open(BENCHMARK) as fh:
+            bm = json.load(fh)
+        better = {m["name"]: m["better"]
+                  for m in bm.get("end_to_end", []) + bm.get("per_layer", [])}
+    for tag, r in (("old", old), ("new", new)):
+        print(f"{tag}: correct={r.get('correct')} attempted={r.get('attempted')} "
+              f"failed={r.get('failed')}")
+    mo, mn = old["metrics"], new["metrics"]
+    moved, worse = [], []
+    print(f"\n  {'metric':<36} {'old':>12} {'new':>12} {'change':>8}")
+    for name in sorted(set(mo) & set(mn)):
+        a, b = mo[name]["value"], mn[name]["value"]
+        change = (b - a) / abs(a) if a else (0.0 if b == a else float("inf"))
+        sign = -1 if better.get(name, "lower") == "higher" else 1
+        counter = is_counter(name)
+        if counter and a != b:
+            moved.append(name)
+        elif not counter and sign * change > tol:
+            worse.append(name)
+        mark = "#" if counter else " "
+        flag = "  worse" if name in worse else ""
+        print(f"{mark} {name:<36} {a:>12.6g} {b:>12.6g} {change:>+8.1%}{flag}")
+    only = sorted(set(mo) ^ set(mn))
+    if only:
+        print(f"\nin one record only: {only}")
+    print("\n# = load-immune counter")
+    if not any(is_counter(n) for n in set(mo) & set(mn)):
+        print("no counters in common (compare --trace 1 runs): "
+              "load and code cannot be told apart")
+        return 0
+    if moved:
+        print(f"counters moved: {moved} — the work changed")
+    else:
+        print("no counter moved — the same work ran")
+    if not worse:
+        print(f"nothing worse by more than {tol:.0%}")
+        return 0
+    if not moved:
+        print(f"{len(worse)} metric(s) worse by more than {tol:.0%} with every "
+              f"counter unchanged: host load, not a code regression")
+        return 0
+    print(f"{len(worse)} metric(s) worse by more than {tol:.0%} while counters "
+          f"moved: a regression candidate")
+    return 1
 
 
 def main() -> int:
     if len(sys.argv) < 3:
         print(__doc__)
         return 2
-    old = json.load(open(sys.argv[1]))
-    new = json.load(open(sys.argv[2]))
+    old = load(sys.argv[1])
+    new = load(sys.argv[2])
+    if "metrics" in old and "metrics" in new:
+        return compare_runs(old, new,
+                            float(sys.argv[3]) if len(sys.argv) > 3 else 0.05)
     bar = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
 
     calib_old = old.get("calib_sec")

@@ -31,8 +31,10 @@ object DocStreams {
 
   /** Streaming documents: file source over a directory of parquet
     * files with the pinned schema. */
-  def readDocs(spark: SparkSession, dir: String): DataFrame =
+  def readDocs(spark: SparkSession, dir: String): DataFrame = {
+    LocalCheckpointFileManager.install(spark)
     spark.readStream.schema(Tables.documentsSchema).parquet(dir)
+  }
 
   /** Matches of streaming docs against the corpus band index:
     * (doc_id, old_id, band, key) per collision. */

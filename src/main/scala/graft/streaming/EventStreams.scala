@@ -26,6 +26,13 @@ import graft.sources.Tables
   * in APPEND mode instead — watermark-bounded state, same shuffle
   * shape (partial aggregates on (window, route)) — accepting that
   * each window emits only once the watermark passes it.
+  *
+  * Checkpoints: [[readEvents]] (like `DocStreams.readDocs` and
+  * `VecStreams.readVecs`) installs [[LocalCheckpointFileManager]] as
+  * the session's `spark.sql.streaming.checkpointFileManagerClass`
+  * unless the user set that key, so every micro-batch's offset,
+  * commit and source-log writes on a local checkpoint run through
+  * `java.nio` instead of Hadoop's process-forking local file system.
   */
 object EventStreams {
 
@@ -35,6 +42,7 @@ object EventStreams {
     // same nanos handling the batch path (Tables.apply) guarantees —
     // a plain session must not fail here when batch reads succeed
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    LocalCheckpointFileManager.install(spark)
     val path = Tables.path(dir, "events")
     // vintage dispatch mirrors Tables.apply: a µs-TIMESTAMP file is
     // read with its own physical schema (the file source requires an

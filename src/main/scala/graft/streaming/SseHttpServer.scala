@@ -53,7 +53,9 @@ import graft.operators.EventLogService
   * starts the hub's query. The hub pushes frames into a per-subscription bounded
   * queue; the handler thread drains it to the socket — so a slow
   * client back-pressures (and, at the bound, disconnects) only its own
-  * connection, never the ingest. Built on the JDK's
+  * connection, never the ingest. An idle handler blocks on its queue
+  * for at most 20 ms, so a frame reaches the socket as
+  * soon as the hub appends it. Built on the JDK's
   * com.sun.net.httpserver — no dependency beyond the JRE.
   *
   * `shared` is kept only for source compatibility with callers that
@@ -77,6 +79,8 @@ class SseHttpServer(spark: SparkSession, dir: String,
   private val pool = Executors.newCachedThreadPool()
   private val activeSubs = TrieMap.empty[Long, SseHub.Subscription]
   @volatile private var closed = false
+  // longest an idle handler waits on its queue between checks
+  private val PollWaitMs = 20L
   // ONE hub query serves every client. Built here, so a bad capacity
   // fails at construction rather than inside the first HTTP handler.
   private val hub = new SseHub(spark, dir, capacity = hubCapacity,
@@ -203,7 +207,9 @@ class SseHttpServer(spark: SparkSession, dir: String,
       // drain), per the reference's failed-write teardown
       if (sub.overflowed)
         throw new IOException("client too slow")
-      val frame = sub.poll()
+      // a frame appended mid-wait is written at once; the overflow,
+      // close and heartbeat checks still run at least every PollWaitMs
+      val frame = sub.poll(PollWaitMs)
       if (frame != null) {
         os.write(frame.getBytes(UTF_8))
         os.flush()
@@ -218,8 +224,6 @@ class SseHttpServer(spark: SparkSession, dir: String,
         os.write(":\n\n".getBytes(UTF_8))
         os.flush()
         lastWrite = System.currentTimeMillis()
-      } else {
-        Thread.sleep(20)
       }
     }
   }

@@ -35,8 +35,10 @@ import graft.sources.Tables
 object VecStreams {
 
   /** Streaming embeddings: file source with the pinned schema. */
-  def readVecs(spark: SparkSession, dir: String): DataFrame =
+  def readVecs(spark: SparkSession, dir: String): DataFrame = {
+    LocalCheckpointFileManager.install(spark)
     spark.readStream.schema(Tables.embeddingsSchema).parquet(dir)
+  }
 
   /** Deterministic spherical-k-means centroids of the corpus — built
     * once, passed to both the index build and the streaming

@@ -377,4 +377,56 @@ class SseHubSpec extends SparkSpec {
       }
     } finally hub.stop()
   }
+
+  private def filesUnder(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val st = Files.walk(dir)
+    try { import scala.jdk.CollectionConverters._; st.iterator.asScala.toVector }
+    finally st.close()
+  }
+
+  test("hub leaves nothing under spark.sql.streaming.checkpointLocation after restart + stop") {
+    val base = Files.createTempDirectory("graft_hub_ckpt").toFile
+    writeEvents(new File(base, "events.parquet"), 1 to 4, append = false)
+    val loc = Files.createTempDirectory("graft_ckpt_loc")
+    val key = "spark.sql.streaming.checkpointLocation"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, loc.toString)
+    try {
+      val hub = new graft.streaming.SseHub(spark, base.getPath)
+      try {
+        hub.start()
+        assert(eventually()(hub.retainedRange.exists(_._2 >= 4L)), "ingest never landed")
+        hub.restart()
+        assert(eventually()(hub.retainedRange.exists(_._2 >= 4L)), "restart never ingested")
+      } finally hub.stop()
+      val left = filesUnder(loc).filter(_ != loc)
+      assert(left.isEmpty, s"hub queries left checkpoints behind: ${left.take(5)}")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("hub checkpoint: written without .crc files, one fresh directory per start, deleted on restart and stop") {
+    val base = Files.createTempDirectory("graft_hub_crc").toFile
+    val evDir = new File(base, "events.parquet")
+    writeEvents(evDir, 1 to 4, append = false)
+    val hub = new graft.streaming.SseHub(spark, base.getPath)
+    try {
+      hub.start()
+      writeEvents(evDir, 5 to 6, append = true)
+      assert(eventually()(hub.retainedRange.exists(_._2 >= 6L)), "live file never landed")
+      val first = hub.checkpointDir.get
+      val files = filesUnder(first).map(_.getFileName.toString)
+      // the checkpoint was really written: offset and commit logs exist
+      assert(Files.exists(first.resolve("offsets/0")) && Files.exists(first.resolve("commits/0")),
+        s"no offset/commit log under $first: $files")
+      // Spark's default manager writes a .crc beside every file (and
+      // forks processes doing it); the graft manager writes none
+      assert(!files.exists(_.endsWith(".crc")), s".crc files in the hub checkpoint: $files")
+
+      hub.restart()
+      val second = hub.checkpointDir.get
+      assert(second != first && !Files.exists(first), s"restart kept $first")
+      hub.stop()
+      assert(hub.checkpointDir.isEmpty && !Files.exists(second), s"stop kept $second")
+    } finally hub.stop()
+  }
 }
