@@ -111,15 +111,7 @@ object ProbeLab {
       // (SPARK_GRAFT_PROBELAB_ROWS_ONLY=1 skips the regime timings to
       // re-measure just the controlled agreement rows)
       val rowsOnly = sys.env.get("SPARK_GRAFT_PROBELAB_ROWS_ONLY").contains("1")
-      // SKIP_EXACT: at 500× (n=1M, autoK=8000) every exact-argmax pass
-      // materializes n·k ≈ 8·10⁹ candidate rows through the aggregation
-      // — its shuffle SPILL exceeds this host's disk (measured: the
-      // 500× exact regime died on "No space left on device" with 77 GB
-      // free), so the 500× rung records the probed regime's wall-clock
-      // + keep rate and the exact regime as DNF-by-disk. The agreement
-      // rows also need an exact argmax, so they are skipped with it.
-      val skipExact = sys.env.get("SPARK_GRAFT_PROBELAB_SKIP_EXACT").contains("1")
-      if (!rowsOnly && !skipExact)
+      if (!rowsOnly)
       timed(s"EXACT regime (full train k=$k iters=3 + exact argmax)") {
         SemanticDedup.assignTo(spark, emb,
           SimilaritySearch.trainCentroids(spark, emb, k, 3))
@@ -143,19 +135,6 @@ object ProbeLab {
       val sample = trainSample()
       val cents = timed(s"sampled training (32*$k rows)") {
         SimilaritySearch.trainCentroids(spark, sample, k, 3).localCheckpoint()
-      }
-      if (skipExact) {
-        for (p <- probes) {
-          val plabel = if (p == SemanticDedup.ProbeAuto) "auto" else p.toString
-          val probedA = timed(s"probed argmax (probe=$plabel)") {
-            SemanticDedup.assignViaIvf(spark, emb, cents, probe = p)
-              .localCheckpoint()
-          }
-          val probedV = SemanticDedup.dedupAssigned(spark, probedA, tau)
-          val keepP = probedV.where(col("keep")).count()
-          println(f"[probelab] probe=$plabel%-5s keepRate ${keepP * 100.0 / n}%6.2f%% (n=$n; exact regime skipped)")
-        }
-        return
       }
       val exactA = timed("exact argmax vs sampled cents") {
         SemanticDedup.assignTo(spark, emb, cents).localCheckpoint()

@@ -42,13 +42,40 @@ object Reporting {
     * trainer/propagation loop); running them from a small pool lets
     * one stage's tail back-fill the cores another stage's driver-side
     * step leaves idle. Values are unchanged — same frames, same
-    * compose — only the driver-side serialization goes. */
+    * compose — only the driver-side serialization goes.
+    *
+    * Each call gets its own pool of min(thunks, cores) threads, created
+    * on the calling thread so they inherit its local properties (job
+    * group, scheduler pool, tags); each thunk runs under the caller's
+    * session and a per-call job tag. The first failure cancels the
+    * siblings' running jobs by that tag and is rethrown at once. */
   private[operators] def parStages(thunks: (() => DataFrame)*): Seq[DataFrame] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val futs = thunks.map(t => Future(t()))
-    futs.map(Await.result(_, Duration.Inf))
+    val spark = SparkSession.active
+    val tag = s"graft-parstages-${java.util.UUID.randomUUID()}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(thunks.size, Runtime.getRuntime.availableProcessors())))
+    val done = new java.util.concurrent.ExecutorCompletionService[(Int, DataFrame)](pool)
+    try {
+      thunks.zipWithIndex.foreach { case (t, i) =>
+        done.submit { () =>
+          SparkSession.setActiveSession(spark)
+          spark.sparkContext.addJobTag(tag)
+          (i, t())
+        }
+      }
+      val out = new Array[DataFrame](thunks.size)
+      thunks.foreach { _ =>
+        try {
+          val (i, df) = done.take().get()
+          out(i) = df
+        } catch {
+          case e: java.util.concurrent.ExecutionException =>
+            spark.sparkContext.cancelJobsWithTag(tag)
+            throw e.getCause
+        }
+      }
+      out.toSeq
+    } finally pool.shutdown()
   }
 
   private val QualityBar = 0.5

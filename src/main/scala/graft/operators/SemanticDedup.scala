@@ -33,16 +33,17 @@ object SemanticDedup {
   private val MinClusters = 16
 
   /** Ceiling on the derived cluster count — the SemDeDup regime
-    * itself (~100k clusters at web scale, for ANY corpus size).
+    * itself (~100k clusters at web scale, for ANY corpus size) — and
+    * on every centroid table a kernel scores ([[collectCentroids]]).
     * Unbounded k ∝ n stops making sense past this point: the
-    * broadcast centroid table is k·d doubles (400 MB at k = 8·10⁵,
-    * d = 64 — past executor broadcast comfort), the 32·k training
+    * collected centroid matrix is k·d doubles (400 MB at k = 8·10⁵,
+    * d = 64 — past driver and task-closure comfort), the 32·k training
     * sample stays a constant ~26% of the corpus, and the probe path's
     * coarse table grows as √k. Capped, all three are bounded and the
     * within-cluster pairwise stage degrades gracefully: population
     * grows as n/10⁵, keeping per-task join inputs ~n/k members —
     * 1,000 at 10⁸ vectors, still memory-trivial. */
-  private val MaxClusters = 100000
+  private[graft] val MaxClusters = 100000
 
   /** Data-derived cluster count: `clamp(ceil(n / 125), 16, 10⁵)`.
     * One count() job over the (column-pruned) id column — the same
@@ -92,9 +93,9 @@ object SemanticDedup {
     * NaN rule: a NaN score (an all-zero centroid — Lloyd's mean of
     * opposing members — makes cosine 0/0) LOSES. Spark's double
     * ordering puts NaN greatest, so a bare max(struct(cc, ...)) would
-    * rank the degenerate centroid BEST here while the literal scorer
-    * ([[literalTopCentroids]], which sorts on -cc) ranks it WORST —
-    * the guard keeps the two bit-aligned on the corner as well. */
+    * rank the degenerate centroid BEST; argmaxRank's guard gives it
+    * the kernels' rule ([[graft.plans.CentOps]]) instead. Only
+    * [[assignViaIvf]]'s fine scoring over probed buckets uses this. */
   private def argmaxBest(scored: DataFrame): DataFrame =
     // single-DOUBLE encoded rank (SimilaritySearch.argmaxRank): a
     // primitive buffer keeps this on HashAggregateExec — the struct
@@ -113,30 +114,14 @@ object SemanticDedup {
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .select(col("vec_id"), col("embedding"), col("cid"), col("cent_sim"))
 
-  /** k-bound for [[assignToLiteral]]: the centroid table rides the
-    * plan as a literal struct array (k·d literal doubles), so
-    * expression size caps it. 512 sits inside the envelope the coarse
-    * router already exercises (k' ≈ √k ≤ 317 at the 10⁵ autoK
-    * ceiling); past it the agg+join shape takes over. */
-  private[graft] val LiteralAssignMaxK = 512
-
-  /** Small-k assignment: per-row argmax against the collected
-    * centroids via the fused `graft_cent_best` kernel — one NARROW
-    * projection, no n·k explode, no aggregation shuffle, and the
-    * embedding never leaves its row (no [[withEmbedding]] restore
-    * join). The centroid matrix rides the expression as FrozenSeq
-    * reference fields (O(1) plan hashing — the former
-    * array-of-struct-literal tree was k·d expression NODES and cost
-    * measured multi-second driver gaps in analysis/canonicalization
-    * once the trainer started running 3+ such plans per query).
-    * Bit-matches [[assignToAgg]] by construction: same cosine
-    * accumulation, same round(_, 9), and (ns asc, cid asc) selection
-    * is the same "max cosine, NaN loses, ties to smallest cid" rule.
-    * PackingSpec pins route equality on the fixture. */
-  private[graft] def assignToLiteral(spark: SparkSession, emb: DataFrame,
-                              cents: DataFrame): DataFrame =
-    assignToLiteral(spark, emb, cents.collect().toIndexedSeq)
-
+  /** Per-row argmax against collected centroid rows via the fused
+    * `graft_cent_best` kernel — one NARROW projection, no n·k
+    * explode, no aggregation shuffle, and the embedding never leaves
+    * its row (no [[withEmbedding]] restore join), so the same plan is
+    * legal on a stateless append-mode stream. The centroid matrix
+    * rides the expression as FrozenSeq reference fields (O(1) plan
+    * hashing at any k). The tie/NaN rule is the kernel's: max round-9
+    * cosine, NaN loses, ties to the smallest cid. */
   private[graft] def assignToLiteral(spark: SparkSession, emb: DataFrame,
                               centRows: Seq[org.apache.spark.sql.Row]): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
@@ -177,74 +162,64 @@ object SemanticDedup {
     (flat, cids)
   }
 
-  /** Large-k assignment: n·k candidate rows from a broadcast join,
-    * reduced by the all-primitive [[argmaxBest]] shuffle (48 B/key),
-    * embedding restored by [[withEmbedding]]. The only route when the
-    * centroid table is too wide to ride the plan as a literal. */
-  private[graft] def assignToAgg(spark: SparkSession, emb: DataFrame,
-                          cents: DataFrame): DataFrame = {
-
-    withEmbedding(
-      argmaxBest(emb.select("vec_id", "embedding").join(broadcast(cents))
-        .select(col("vec_id"), col("cid"),
-          round(Vectors.cosineFast(spark, col("embedding"), col("c_emb")), 9).as("cc"))),
-      emb)
+  /** The one bounded centroid collect: every centroid table a kernel
+    * scores comes through here, as `limit(MaxClusters + 1)`, and a
+    * table above [[MaxClusters]] fails loudly instead of being shipped
+    * whole into every task. */
+  private[graft] def collectCentroids(cents: DataFrame): Array[org.apache.spark.sql.Row] = {
+    val rows = cents.limit(MaxClusters + 1).collect()
+    require(rows.length <= MaxClusters,
+      s"centroid table exceeds MaxClusters = $MaxClusters rows")
+    rows
   }
 
-  /** Dispatch-probe memo: the `limit(513).collect()` head per
-    * centroid FRAME INSTANCE, keyed weakly on the Dataset object
-    * itself (Dataset doesn't override equals, so this is reference
-    * identity — a rebuilt frame over the same path is a fresh key and
-    * re-probes, so data can never go stale under a reused key; GC of
-    * the frame drops its entry). A streaming caller that captures one
-    * centroid frame and runs [[assignTo]] per micro-batch
-    * ([[graft.streaming.VecStreams.matchesOfBatch]]) pays the probe
-    * job once, not once per batch — previously only a
-    * "checkpoint-your-centroids" comment convention kept that cost
-    * bounded. */
-  private[graft] val dispatchHeads =
+  /** Collected centroid rows per centroid FRAME INSTANCE, keyed
+    * weakly on the Dataset object itself (Dataset doesn't override
+    * equals, so this is reference identity — a rebuilt frame over the
+    * same path is a fresh key and re-collects, so data can never go
+    * stale under a reused key; GC of the frame drops its entry).
+    * Callers that run [[assignTo]] more than once on one frame — the
+    * incremental and maintained-index paths, a streaming caller
+    * assigning each micro-batch ([[graft.streaming.VecStreams]]) —
+    * pay the collect job once. */
+  private[graft] val collectedCents =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[DataFrame, Array[org.apache.spark.sql.Row]]())
 
-  /** Argmax-assign each vector of `emb` to its nearest centroid by
-    * cosine; routes by k. The dispatch probe is ONE bounded job — a
-    * `limit(512+1).collect()` against the (checkpointed-by-every-
-    * production-caller) centroid frame, memoized per frame instance
-    * ([[dispatchHeads]]) — whose rows double as the literal route's
-    * payload, so the small-k path pays no separate count. Both routes
-    * share the tie/NaN rule — [[assignToLiteral]] vs [[assignToAgg]]
-    * — and PackingSpec gates their bit-equality, so the dispatch is a
-    * plan-shape choice, not a semantic one. Package-visible so
-    * ScalingStats can measure ROUTING agreement (probed vs exact
-    * against the SAME centroid set — comparing across different
-    * trainings would diff cid label spaces, not routing). */
-  private[graft] def assignTo(spark: SparkSession, emb: DataFrame,
-                              cents: DataFrame): DataFrame = {
-    var head = dispatchHeads.get(cents)
-    if (head == null) {
-      head = cents.limit(LiteralAssignMaxK + 1).collect()
-      dispatchHeads.put(cents, head)
+  private def centRowsOf(cents: DataFrame): Array[org.apache.spark.sql.Row] = {
+    var rows = collectedCents.get(cents)
+    if (rows == null) {
+      rows = collectCentroids(cents)
+      collectedCents.put(cents, rows)
     }
-    if (head.length <= LiteralAssignMaxK)
-      assignToLiteral(spark, emb, head.toIndexedSeq)
-    else assignToAgg(spark, emb, cents)
+    rows
   }
+
+  /** Argmax-assign each vector of `emb` to its nearest centroid by
+    * cosine: the centroid frame is collected once per instance
+    * ([[collectedCents]], bounded by [[collectCentroids]]) and scored
+    * by [[assignToLiteral]]'s narrow kernel — the one assignment at
+    * every k. Package-visible so ScalingStats can measure ROUTING
+    * agreement (probed vs exact against the SAME centroid set —
+    * comparing across different trainings would diff cid label
+    * spaces, not routing). */
+  private[graft] def assignTo(spark: SparkSession, emb: DataFrame,
+                              cents: DataFrame): DataFrame =
+    assignToLiteral(spark, emb, centRowsOf(cents))
 
   /** Top-`n` centroid ids per row against a COLLECTED centroid frame
     * (column 0: Int id, column 1: the embedding) via the fused
     * `graft_cent_topn` kernel — one NARROW projection, no aggregation
     * (stream-safe), deterministic (ns asc, cid asc) selection with
-    * the NaN→+2.0 sentinel ("NaN loses", the agg route's rule), the
+    * the NaN→+2.0 sentinel ("NaN loses", [[assignTo]]'s rule), the
     * exact contract of the former `slice(array_sort(transform(...)),
-    * 1, n).cid` chain. Shared by the batch probe path and the
-    * streaming assignment ([[graft.streaming.VecStreams]]) so the two
-    * can never drift on rounding or tie-breaks. The matrix rides the
+    * 1, n).cid` chain. The matrix rides the
     * expression as FrozenSeq reference fields, so k in the low
     * thousands no longer bloats the plan — callers at larger k still
     * route through a coarse quantizer first (per-row cost is k·d). */
   private[graft] def literalTopCentroids(spark: SparkSession, cents: DataFrame,
                                          emb: Column, n: Int): Column =
-    literalTopCentroids(spark, cents.collect().toIndexedSeq, emb, n)
+    literalTopCentroids(spark, collectCentroids(cents).toIndexedSeq, emb, n)
 
   /** Row-level overload: callers that already hold the collected
     * centroid rows (one collect shared across assignment + probe
@@ -262,11 +237,10 @@ object SemanticDedup {
     * from k cosines to ~√k + probe·√k. Coarse centroids come from the
     * same deterministic trainer run over the k fine centroids
     * (k' ≈ ⌈√k⌉); each vector scores the k' coarse centroids in one
-    * NARROW pass (the coarse table rides the plan as a literal struct
-    * array — k'·d floats, scored by the native `graft_cosine` inside
-    * a `transform`), keeps its top-`probe` coarse buckets, and scores
-    * only the fine centroids assigned to those buckets (broadcast
-    * join + the usual max-struct argmax). Assignment becomes
+    * NARROW pass (the `graft_cent_topn` kernel), keeps its
+    * top-`probe` coarse buckets, and scores only the fine centroids
+    * assigned to those buckets (broadcast join + the [[argmaxBest]]
+    * aggregation). Assignment becomes
     * approximate — a vector whose true centroid lives in an unprobed
     * coarse bucket lands on its best PROBED one — which trades a
     * little cluster purity for an O(√k) per-vector cost; the
@@ -293,9 +267,9 @@ object SemanticDedup {
     val coarse = SimilaritySearch.trainCentroids(spark, centVecs, coarseK, iters)
       .select(col("cid").as("gid"), col("c_emb").as("g_emb"))
     // fine centroid -> coarse bucket (k rows; broadcast below).
-    // localCheckpoint: the literal router's collect below and the
-    // broadcast join both consume it — without materialization the
-    // assignTo aggregation job runs twice per invocation
+    // localCheckpoint: the router's collect below and the broadcast
+    // join both consume it — without materialization the assignTo
+    // pass runs twice per invocation
     val fineByG = assignTo(spark,
       centVecs, coarse.select(col("gid").as("cid"), col("g_emb").as("c_emb")))
       .select(col("cid").as("gid"),
@@ -339,7 +313,7 @@ object SemanticDedup {
                               probeCoarse: Int = 0): DataFrame = {
     require(probeCoarse >= 0 || probeCoarse == ProbeAuto,
       s"probeCoarse must be >= 0 or ProbeAuto, got $probeCoarse")
-    // parallelized: the n·k broadcast-argmax is NARROW — its task
+    // parallelized: the n·k kernel argmax is NARROW — its task
     // count is the scan's split count, so a small-file corpus would
     // run the dominant CPU stage nearly serially (the minhash
     // precedent; a no-op whenever the scan already yields >= cores
@@ -402,7 +376,7 @@ object SemanticDedup {
     * CONSTRUCTION, not by data luck, because k-means splits mass
     * wherever it concentrates (SemDeDup's ~100k clusters at web scale
     * is the same rule). The honest trade autoK makes: total pairwise
-    * work drops to ~n·target/2, but the broadcast-argmax ASSIGNMENT
+    * work drops to ~n·target/2, but the kernel-argmax ASSIGNMENT
     * pass costs n·k cosines — with k ∝ n that term is quadratic in
     * FLOPs. It is the right trade anyway because those FLOPs are
     * map-side and embarrassingly parallel (scale out with executors),
@@ -417,7 +391,7 @@ object SemanticDedup {
     * ~2·probe·√k per vector), agreement-gated by PackingSpec. The
     * rank window is per-cluster (same bound). Training cost is the
     * existing trainCentroids contract: 1 bounded-sample collect +
-    * `iters` broadcast-argmax passes. */
+    * `iters` kernel-argmax passes. */
   // probeCoarse != 0 selects the sampled-training + IVF-probe regime
   // (see assigned()). Pass ProbeAuto unless you have a measured
   // reason: the adaptive dial (max(2, ceil(k'/4))) keeps coarse-space
@@ -438,9 +412,9 @@ object SemanticDedup {
       // through the oracle cache so the run's frozen centroids can
       // ride semanticDedupSql as a VALUES literal — the D3 upgrade
       // applied to I4. collect/createDataFrame round-trips the
-      // doubles exactly and assignTo's literal dispatch is the route
-      // this k took anyway (k ≤ LiteralAssignMaxK), so results are
-      // bit-identical to the former inline trainCentroids call.
+      // doubles exactly and assignTo scores them with the same kernel,
+      // so results are bit-identical to the former inline
+      // trainCentroids call.
       dedupAssigned(spark,
         assignTo(spark,
           Tables.parallelized(spark, Tables.embeddings(spark, dir)),
@@ -523,13 +497,17 @@ object SemanticDedup {
     }
   }
 
+  /** Centroid count up to which [[assignAtScale]] runs the exact
+    * argmax; moving it changes which vectors the IVF probe routes. */
+  private[graft] val ExactAssignMaxK = 2048
+
   /** Assignment at the centroid table's own regime: the exact argmax
-    * below 4·[[LiteralAssignMaxK]] centroids, the coarse-quantized
-    * IVF probe above it (where the n·k broadcast argmax is the
-    * measured wall). */
+    * up to [[ExactAssignMaxK]] centroids, the coarse-quantized IVF
+    * probe above it (where the n·k exact argmax is the measured wall).
+    * Decides on the memoized collect, so it runs no count job. */
   private[graft] def assignAtScale(spark: SparkSession, emb: DataFrame,
                                    cents: DataFrame): DataFrame =
-    if (cents.count() <= 4L * LiteralAssignMaxK) assignTo(spark, emb, cents)
+    if (centRowsOf(cents).length <= ExactAssignMaxK) assignTo(spark, emb, cents)
     else assignViaIvf(spark, emb, cents)
 
   /** DuckDB twin of the default-path [[semanticDedup]]: the trained
@@ -622,7 +600,7 @@ object SemanticDedup {
     *     and out of scope here by the same rule H4 uses (new-vs-old
     *     only).
     *
-    * Cost per batch: one broadcast-centroid assignment pass over the
+    * Cost per batch: one kernel assignment pass over the
     * batch + one cid-key join against kept-old cluster members —
     * nothing touches the old corpus beyond the (cacheable) kept set.
     * Output: one row per batch vector with its witness stats. */
@@ -653,7 +631,7 @@ object SemanticDedup {
     val cents = SimilaritySearch.trainCentroids(spark, old, kk, iters)
     val keptOld = incrementalKeptOld(spark, old, cents, tau)
 
-    // assign ONCE: the n·k broadcast-argmax pass is the dominant cost
+    // assign ONCE: the n·k kernel-argmax pass is the dominant cost
     // at autoK scale, and both the match probe and the output frame
     // consume it — localCheckpoint so the two consumers re-read a
     // materialized frame (the dedupAssigned precedent)
@@ -695,8 +673,9 @@ object SemanticDedup {
     * Centroid-generation contract, stated rather than hidden: the
     * maintained index answers for the centroids it was built with.
     * Retraining (drift refresh) is a new generation — one full
-    * [[assignTo]] pass, after which delta maintenance resumes. Both
-    * routes of [[assignTo]] share the tie/NaN rule, so maintained and
+    * [[assignTo]] pass, after which delta maintenance resumes.
+    * [[assignTo]] is one per-row kernel, so a row's assignment does
+    * not depend on which frame it was scored in: maintained and
     * rebuilt rows are bit-identical, not merely close.
     *
     * @param oldAssigned prior (vec_id, embedding, cid, cent_sim) index

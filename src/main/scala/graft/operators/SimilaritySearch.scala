@@ -116,50 +116,24 @@ object SimilaritySearch {
   /** IVF search body, generic over the coarse-centroid table `cents`
     * (`cid`, `c_emb`): every vector is assigned to its nearest
     * centroid; a query probes only its NProbe nearest centroids'
-    * buckets, touching ~NProbe/C of the corpus. Centroids are tiny and
-    * broadcast — the centroid-scoring pass is a map-side broadcast
-    * join, never a shuffle of the corpus. */
+    * buckets, touching ~NProbe/C of the corpus. One bounded collect
+    * ([[SemanticDedup.collectCentroids]]) feeds both the corpus
+    * assignment and the query probes, each one NARROW kernel
+    * projection — no shuffle and no aggregation on the corpus side.
+    * Rule: max round-9 cosine, NaN loses, ties to the smallest cid
+    * ([[graft.plans.CentOps]]; CentScoreSpec and IvfNaNProbeSpec pin
+    * it). */
   private def ivfSearchOn(spark: SparkSession, emb: DataFrame,
                           cents: DataFrame): DataFrame = {
-    // Small centroid tables (every shipped caller: label means,
-    // TrainedK, AnnRecall's fixture ks) take the NARROW kernel route —
-    // one collect feeds both the corpus assignment and the query
-    // probes, so the corpus side has NO shuffle and NO aggregation
-    // (the former map-side max(struct) argmax carried the embedding
-    // through a first() ObjectHashAggregate buffer — the shape the
-    // SemanticDedup scaladoc documents as the 500× OOM). Tie rule
-    // unchanged: max round-9 cosine, ties to the smallest cid (the
-    // kernels' (ns asc, cid asc) order — CentScoreSpec pins it).
-    // Above the literal cap the former broadcast+argmax shape runs.
-    val head = cents.limit(SemanticDedup.LiteralAssignMaxK + 1).collect()
-    val (assign, probes) =
-      if (head.length <= SemanticDedup.LiteralAssignMaxK) {
-        val a = SemanticDedup
-          .assignToLiteral(spark, emb.select("vec_id", "embedding"), head.toIndexedSeq)
-          .select(col("vec_id"), col("embedding"), col("cid"))
-        val p = emb.select("vec_id", "embedding")
-          .where(col("vec_id") < NQueries)
-          .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-            explode(SemanticDedup.literalTopCentroids(spark, head.toIndexedSeq,
-              col("embedding"), NProbe)).as("cid"))
-        (a, p)
-      } else {
-        val centScore = emb.select("vec_id", "embedding").join(broadcast(cents))
-          .select(col("vec_id"), col("embedding"), col("cid"),
-            Vectors.cosineFast(spark, col("embedding"), col("c_emb")).as("c_cos"))
-        val a = centScore
-          .groupBy("vec_id")
-          .agg(first(col("embedding")).as("embedding"),
-            max(struct(round(col("c_cos"), 9).as("cc"), (-col("cid")).as("ncid"))).as("best"))
-          .select(col("vec_id"), col("embedding"), (-col("best.ncid")).as("cid"))
-        val wVec = Window.partitionBy("vec_id")
-          .orderBy(round(col("c_cos"), 9).desc, col("cid"))
-        val p = centScore.where(col("vec_id") < NQueries)
-          .withColumn("rk", row_number().over(wVec)).where(col("rk") <= NProbe)
-          .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-            col("cid"))
-        (a, p)
-      }
+    val centRows = SemanticDedup.collectCentroids(cents).toIndexedSeq
+    val assign = SemanticDedup
+      .assignToLiteral(spark, emb.select("vec_id", "embedding"), centRows)
+      .select(col("vec_id"), col("embedding"), col("cid"))
+    val probes = emb.select("vec_id", "embedding")
+      .where(col("vec_id") < NQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+        explode(SemanticDedup.literalTopCentroids(spark, centRows,
+          col("embedding"), NProbe)).as("cid"))
     explodeRanked(
       // the probe side is NQueries·NProbe rows at any corpus size —
       // broadcast it so the n-row assignment never shuffles on cid
@@ -208,13 +182,13 @@ object SimilaritySearch {
     *    Spread seeds can't collapse onto one dense cluster the way a
     *    uniform k-sample can (with 4 clusters and k=4 a uniform sample
     *    covers all clusters only ~9% of the time).
-    * 3. **Lloyd's rounds** over the full corpus: assignment is a
-    *    broadcast join + map-side `max(struct)` argmax (partial
-    *    aggregation reduces k·n scored rows to n before the shuffle);
-    *    the new means are a (cid, pos) partial aggregation. Each round
-    *    is one pass; centroids (k rows) are localCheckpointed so
-    *    lineage stays flat. Cosine is scale-invariant in the centroid,
-    *    so the un-normalized mean is a valid spherical-k-means update.
+    * 3. **Lloyd's rounds** over the full corpus: assignment is
+    *    [[SemanticDedup.assignTo]]'s narrow kernel argmax over the
+    *    collected centroids (k rows); the new means are a (cid, pos)
+    *    partial aggregation. Each round is one pass, and lineage stays
+    *    flat because the next round reads collected centroid values.
+    *    Cosine is scale-invariant in the centroid, so the un-normalized
+    *    mean is a valid spherical-k-means update.
     *
     * Total corpus passes: 1 (sample) + `iters` (Lloyd's); total Spark
     * jobs: 1 + iters, independent of k. A cluster that loses all
@@ -257,15 +231,18 @@ object SimilaritySearch {
     * ~10⁻⁷ of an integer and `rint` is exact recovery — never a
     * half-way tie-break. NaN cosines map to −2 (below any real
     * cosine) before encoding — "NaN loses", the rule the struct form
-    * implemented with its −∞ guard. Bit-equality of the decoded
-    * assignment with the literal route stays gated in PackingSpec. */
+    * implemented with its −∞ guard, and the kernels' rule
+    * ([[graft.plans.CentOps]]). Used by [[SemanticDedup.assignViaIvf]]'s
+    * fine scoring over probed buckets and by the protoPrune and
+    * clusterCap argmaxes; PackingSpec's full-coverage probe gates
+    * bit-equality with [[SemanticDedup.assignTo]]. */
   private[graft] val ArgmaxCidCap: Int = 1 << 21
 
   private[graft] def argmaxRank(cc: Column, cid: Column): Column = {
     // encode-side cap guard: a cid outside [0, 2^21) would silently
     // DECODE to a wrong assignment, and only the trainer used to
-    // enforce the cap — assignToAgg/assignViaIvf accept arbitrary
-    // centroid frames. In-plan raise_error (the Boilerplate HotSetCap
+    // enforce the cap — assignViaIvf accepts arbitrary centroid
+    // frames. In-plan raise_error (the Boilerplate HotSetCap
     // pattern): constant per-row cost, fails loudly wherever the
     // encoding is applied, zero extra jobs.
     val checked = when(cid < 0 || cid >= ArgmaxCidCap,
@@ -285,6 +262,8 @@ object SimilaritySearch {
   def trainCentroids(spark: SparkSession, emb: DataFrame, k: Int,
                      iters: Int = 3): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    require(k <= SemanticDedup.MaxClusters,
+      s"k=$k exceeds MaxClusters = ${SemanticDedup.MaxClusters}")
 
     // one corpus pass
     val cands: Array[(Long, Array[Float])] =
@@ -294,8 +273,8 @@ object SimilaritySearch {
 
     // Driver-local cosine, same arithmetic as graft_cosine
     // (CosineSimilarity.nullSafeEval: sequential double accumulation,
-    // 0/0 → NaN) and the same round(_, 9) HALF_UP the DataFrame
-    // seeding used, so seed choice is unchanged.
+    // 0/0 → NaN) and the same round(_, 9) HALF_UP (CentOps.round9) the
+    // DataFrame seeding used, so seed choice is unchanged.
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       val n = math.min(a.length, b.length)
@@ -306,9 +285,7 @@ object SimilaritySearch {
       }
       dot / (math.sqrt(na) * math.sqrt(nb))
     }
-    def round9(v: Double): Double =
-      if (v.isNaN || v.isInfinite) v
-      else BigDecimal(v).setScale(9, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
+    import graft.plans.CentOps.round9
 
     val chosen = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
     if (cands.nonEmpty) {
@@ -386,23 +363,13 @@ object SimilaritySearch {
     var cents = spark.createDataFrame(seedRows).toDF("cid", "c_emb")
       .select(col("cid"), col("c_emb").cast("array<float>").as("c_emb"))
 
-    require(k < ArgmaxCidCap, s"k=$k exceeds the encoded-argmax cid cap")
-    // Assignment per round goes through SemanticDedup.assignTo's
-    // dispatch: at k <= LiteralAssignMaxK the centroids ride the plan
-    // as literals and the argmax is ONE NARROW projection — no n·k
-    // broadcast-agg shuffle, no n-row embedding-restore join, and no
-    // per-round localCheckpoint (the literal severs lineage by
-    // construction: the next round's plan references collected
-    // centroid VALUES, not the previous round's frame). Above the cap
-    // the dispatch takes assignToAgg — exactly the broadcast +
-    // argmaxRank + restore-join shape that used to be inlined here —
-    // and the per-round checkpoint stays (the agg route consumes the
-    // centroid frame twice: head-probe collect + broadcast build).
-    // Both routes share the tie/NaN rule (max round-9 cosine, ties to
-    // the smallest cid, NaN loses) — bit-equality is PackingSpec's
-    // standing gate, so the trained centroids are unchanged. Measured
-    // at sf0.1: each Lloyd round drops from ~8 AQE-stage jobs to ~3.
-    val literalRegime = k <= SemanticDedup.LiteralAssignMaxK
+    // Each Lloyd round assigns through SemanticDedup.assignTo: the
+    // round's centroids are collected once and the argmax is ONE
+    // narrow kernel projection — no n·k shuffle, no n-row
+    // embedding-restore join, and no per-round localCheckpoint (the
+    // next round's plan references collected centroid VALUES, not the
+    // previous round's frame, so lineage stays flat). Measured at
+    // sf0.1: each Lloyd round runs ~3 AQE-stage jobs.
     for (_ <- 1 to iters) {
       val assigned = SemanticDedup.assignTo(spark, emb, cents)
         .select(col("embedding"), col("cid"))
@@ -411,12 +378,11 @@ object SimilaritySearch {
         .groupBy("cid", "pos").agg(avg(col("v").cast("double")).as("c"))
         .groupBy("cid")
         .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)").as("c_emb"))
-      if (!literalRegime) cents = cents.localCheckpoint()
     }
     // the returned frame keeps the historical "already materialized"
     // contract — several consumers read it more than once
     // (assignViaIvf's coarse table, VecStreams' per-batch centroids)
-    if (literalRegime) cents.localCheckpoint() else cents
+    cents.localCheckpoint()
   }
 
   /** Default centroid count for the [[ivfTopKTrained]] query form. */
@@ -1157,17 +1123,14 @@ object SimilaritySearch {
       centProps: Seq[(Int, Double, Seq[Double])],
       qcDots: Seq[(Long, Int, Double)])
 
-  /** Coarse-assign (broadcast centroids, map-side argmax), subtract
-    * the winning centroid, keep the residual in FLOAT (the codec's
-    * input type — codebook training uses the SAME cast, so train and
-    * encode see identical bits). */
+  /** Coarse-assign (the narrow kernel argmax), subtract the winning
+    * centroid, keep the residual in FLOAT (the codec's input type —
+    * codebook training uses the SAME cast, so train and encode see
+    * identical bits). */
   private def ivfPqResiduals(spark: SparkSession, emb: DataFrame,
                              cents: DataFrame): DataFrame =
-    // assignment via the shared dispatch (narrow kernel argmax at the
-    // coarse ks this path runs — the former max(struct) shape carried
-    // the embedding through a first() ObjectHashAggregate buffer and
-    // shuffled n rows per pass; tie rule identical, CentScoreSpec +
-    // the oracle gate pin it); only the k-row centroid join remains
+    // assignment via SemanticDedup.assignTo (CentScoreSpec + the
+    // oracle gate pin its rule); only the k-row centroid join remains
     SemanticDedup.assignTo(spark, emb, cents)
       .select("vec_id", "embedding", "cid")
       .join(broadcast(cents), "cid")
@@ -1254,7 +1217,8 @@ object SimilaritySearch {
     val probes = emb.where(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"),
         explode(SemanticDedup.literalTopCentroids(spark,
-          cents.collect().toIndexedSeq, col("embedding"), NProbe)).as("cid"))
+          SemanticDedup.collectCentroids(cents).toIndexedSeq, col("embedding"),
+          NProbe)).as("cid"))
     val (queryLuts, dotFlat, normLut) = adcFrames(spark, art.adc)
     val queries = broadcast(queryLuts.join(probes, "query_id")
       .join(qcDots, Seq("query_id", "cid")).join(centProps, "cid"))
@@ -1358,25 +1322,19 @@ object SimilaritySearch {
     val cents =
       if (c == TrainedK) centsDf(spark, ivfCentCache.model(spark, dir))
       else trainCentroids(spark, emb, c)
-    val centScore = emb.join(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("cid"),
-        round(Vectors.cosineFast(spark, col("embedding"), col("c_emb")), 9).as("cc"))
-    // corpus side: argmax assignment carrying the embedding forward,
-    // then one packing pass — (vec_id, cid, words) IS the 8 B/vector
-    // persisted index artifact of this shape
-    val assigned = centScore
-      .groupBy("vec_id")
-      .agg(first(col("embedding")).as("embedding"),
-        max(struct(col("cc"), (-col("cid")).as("ncid"))).as("best"))
-      .select(col("vec_id"), (-col("best.ncid")).as("cid"),
+    val centRows = SemanticDedup.collectCentroids(cents).toIndexedSeq
+    // corpus side: kernel argmax assignment, then one packing pass —
+    // (vec_id, cid, words) IS the 8 B/vector persisted index artifact
+    // of this shape
+    val assigned = SemanticDedup.assignToLiteral(spark, emb, centRows)
+      .select(col("vec_id"), col("cid"),
         Vectors.bitpackFast(spark, col("embedding")).as("words"))
     // query side: NProbe nearest centroids, each probe row carrying
     // the query's packed words — ≤ NProbe·|queries| broadcast rows
-    val wVec = Window.partitionBy("vec_id")
-      .orderBy(col("cc").desc, col("cid"))
-    val probes = centScore.where(col("vec_id") < NQueries)
-      .withColumn("rk", row_number().over(wVec)).where(col("rk") <= NProbe)
-      .select(col("vec_id").as("query_id"), col("cid"),
+    val probes = emb.where(col("vec_id") < NQueries)
+      .select(col("vec_id").as("query_id"),
+        explode(SemanticDedup.literalTopCentroids(spark, centRows,
+          col("embedding"), NProbe)).as("cid"),
         Vectors.bitpackFast(spark, col("embedding")).as("q_words"))
     val cands = assigned.join(broadcast(probes), Seq("cid"))
       .where(col("vec_id") =!= col("query_id"))
@@ -1510,7 +1468,7 @@ object SimilaritySearch {
     * probe-only serve path (`from_ann_ivf_index`,
     * `from_hard_negatives`) under the DuckDB hash gate: same
     * centroids, same round-9/smallest-cid assignment rule
-    * (SemanticDedup.assignTo ≡ ivfSearchOn's argmax, PackingSpec),
+    * (ivfSearchOn assigns through the same SemanticDedup kernel),
     * same probe/tie rules in the search. [[writeIvfIndex]] stays the
     * layout-spec's independent-training variant. */
   def writeTrainedIvfIndex(spark: SparkSession, dir: String,
@@ -1552,9 +1510,7 @@ object SimilaritySearch {
       }
       d / (math.sqrt(na) * math.sqrt(nb))
     }
-    def round9(v: Double): Double =
-      if (v.isNaN || v.isInfinite) v
-      else BigDecimal(v).setScale(9, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
+    import graft.plans.CentOps.round9
     // plain Tuple3 rows, not a nested private case class: the product
     // encoder for an object-nested private class fails whole-stage
     // projection codegen (zero-arg accessor lookup) and silently falls

@@ -7,34 +7,40 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** Fused centroid-scoring kernels behind SemanticDedup's literal
-  * assignment route (round-22 optimization).
+/** Fused centroid-scoring kernels: the one centroid assignment
+  * ([[graft.operators.SemanticDedup.assignTo]], at every k, batch and
+  * streaming) and the probe router.
   *
   * The previous shape built the centroid table INTO the expression
   * tree — `array(struct(lit(cid), array(lit(d₀)…lit(d₆₃))))`, k·d
-  * literal NODES (4,096 at the sf0.1 autoK, 32k at the 512 cap) —
-  * then `transform` + `array_sort` per row. Two measured costs:
-  * per-QUERY, every analysis/optimizer/canonicalization walk visits
-  * k·d+2k nodes (the driver "gap" grew 2-7 s on queries whose trainer
-  * runs 3 such plans); per-ROW, the lambda-driven transform allocates
-  * k structs and sorts them just to read the head. Here the matrix
-  * rides the expression as TWO FrozenSeq reference fields (O(1) plan
-  * hashing, zero tree nodes — the LutSum/PqEncode device) and the
-  * argmax/top-n is one precompiled static loop.
+  * literal NODES (4,096 at the sf0.1 autoK) — then `transform` +
+  * `array_sort` per row. Two measured costs: per-QUERY, every
+  * analysis/optimizer/canonicalization walk visits k·d+2k nodes (the
+  * driver "gap" grew 2-7 s on queries whose trainer runs 3 such
+  * plans); per-ROW, the lambda-driven transform allocates k structs
+  * and sorts them just to read the head. Here the matrix rides the
+  * expression as TWO FrozenSeq reference fields (O(1) plan hashing,
+  * zero tree nodes — the LutSum/PqEncode device) and the argmax/top-n
+  * is one precompiled static loop.
   *
-  * Bit-compatibility with the expression chain it replaces (and with
-  * [[graft.operators.SemanticDedup.assignToAgg]]'s argmaxRank rule —
-  * PackingSpec gates it):
+  * The assignment rule — defined here and nowhere else:
   *  - cosine: sequential double accumulation over min(|e|, d)
   *    elements, float inputs upcast per element — the CosineOps loop
   *    verbatim, 0/0 → NaN;
   *  - ns = −round(cos, 9) with Spark Round semantics (BigDecimal
   *    HALF_UP; NaN/Inf pass through), NaN mapped to the +2.0 sentinel
-  *    ("NaN loses", decoding to cent_sim −2.0 like the agg route);
+  *    ("NaN loses", decoding to cent_sim −2.0);
   *  - order: (ns asc, cid asc). ns is never NaN (sentinel) and never
   *    +0.0 (−round9 yields −0.0, BigDecimal never −0.0), so plain
   *    double comparison equals Spark's nan-safe struct ordering on
   *    this domain.
+  *
+  * Near-tie rule ([[CentOps.best]]): rounding is monotone, so a raw
+  * cosine more than [[CentOps.NearTie]] below the row's maximum rounds
+  * strictly below the winner (HALF_UP moves a value by at most
+  * 0.5·10⁻⁹). `best` therefore rounds only the NaN and near-maximum
+  * cosines — every output bit is the all-rounded loop's, at one
+  * BigDecimal per near tie instead of one per centroid.
   */
 object CentOps {
 
@@ -46,9 +52,14 @@ object CentOps {
     else BigDecimal(v).setScale(9, scala.math.BigDecimal.RoundingMode.HALF_UP)
       .toDouble
 
-  /** ns score of centroid j (flat slice [j·d, (j+1)·d)) against `e`. */
-  private def nsOf(e: ArrayData, ef: Boolean, flat: Array[Double],
-                   base: Int, d: Int): Double = {
+  /** Raw-cosine window below a row's maximum inside which [[best]]
+    * rounds: twice the largest HALF_UP move, so everything outside it
+    * rounds strictly below the maximum's rounded value. */
+  private val NearTie = 2e-9
+
+  /** Raw cosine of centroid j (flat slice [j·d, (j+1)·d)) against `e`. */
+  private def cosOf(e: ArrayData, ef: Boolean, flat: Array[Double],
+                    base: Int, d: Int): Double = {
     val n = math.min(e.numElements(), d)
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
@@ -57,21 +68,42 @@ object CentOps {
       dot += xv * yv; na += xv * xv; nb += yv * yv
       i += 1
     }
-    val c9 = round9(dot / (math.sqrt(na) * math.sqrt(nb)))
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** ns score of a raw cosine: −round9, NaN → the +2.0 sentinel. */
+  private def nsOfCos(c: Double): Double = {
+    val c9 = round9(c)
     if (java.lang.Double.isNaN(c9)) 2.0 else -c9
   }
 
-  /** Winner under (ns asc, cid asc) → struct(ns, cid). */
+  /** Winner under (ns asc, cid asc) → struct(ns, cid). Raw cosines
+    * first; only NaN and near-maximum ones ([[NearTie]]) are rounded
+    * and compared — the rest cannot tie or beat the winner. */
   def best(e: ArrayData, ef: Boolean, flat: Array[Double],
            cids: Array[Int]): InternalRow = {
     val k = cids.length
     val d = flat.length / k
-    var bestNs = 0.0; var bestCid = 0; var j = 0
+    val raw = new Array[Double](k)
+    var maxRaw = Double.NegativeInfinity
+    var j = 0
     while (j < k) {
-      val ns = nsOf(e, ef, flat, j * d, d)
-      val cid = cids(j)
-      if (j == 0 || ns < bestNs || (ns == bestNs && cid < bestCid)) {
-        bestNs = ns; bestCid = cid
+      val c = cosOf(e, ef, flat, j * d, d)
+      raw(j) = c
+      if (c > maxRaw) maxRaw = c
+      j += 1
+    }
+    val floor = maxRaw - NearTie
+    var bestNs = 0.0; var bestCid = 0; var found = false
+    j = 0
+    while (j < k) {
+      val c = raw(j)
+      if (java.lang.Double.isNaN(c) || c >= floor) {
+        val ns = nsOfCos(c)
+        val cid = cids(j)
+        if (!found || ns < bestNs || (ns == bestNs && cid < bestCid)) {
+          bestNs = ns; bestCid = cid; found = true
+        }
       }
       j += 1
     }
@@ -93,7 +125,7 @@ object CentOps {
     var filled = 0
     var j = 0
     while (j < k) {
-      val ns = nsOf(e, ef, flat, j * d, d)
+      val ns = nsOfCos(cosOf(e, ef, flat, j * d, d))
       val cid = cids(j)
       if (filled < m || ns < selNs(filled - 1) ||
           (ns == selNs(filled - 1) && cid < selCid(filled - 1))) {
@@ -134,7 +166,7 @@ sealed trait CentKernel extends UnaryExpression {
 }
 
 /** `graft_cent_best(embedding, flat_lit, cids_lit)` →
-  * struct(ns double, cid int): the literal-route argmax. */
+  * struct(ns double, cid int): the centroid assignment argmax. */
 case class CentBest(child: org.apache.spark.sql.catalyst.expressions.Expression,
                     flat: IndexedSeq[Double], cids: IndexedSeq[Int])
     extends CentKernel {

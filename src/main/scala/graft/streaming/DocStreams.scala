@@ -122,7 +122,7 @@ object DocStreams {
     * colliding spans already cut, before it ever lands in the corpus.
     * The island merge is a per-document windowed computation
     * (window functions are not append-streamable), so the production
-    * form is `foreachBatch` (the I7/R4 precedent: legal per
+    * form is `foreachBatch` (the R4 precedent: legal per
     * micro-batch) running the IDENTICAL batch scrub against the
     * static bench frame — stream and batch cannot diverge by
     * construction, and the spec pins the equality through a real

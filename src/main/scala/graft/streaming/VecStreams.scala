@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{SemanticDedup, SimilaritySearch}
@@ -12,24 +12,17 @@ import graft.sources.Tables
   * stream and are flagged against the KEPT members of the existing
   * deduped corpus as they arrive, with ZERO streaming state.
   *
-  * The statelessness hinges on how assignment is computed: the batch
-  * argmax (broadcast join + `groupBy(vec_id).agg(max(struct))`) is an
-  * AGGREGATION — on a stream that means update-mode state. Instead
-  * the centroid table rides the plan as a literal struct array (k·d
-  * doubles) and each arriving vector argmaxes it in ONE narrow
-  * projection (`array_sort(transform(...))[1]`, ties to the smallest
-  * cid — the same rule as the batch form). Then one stream-static
-  * equi-join on `cid` against the kept-corpus index + the cosine
-  * filter emits `(vec_id, old_id, cos_sim)` matches in append mode.
-  *
-  * Scale bounds, stated honestly: the literal-array trick carries to
-  * k in the low thousands (expression-tree size); beyond that,
-  * [[semanticMatchesForeachBatch]] runs the same pipeline inside
-  * `foreachBatch`, where the batch argmax (broadcast + aggregation)
-  * is legal per micro-batch — the join and index shapes are
-  * identical, so the two paths emit the same matches
-  * (StreamingSemanticSpec asserts it). The static side is built ONCE
-  * from the deduped corpus ([[SemanticDedup.incrementalKeptOld]]) and
+  * The statelessness hinges on how assignment is computed: the one
+  * centroid assignment ([[SemanticDedup.assignTo]]) is a narrow
+  * per-row projection — the collected centroid matrix rides the plan
+  * as kernel reference fields and each arriving vector argmaxes it in
+  * place (max round-9 cosine, NaN loses, ties to the smallest cid) —
+  * so it is legal in a stateless append-mode stream at any k, and the
+  * stream and the batch form share one plan ([[matchesOfBatch]]).
+  * Then one stream-static equi-join on `cid` against the kept-corpus
+  * index + the cosine filter emits `(vec_id, old_id, cos_sim)`
+  * matches in append mode. The static side is built ONCE from the
+  * deduped corpus ([[SemanticDedup.incrementalKeptOld]]) and
   * persisted by the caller, exactly like H9's band index.
   */
 object VecStreams {
@@ -57,14 +50,6 @@ object VecStreams {
     SemanticDedup.incrementalKeptOld(
       spark, Tables.embeddings(spark, corpusDir), cents, tau)
 
-  /** Per-row stateless argmax over a collected centroid table — the
-    * SHARED literal-centroid scorer ([[SemanticDedup.literalTopCentroids]],
-    * also the batch probe path's router), so the stream's rounding and
-    * tie rules can never drift from the batch argmax it mirrors. */
-  private def nearestCidCol(spark: SparkSession, cents: DataFrame,
-                            emb: Column): Column =
-    element_at(SemanticDedup.literalTopCentroids(spark, cents, emb, 1), 1)
-
   /** Streaming matches: each arriving vector lands in its corpus
     * cluster (narrow, stateless) and joins the kept index on `cid`;
     * pairs above `tau` emit as (vec_id, old_id, cos_sim) — append
@@ -72,24 +57,12 @@ object VecStreams {
     * downstream like every H9-family emission. */
   def semanticMatches(spark: SparkSession, streamDir: String,
                       cents: DataFrame, keptIdx: DataFrame,
-                      tau: Double): DataFrame = {
-    val stream = readVecs(spark, streamDir)
-      .withColumn("cid", nearestCidCol(spark, cents, col("embedding")))
-    stream.join(keptIdx, Seq("cid"))
-      .withColumn("cos_sim",
-        round(graft.functions.Vectors.cosineFast(spark,
-          col("embedding"), col("old_emb")), 9))
-      .where(col("cos_sim") > tau)
-      .select(col("vec_id"), col("old_id"), col("cos_sim"))
-  }
+                      tau: Double): DataFrame =
+    matchesOfBatch(spark, readVecs(spark, streamDir), cents, keptIdx, tau)
 
-  /** One micro-batch of the large-k pipeline: the BATCH argmax
-    * ([[SemanticDedup.assignTo]] — broadcast centroids + max-struct
-    * aggregation, which shares [[SemanticDedup.literalTopCentroids]]'s
-    * rounding and tie rules, so the two streaming paths cannot drift)
-    * followed by the same kept-index join and `tau` filter as
-    * [[semanticMatches]]. Package-visible so the spec can assert
-    * batch-vs-literal emission equality directly. */
+  /** The match pipeline over a frame of vectors, streaming or batch:
+    * [[SemanticDedup.assignTo]], the kept-index join on `cid` and the
+    * `tau` filter. */
   private[graft] def matchesOfBatch(spark: SparkSession, batch: DataFrame,
                                     cents: DataFrame, keptIdx: DataFrame,
                                     tau: Double): DataFrame =
@@ -101,30 +74,6 @@ object VecStreams {
       .where(col("cos_sim") > tau)
       .select(col("vec_id"), col("old_id"), col("cos_sim"))
 
-  /** I7's LARGE-k regime (the production path at autoK beyond the
-    * literal-expression bound — 10⁷ vectors means k ≈ 80,000, far
-    * past what an in-plan literal centroid array can carry): the same
-    * stream with the per-batch match pipeline run inside
-    * `foreachBatch`, where aggregation is legal per micro-batch. The
-    * emission set is identical to [[semanticMatches]] by construction
-    * — same centroid table, same rounding/tie rules, same join — and
-    * the spec asserts it on the fixture. Delivery is the usual
-    * foreachBatch contract: at-least-once per (vector, kept neighbor)
-    * under retries; `sink` receives each batch's matches plus the
-    * batch id for idempotent downstream writes.
-    *
-    * Returns the configured writer; the caller picks trigger /
-    * checkpoint and starts it (the SseSink precedent). */
-  def semanticMatchesForeachBatch(spark: SparkSession, streamDir: String,
-                                  cents: DataFrame, keptIdx: DataFrame,
-                                  tau: Double)
-                                 (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    readVecs(spark, streamDir).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(matchesOfBatch(spark, batch, cents, keptIdx, tau), batchId)
-      }
-
   /** R4: standing-query streaming ANN — the vector twin of O7's
     * standing BM25: QUERY vectors arrive as a stream and each
     * micro-batch gets its exact IVF top-k against a static prebuilt
@@ -132,7 +81,7 @@ object VecStreams {
     * generation). Per-query top-k over the corpus is inherently an
     * aggregation per QUERY — not a per-row projection like O7's
     * scoring — so the production form is `foreachBatch` (aggregation
-    * legal per micro-batch; the I7 large-k precedent), with the usual
+    * legal per micro-batch), with the usual
     * at-least-once delivery under retries and the batch id for
     * idempotent downstream writes. Emission equality with the batch
     * [[SimilaritySearch.ivfTopKForQueries]] over the same query set is

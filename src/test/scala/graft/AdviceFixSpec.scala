@@ -112,23 +112,20 @@ class AdviceFixSpec extends SparkSpec {
       s"cid ${r.getInt(0)} decoded to ${r.getInt(1)}"))
   }
 
-  test("all-NaN cosine corner: literal and agg assignment routes agree on the sentinel") {
+  test("all-NaN cosine corner: assignment puts the row on the smallest cid at -2.0") {
     import spark.implicits._
     // a zero vector has cosine 0/0 = NaN against EVERY centroid
     val emb = Seq((1L, Array(0f, 0f, 0f, 0f)), (2L, Array(1f, 0f, 0f, 0f)))
       .toDF("vec_id", "embedding")
     val cents = Seq((0, Array(1.0, 0.0, 0.0, 0.0)), (1, Array(0.0, 1.0, 0.0, 0.0)))
       .toDF("cid", "c_emb")
-    val lit0 = SemanticDedup.assignToLiteral(spark, emb, cents)
+    val got = SemanticDedup.assignTo(spark, emb, cents)
       .select("vec_id", "cid", "cent_sim").orderBy("vec_id").collect()
-    val agg = SemanticDedup.assignToAgg(spark, emb, cents)
-      .select("vec_id", "cid", "cent_sim").orderBy("vec_id").collect()
-    assert(lit0.toSeq.map(_.toSeq) == agg.toSeq.map(_.toSeq),
-      s"routes diverged on the NaN corner: ${lit0.toSeq} vs ${agg.toSeq}")
     // the defined sentinel: all-NaN rows land on the smallest cid at -2.0
-    assert(lit0(0).getInt(1) == 0 && lit0(0).getDouble(2) == -2.0,
-      s"all-NaN row not on (cid 0, -2.0): ${lit0(0)}")
-    assert(lit0(1).getDouble(2) == 1.0, s"real row mis-scored: ${lit0(1)}")
+    assert(got(0).getInt(1) == 0 && got(0).getDouble(2) == -2.0,
+      s"all-NaN row not on (cid 0, -2.0): ${got(0)}")
+    assert(got(1).getInt(1) == 0 && got(1).getDouble(2) == 1.0,
+      s"real row mis-scored: ${got(1)}")
   }
 
   test("literal assignment rejects a ragged centroid row") {
@@ -143,5 +140,26 @@ class AdviceFixSpec extends SparkSpec {
       SemanticDedup.assignToLiteral(spark, emb, cents)
     }
     assert(e.getMessage.contains("dimension"), s"wrong failure: $e")
+  }
+
+  test("a centroid table above MaxClusters fails loudly at the collect") {
+    // MaxClusters + 1 one-dimensional centroids: every collect site
+    // refuses it instead of shipping the whole table into each task
+    val over = spark.range(SemanticDedup.MaxClusters + 1L)
+      .select(col("id").cast("int").as("cid"), array(lit(1.0)).as("c_emb"))
+    val emb = spark.range(1).select(col("id").as("vec_id"),
+      array(lit(1.0f)).as("embedding"))
+    def failsOnCap(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(s"MaxClusters = ${SemanticDedup.MaxClusters}"),
+        s"wrong failure: $e")
+    }
+    failsOnCap(SemanticDedup.assignTo(spark, emb, over))
+    failsOnCap(SemanticDedup.literalTopCentroids(spark, over, col("embedding"), 2))
+    failsOnCap(SimilaritySearch.trainCentroids(spark, emb,
+      SemanticDedup.MaxClusters + 1))
+    // the bound itself is accepted
+    assert(SemanticDedup.collectCentroids(over.limit(SemanticDedup.MaxClusters))
+      .length == SemanticDedup.MaxClusters)
   }
 }

@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-22 optimization internals: the fused centroid-scoring
-  * kernels (graft_cent_best / graft_cent_topn) replace the
-  * array-of-struct-literal + transform + array_sort chain behind
-  * SemanticDedup's literal assignment route. These tests pin
-  * bit-equality with the exact expression chain they replaced
-  * (the oracle gate pins the consumers end-to-end).
+/** The fused centroid-scoring kernels (graft_cent_best /
+  * graft_cent_topn) behind SemanticDedup's one assignment route. These
+  * tests pin bit-equality with the expression chain they replaced and,
+  * for `best`'s near-tie rounding, with a loop that rounds every
+  * centroid (the oracle gate pins the consumers end-to-end).
   */
 class CentScoreSpec extends SparkSpec {
 
@@ -127,6 +126,129 @@ class CentScoreSpec extends SparkSpec {
     for (n <- Seq(0, -1, -7)) {
       val top = graft.plans.CentOps.topn(e, ef = false, flat, cids, n)
       assert(top.numElements() == 0, s"n=$n")
+    }
+  }
+
+  /** `best` as it was before the near-tie rule: every centroid's
+    * cosine rounded, then (ns asc, cid asc). */
+  private def allRounded(e: org.apache.spark.sql.catalyst.util.ArrayData,
+                         ef: Boolean, flat: Array[Double],
+                         cids: Array[Int]): (Double, Int) = {
+    val k = cids.length
+    val dd = flat.length / k
+    var bestNs = 0.0; var bestCid = 0; var j = 0
+    while (j < k) {
+      val n = math.min(e.numElements(), dd)
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < n) {
+        val x = if (ef) e.getFloat(i).toDouble else e.getDouble(i)
+        val y = flat(j * dd + i)
+        dot += x * y; na += x * x; nb += y * y
+        i += 1
+      }
+      val c9 = graft.plans.CentOps.round9(dot / (math.sqrt(na) * math.sqrt(nb)))
+      val ns = if (c9.isNaN) 2.0 else -c9
+      if (j == 0 || ns < bestNs || (ns == bestNs && cids(j) < bestCid)) {
+        bestNs = ns; bestCid = cids(j)
+      }
+      j += 1
+    }
+    (bestNs, bestCid)
+  }
+
+  private def vec(xs: Double*) =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(xs.map(x => x: Any).toArray)
+
+  /** Unit centroid in the (0, 1) plane whose cosine with [1, 0] is ~x. */
+  private def atCos(x: Double): Seq[Double] = Seq(x, math.sqrt(1 - x * x))
+
+  private def rawCos(e: Seq[Double], c: Seq[Double]): Double = {
+    val n = math.min(e.length, c.length)
+    val dot = (0 until n).map(i => e(i) * c(i)).sum
+    dot / (math.sqrt((0 until n).map(i => e(i) * e(i)).sum) *
+      math.sqrt((0 until n).map(i => c(i) * c(i)).sum))
+  }
+
+  /** `best` on one row, asserted bit-equal to [[allRounded]]. */
+  private def bestMatches(e: Seq[Double], cents: Seq[(Int, Seq[Double])]): (Double, Int) = {
+    val flat = cents.flatMap(_._2).toArray
+    val cids = cents.map(_._1).toArray
+    val r = graft.plans.CentOps.best(vec(e: _*), ef = false, flat, cids)
+    val got = (r.getDouble(0), r.getInt(1))
+    val want = allRounded(vec(e: _*), ef = false, flat, cids)
+    assert(java.lang.Double.doubleToLongBits(got._1) ==
+      java.lang.Double.doubleToLongBits(want._1) && got._2 == want._2,
+      s"best $got, all-rounded reference $want")
+    got
+  }
+
+  test("near tie: raw cosines under 1e-9 apart that round equal go to the smallest cid") {
+    val lo = atCos(0.9000000001)
+    val hi = atCos(0.9000000004)
+    val e = Seq(1.0, 0.0)
+    val (rl, rh) = (rawCos(e, lo), rawCos(e, hi))
+    assert(rh > rl && rh - rl < 1e-9)
+    assert(graft.plans.CentOps.round9(rl) == graft.plans.CentOps.round9(rh))
+    // the larger raw cosine sits on the larger cid; a far centroid too
+    val (_, cid) = bestMatches(e, Seq(7 -> hi, 3 -> lo, 1 -> atCos(0.5)))
+    assert(cid == 3)
+  }
+
+  test("near tie: a pair straddling a HALF_UP boundary is split by rounding") {
+    val below = atCos(0.1234567885 - 3e-12)
+    val above = atCos(0.1234567885 + 3e-12)
+    val e = Seq(1.0, 0.0)
+    assert(graft.plans.CentOps.round9(rawCos(e, below)) == 0.123456788)
+    assert(graft.plans.CentOps.round9(rawCos(e, above)) == 0.123456789)
+    // the smaller cid rounds down, so it loses despite the tie rule
+    val (ns, cid) = bestMatches(e, Seq(2 -> below, 5 -> above))
+    assert(cid == 5 && ns == -0.123456789)
+  }
+
+  test("near tie: an all-NaN row goes to the smallest cid at the sentinel") {
+    val (ns, cid) = bestMatches(Seq(0.0, 0.0),
+      Seq(6 -> atCos(0.3), 4 -> atCos(0.2), 9 -> atCos(0.9)))
+    assert(cid == 4 && ns == 2.0)
+  }
+
+  test("near tie: NaN mixed with real scores loses to every real score") {
+    val zero = Seq(0.0, 0.0)
+    // a zero centroid on the smallest cid; real scores all negative
+    val (ns, cid) = bestMatches(Seq(1.0, 0.0),
+      Seq(0 -> zero, 4 -> atCos(-0.7), 8 -> atCos(-0.2), 2 -> zero))
+    assert(cid == 8 && ns == 0.2)
+    val (_, cid2) = bestMatches(Seq(1.0, 0.0),
+      Seq(0 -> zero, 4 -> atCos(0.9000000001), 3 -> atCos(0.9000000004)))
+    assert(cid2 == 3)
+  }
+
+  test("near tie: an embedding shorter than d scores its prefix") {
+    // |e| = 1 < d = 3: only the first element of each centroid counts
+    val (_, cid) = bestMatches(Seq(2.0),
+      Seq(5 -> Seq(0.5, 9.0, 9.0), 1 -> Seq(-1.0, 0.0, 0.0), 3 -> Seq(0.25, -4.0, 0.0)))
+    assert(cid == 3) // both positive prefixes score 1.0; smallest cid wins
+    val rng = new scala.util.Random(31)
+    for (_ <- 0 until 50) {
+      val e = Seq.fill(1 + rng.nextInt(3))(rng.nextDouble() - 0.5)
+      bestMatches(e, (0 until 6).map(j => j -> Seq.fill(4)(rng.nextDouble() - 0.5)))
+    }
+  }
+
+  test("near tie: clustered centroids match the all-rounded loop on float rows") {
+    // centroids within ~1e-9 of each other make near ties common
+    val rng = new scala.util.Random(77)
+    val base = Seq.fill(d)(rng.nextDouble() - 0.5)
+    val cents = (0 until 40).map(j =>
+      (40 - j) -> base.map(_ + (rng.nextInt(5) - 2) * 3e-10))
+    val flat = cents.flatMap(_._2).toArray
+    val cids = cents.map(_._1).toArray
+    for (row <- mkEmb(300, 5)) {
+      val fs = row._2.toArray
+      val e = new org.apache.spark.sql.catalyst.util.GenericArrayData(fs.map(x => x: Any))
+      val r = graft.plans.CentOps.best(e, ef = true, flat, cids)
+      val want = allRounded(e, ef = true, flat, cids)
+      assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
+        java.lang.Double.doubleToLongBits(want._1) && r.getInt(1) == want._2)
     }
   }
 }

@@ -69,9 +69,8 @@ object GoldenGen {
   /** The I7 golden fixture: sf0.001 is the deduped corpus (k = 16
     * centroids, tau = 0.35) and sf0.01's embeddings are the arriving
     * stream. GoldenGen pins via the BATCH twin (matchesOfBatch);
-    * GoldenSpec replays the REAL stream against the same golden —
-    * a cross-path pin (StreamingSemanticSpec already proves the two
-    * paths emit identically). */
+    * GoldenSpec replays the REAL stream (semanticMatches, the same
+    * pipeline over readVecs) against the same golden. */
   val StreamTau = 0.35
   val StreamK = 16
   def streamMatchesBatchTwin(spark: SparkSession): DataFrame = {

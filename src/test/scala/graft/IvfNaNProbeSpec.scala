@@ -2,17 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.{SemanticDedup, SimilaritySearch}
+import graft.operators.SimilaritySearch
 
 /** Pins how NaN cosines (a zero vector on either side) steer the IVF
-  * search on each side of `SemanticDedup.LiteralAssignMaxK`. At
-  * k ≤ 512 the centroid kernels map NaN to "loses"; above it the
-  * broadcast fallback ranks by `round(c_cos, 9)` descending, where
-  * Spark orders NaN above every number, so NaN wins. These specs
-  * record today's answers on both sides; they change no code.
-  * ROADMAP direction 3 (one centroid-assignment regime) deletes the
-  * fallback, and with it the second rule — the "fallback" answers
-  * below then become the kernel's.
+  * search, with few centroids and with more than 512 — the size at
+  * which a broadcast-aggregate fallback used to take over and rank
+  * NaN above every number. Both sizes now run the centroid kernels,
+  * where NaN loses and ties go to the smallest cid.
   */
 class IvfNaNProbeSpec extends SparkSpec {
 
@@ -39,31 +35,27 @@ class IvfNaNProbeSpec extends SparkSpec {
       .map { case (q, rows) => q -> rows.map(_.getAs[Long]("vec_id")).toSet }
   }
 
-  private val KernelK = 5
-  private val FallbackK = SemanticDedup.LiteralAssignMaxK + 1
+  private val FewK = 5
+  private val WideK = 513
 
   test("all-zero query: both sides probe the two smallest cids") {
     // its cosine is NaN against every centroid, so the tie rule alone
-    // decides — (cid asc) on both sides: centroids 0 and 1
-    val kernel = hits(KernelK, zeroCentroid = false)
-    val fallback = hits(FallbackK, zeroCentroid = false)
-    assert(kernel(0L) == Set(1L, 100L, 101L), s"kernel side: ${kernel(0L)}")
-    assert(fallback(0L) == kernel(0L), s"fallback side: ${fallback(0L)}")
-    assert(fallback(1L) == kernel(1L))
+    // decides — (cid asc) at both sizes: centroids 0 and 1
+    val few = hits(FewK, zeroCentroid = false)
+    val wide = hits(WideK, zeroCentroid = false)
+    assert(few(0L) == Set(1L, 100L, 101L), s"$FewK centroids: ${few(0L)}")
+    assert(wide(0L) == few(0L), s"$WideK centroids: ${wide(0L)}")
+    assert(wide(1L) == few(1L))
   }
 
-  test("zero centroid: the kernel side never picks it, the fallback side always does") {
-    val kernel = hits(KernelK, zeroCentroid = true)
-    val fallback = hits(FallbackK, zeroCentroid = true)
-    // kernel: NaN loses. Query 1 probes centroids 1 and 3; the zero
-    // vectors (0, 102) share bucket 0 with 100
-    assert(kernel(1L) == Set(101L, 103L), s"kernel side, query 1: ${kernel(1L)}")
-    assert(kernel(0L) == Set(1L, 100L, 101L, 102L), s"kernel side, query 0: ${kernel(0L)}")
-    // fallback: NaN wins. Every non-zero vector is assigned to the
-    // zero centroid 2, which query 1 probes first; the all-zero query
-    // still probes 0 and 1, where only vector 102 is left
-    assert(fallback(1L) == Set(100L, 101L, 103L, 104L, 105L),
-      s"fallback side, query 1: ${fallback(1L)}")
-    assert(fallback(0L) == Set(102L), s"fallback side, query 0: ${fallback(0L)}")
+  test("zero centroid: never picked, with 5 centroids or 513") {
+    for (k <- Seq(FewK, WideK)) {
+      val got = hits(k, zeroCentroid = true)
+      // NaN loses. Query 1 probes centroids 1 and 3; the zero vectors
+      // (0, 102) share bucket 0 with 100, and the [0,0,0,1] fillers
+      // all land on cid 4
+      assert(got(1L) == Set(101L, 103L), s"$k centroids, query 1: ${got(1L)}")
+      assert(got(0L) == Set(1L, 100L, 101L, 102L), s"$k centroids, query 0: ${got(0L)}")
+    }
   }
 }

@@ -196,50 +196,27 @@ class PackingSpec extends SparkSpec {
       "full-coverage probe diverged from exact argmax — tie/rounding drift")
   }
 
-  test("assignTo routes (literal small-k vs agg large-k) are bit-identical") {
-    // assignTo dispatches on k: the per-row literal argmax (no n·k
-    // explode, no shuffle) below LiteralAssignMaxK, the agg+join shape
-    // above. The dispatch must be a plan-shape choice only — same
-    // graft_cosine, same round(_, 9), same "max cosine, NaN loses,
-    // ties to smallest cid" rule — so the two routes must agree to
-    // the BIT on (vec_id, cid, cent_sim), embeddings included.
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val cents = graft.operators.SimilaritySearch.trainCentroids(spark, emb, 16, iters = 3)
-    val lit = SemanticDedup.assignToLiteral(spark, emb, cents)
-    val agg = SemanticDedup.assignToAgg(spark, emb, cents)
-    // names + types (nullability is a plan artifact either route may
-    // annotate differently)
-    assert(lit.schema.map(f => (f.name, f.dataType)) ==
-           agg.schema.map(f => (f.name, f.dataType)),
-      s"route schemas drifted: ${lit.schema} vs ${agg.schema}")
-    val l = lit.select("vec_id", "cid", "cent_sim")
-    val a = agg.select("vec_id", "cid", "cent_sim")
-    assert(l.exceptAll(a).isEmpty && a.exceptAll(l).isEmpty,
-      "literal and agg assignment routes diverged — tie/rounding drift")
-  }
-
   test("assignTo memoizes the dispatch probe per centroid frame instance") {
     // a streaming caller reuses ONE centroid frame across micro-
-    // batches; the limit(513).collect() dispatch probe must run once
-    // for it, not once per batch. The memo is reference-keyed, so a
-    // REBUILT frame re-probes (no stale-data hazard).
+    // batches; the bounded centroid collect must run once for it, not
+    // once per batch. The memo is reference-keyed, so a REBUILT frame
+    // re-collects (no stale-data hazard).
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val cents = graft.operators.SimilaritySearch.trainCentroids(spark, emb, 8, iters = 2)
-    SemanticDedup.dispatchHeads.remove(cents)
+    SemanticDedup.collectedCents.remove(cents)
     val first = SemanticDedup.assignTo(spark, emb, cents)
-    assert(SemanticDedup.dispatchHeads.containsKey(cents),
-      "dispatch probe result not memoized after first assignTo")
-    val memo = SemanticDedup.dispatchHeads.get(cents)
+    assert(SemanticDedup.collectedCents.containsKey(cents),
+      "centroid collect not memoized after first assignTo")
+    val memo = SemanticDedup.collectedCents.get(cents)
     val second = SemanticDedup.assignTo(spark, emb, cents)
-    assert(SemanticDedup.dispatchHeads.get(cents) eq memo,
-      "second assignTo re-ran the dispatch probe on the same frame")
+    assert(SemanticDedup.collectedCents.get(cents) eq memo,
+      "second assignTo re-collected the same frame")
     // and memoization never changes the answer
     assert(first.exceptAll(second).isEmpty && second.exceptAll(first).isEmpty)
     // a different frame over the same data is a fresh key
     val cents2 = graft.operators.SimilaritySearch.trainCentroids(spark, emb, 8, iters = 2)
-    assert(!SemanticDedup.dispatchHeads.containsKey(cents2),
+    assert(!SemanticDedup.collectedCents.containsKey(cents2),
       "rebuilt frame must not hit the old memo entry")
   }
 

@@ -68,64 +68,6 @@ class StreamingSemanticSpec extends SparkSpec {
     }
   }
 
-  test("foreachBatch fallback (large-k path) emits exactly the literal-path matches") {
-    val root = Files.createTempDirectory("graft_svec_fb").toFile
-    val corpusDir = s"$root/corpus"
-    val streamDir = s"$root/stream"
-    try {
-      import spark.implicits._
-      val d = 8
-      def unit(axis: Int, eps: Double = 0.0): Seq[Float] =
-        Seq.tabulate(d)(i =>
-          (if (i == axis) 1.0f else 0.0f) + (if (i == (axis + 1) % d) eps.toFloat else 0.0f))
-      def vecs(rows: Seq[(Long, Seq[Float])]) =
-        rows.map { case (id, v) => (id, v, 0) }.toDF("vec_id", "embedding", "label")
-      vecs(Seq(100L -> unit(0), 101L -> unit(0, 0.1), 102L -> unit(4)))
-        .coalesce(1).write.parquet(s"$corpusDir/embeddings.parquet")
-      vecs(Seq(1L -> unit(0, 0.05), 2L -> unit(6), 3L -> unit(4, 0.05)))
-        .coalesce(1).write.parquet(streamDir)
-
-      val tau = 0.35
-      val cents = graft.streaming.VecStreams.corpusCentroids(spark, corpusDir, k = 2)
-      val kept = graft.streaming.VecStreams.keptIndex(spark, corpusDir, cents, tau)
-        .persist()
-
-      // literal-expression path (the small-k regime)
-      val name = "svec_fb_" + System.nanoTime()
-      val ql = graft.streaming.VecStreams
-        .semanticMatches(spark, streamDir, cents, kept, tau)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      ql.awaitTermination()
-      val literal = spark.table(name)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-
-      // foreachBatch path (the large-k regime): same centroids, same
-      // index, batch broadcast-argmax per micro-batch
-      val got = scala.collection.mutable.Set.empty[(Long, Long, Double)]
-      val qb = graft.streaming.VecStreams
-        .semanticMatchesForeachBatch(spark, streamDir, cents, kept, tau) {
-          (df, _) =>
-            val rows = df.collect().map(r =>
-              (r.getLong(0), r.getLong(1), r.getDouble(2)))
-            got.synchronized { got ++= rows }
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      qb.awaitTermination()
-
-      assert(literal.nonEmpty, "fixture must produce at least one match")
-      assert(got.toSet == literal,
-        s"foreachBatch emissions diverge from the literal path: " +
-          s"only-batch=${got.toSet -- literal} only-literal=${literal -- got}")
-      kept.unpersist()
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(root)
-    }
-  }
-
   test("R4 standing-query ANN: streamed queries emit exactly the batch IVF top-k") {
     val root = Files.createTempDirectory("graft_sann").toFile
     val streamDir = s"$root/queries"
