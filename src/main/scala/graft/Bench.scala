@@ -93,10 +93,10 @@ object Bench {
       // executed query even with the UI disabled
       // (SQLExecution.withNewExecutionId), and the default "formatted"
       // renderer walks the whole tree per action — measured ~15-20% of
-      // the per-DataFrame-action floor on trivial queries (graft.Dev
-      // qcstep probe, round 21). The UI is off in this session, so the
-      // cheap renderer loses nothing; per-action constant, so the
-      // setting is scale-independent (not a local[32] tune).
+      // the per-DataFrame-action floor on trivial queries (OPTIMIZATION_r21.md
+      // "Bench session: spark.sql.ui.explainMode=simple"). The UI is off in
+      // this session, so the cheap renderer loses nothing; per-action
+      // constant, so the setting is scale-independent (not a local[32] tune).
       .config("spark.sql.ui.explainMode",
         sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_MODE", "simple"))
       .getOrCreate()

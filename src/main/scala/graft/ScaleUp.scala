@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   * every synthetic key by a copy-local stride, so referential
   * integrity (orders→customer, lineitem→part/supplier, doc ids,
   * vec ids) holds across copies; fixed dimensions (region, nation) are
-  * NOT multiplied, exactly like a real 10× corpus. Document text gets
-  * the ScalingStats token-prefix treatment (no cross-copy shingle can
-  * collide, so dedup geometry stays honest instead of flooding with
-  * planted cross-copy "dups"); embeddings are rotated per copy so SRP
-  * buckets spread.
+  * NOT multiplied, exactly like a real 10× corpus. Document text is
+  * token-prefixed per copy (no cross-copy shingle can collide, so
+  * dedup geometry stays honest instead of flooding with planted
+  * cross-copy "dups"); embeddings get a per-copy orthogonal transform
+  * (see the embeddings step), so copies stay distinct at any `x`.
   *
   * The correctness gate NEVER sees these tables — there is no oracle
   * at this scale; this exists to measure wall-clock scaling curves
@@ -116,23 +116,29 @@ object ScaleUp {
       df.select(shifted(i)("event_id"), col("ts"), shifted(i)("user_id"),
         col("event_type"), col("value"), col("props"))
     }, "events")
-    // token-prefix every copy's text (see ScalingStats: 'c<i>x' can
-    // never be a prefix of another copy's separator, so no cross-copy
-    // shingle collides)
+    // token-prefix every copy's text: the trailing 'x' ends the copy
+    // tag, so 'c1x' is never a prefix of 'c12x' and no cross-copy
+    // shingle collides
     write(copies(read("documents")) { (df, i) =>
       df.select(shifted(i)("doc_id"),
         regexp_replace(col("text"), "(\\S+)", s"c${i}x$$1").as("text"),
         col("lang"), col("source"), col("n_chars"))
     }, "documents")
-    // rotate embeddings per copy so copies land in different SRP/IVF
-    // buckets while keeping the value distribution; the rotation offset
-    // is derived from size(embedding) so any corpus dim works (a
-    // hardcoded dim would silently truncate vectors of other sizes)
+    // copy i rotates its embedding by i % d positions (d = its size,
+    // so any corpus dim works) and, in copy group i / d >= 1, flips
+    // signs by a deterministic +-1 per (group, dim index) from
+    // xxhash64 parity: an orthogonal transform, so norms and in-copy
+    // cosines hold and copies stay distinct at any x (rotation alone
+    // repeats copy i at copy i + d); copies below d are rotation only
     write(copies(read("embeddings")) { (df, i) =>
       val rot = s"($i % size(embedding))"
+      val g = s"($i DIV size(embedding))"
+      val rotated = s"concat(slice(embedding, $rot + 1, size(embedding) - $rot), " +
+        s"slice(embedding, 1, $rot))"
       df.select(shifted(i)("vec_id"),
-        expr(s"concat(slice(embedding, $rot + 1, size(embedding) - $rot), " +
-          s"slice(embedding, 1, $rot))").as("embedding"),
+        expr(s"IF($g = 0, $rotated, transform($rotated, (v, j) -> " +
+          s"CAST(v * (1 - 2 * (xxhash64(concat('g', $g, '_', j)) & 1)) AS FLOAT)))")
+          .as("embedding"),
         col("label"))
     }, "embeddings")
     println(s"[scaleup] built ${x}x of $base at $out")

@@ -99,9 +99,8 @@ object Dedup {
   /** Per-bucket member cap, applied IDENTICALLY on both engines (Spark
     * slices the sorted collect; the oracle row_numbers per bucket), so
     * a degenerate bucket can never diverge Spark from the oracle.
-    * private[graft]: ScalingStats applies the same cap when estimating
-    * operator work, and the streaming band index bounds its fan-out
-    * with it. */
+    * private[graft]: the streaming band index bounds its fan-out with
+    * it. */
   private[graft] val BucketCap = 1000
 
   /** doc_id + distinct 3-gram token shingles, as a per-row array (no
@@ -386,10 +385,8 @@ object Dedup {
       yield (b1, b2)).zipWithIndex.map { case ((b1, b2), t) => (t, b1, b2) }
 
   /** Spark-dialect `array(named_struct('band',…,'key',…))` expression
-    * for the block-pair index — the ONE definition of the table-key
-    * arithmetic, reused by the evidence tool (graft.ScalingStats) so
-    * its measured geometry can't drift from the operator's. */
-  private[graft] def simhashTableStructsExpr: String = {
+    * for the block-pair index. */
+  private def simhashTableStructsExpr: String = {
     val m = (1 << SimhashBlockBits)
     simhashTables.map { case (t, b1, b2) =>
       s"""named_struct('band', $t, 'key',
@@ -1288,11 +1285,8 @@ object Dedup {
   private val FuzzyPrefixLen = 40
   private val FuzzyMaxDist = 8
   private val FuzzyLenBucket = 20
-  /** Block-key expressions, shared with ScalingStats (the
-    * simhashTableStructsExpr precedent): the measured blocking
-    * geometry can never drift from what the operator builds. */
-  private[graft] val fuzzyBlockTokExpr = "concat_ws(' ', slice(split(text, ' '), 1, 2))"
-  private[graft] val fuzzyBlockLenExpr = s"CAST(length(text) AS BIGINT) DIV $FuzzyLenBucket"
+  private val fuzzyBlockTokExpr = "concat_ws(' ', slice(split(text, ' '), 1, 2))"
+  private val fuzzyBlockLenExpr = s"CAST(length(text) AS BIGINT) DIV $FuzzyLenBucket"
 
   def fuzzyPairs(spark: SparkSession, dir: String): DataFrame = {
     val blocked = Tables.documents(spark, dir)

@@ -13,8 +13,9 @@ import graft.sources.Tables
   *
   * Batch semantics of `GET /routes/{route}?since=...`: resolve since →
   * offset (forward seek, backward fallback), then frame everything at
-  * or after it. The same composition drives the streaming path
-  * (graft.streaming.SseSink) in serving deployments.
+  * or after it. Serving resolves `since` in the hub's ring instead
+  * (graft.streaming.SseHub.resolveSinceOffset), forward only: with no
+  * retained event at or after `since`, a client gets a live tail.
   */
 object EventLogService {
 

@@ -115,12 +115,12 @@ object Tables {
   /** Layout override for the correctness gate: when
     * SPARK_GRAFT_PARTITIONED_DIR is set, `events` and `documents`
     * resolve to the hive-partitioned copies under that dir (written
-    * by [[graft.LayoutPrep]]) instead of the flat files — projected
-    * back to the flat column order, so EVERY query runs unchanged and
-    * the oracle (still reading flat) must agree: physical layout is
-    * invisible to answers, proven on the whole suite rather than
-    * asserted per-fixture (J2's PlanSpec contracts cover the pruning
-    * side). */
+    * by the test-tree tool `graft.tools.LayoutPrep`) instead of the
+    * flat files — projected back to the flat column order, so EVERY
+    * query runs unchanged and the oracle (still reading flat) must
+    * agree: physical layout is invisible to answers, proven on the
+    * whole suite rather than asserted per-fixture (J2's PlanSpec
+    * contracts cover the pruning side). */
   private def partitionedDir: Option[String] =
     sys.env.get("SPARK_GRAFT_PARTITIONED_DIR").filter(_.nonEmpty)
 
@@ -131,8 +131,9 @@ object Tables {
     * contract stays "ts = nanos-since-epoch BIGINT" either way: a µs
     * file is normalized by `unix_micros(ts) · 1000` at the read, so
     * every operator, the partitioned layouts (written nanos by
-    * LayoutPrep), and the DuckDB oracle (epoch-function-based, type
-    * agnostic) agree without caring which vintage generated the file.
+    * `graft.tools.LayoutPrep`), and the DuckDB oracle (epoch-function-
+    * based, type agnostic) agree without caring which vintage
+    * generated the file.
     * Footer-only probe — no data job. */
   private val microsTs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   private[graft] def eventsTsIsMicros(spark: SparkSession, dir: String): Boolean =

@@ -316,8 +316,7 @@ object SseHub {
   }
 
   // Static registries: the ForeachWriter serializes per task, so it
-  // carries only the hub id and resolves the JVM-side hub instance
-  // (see SseSink.InMemoryTransport for the pattern rationale).
+  // carries only the hub id and resolves the JVM-side hub instance.
   private val hubIds = new AtomicLong(0L)
   private val subIds = new AtomicLong(0L)
   private val hubs = TrieMap.empty[Long, SseHub]

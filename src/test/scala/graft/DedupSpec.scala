@@ -14,6 +14,22 @@ class DedupSpec extends SparkSpec {
       s"LSH must prune: $pairs candidate pairs for $n docs")
   }
 
+  test("BucketCap bounds an identical-doc bucket: C(cap, 2) pairs over the cap smallest ids") {
+    import spark.implicits._
+    // cap + 50 identical docs share a bucket in every band; ids are a
+    // permutation of 100..(cap + 149), so the cap smallest are 100..(cap + 99)
+    val n = Dedup.BucketCap + 50
+    val text = "a boilerplate notice repeated verbatim across a planted hot bucket"
+    val docs = (0 until n).map(i => ((i * 7919L) % n + 100, text)).toDF("doc_id", "text")
+    val pairs = Dedup.verifiedPairsAt(spark, Dedup.shingledSig(spark, docs), 4, 3)
+      .select("doc_a", "doc_b").distinct().localCheckpoint()
+    val cap = Dedup.BucketCap.toLong
+    assert(pairs.count() == cap * (cap - 1) / 2)
+    val ids = pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("id"))
+      .agg(countDistinct("id"), min("id"), max("id")).head()
+    assert((ids.getLong(0), ids.getLong(1), ids.getLong(2)) == ((cap, 100L, cap + 99)))
+  }
+
   test("LSH finds every true near-dup pair (jaccard >= 0.8)") {
     // Brute-force ground truth is feasible at sf0.001 (50 docs).
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -21,6 +21,20 @@ class PlanSpec extends SparkSpec {
       s"missing pushdown:\n$plan")
   }
 
+  test("event parse: null skips reach the scan, the whole skip filter sits below the range exchange") {
+    val plan = finalPlan(EventLogOps.parse(spark, sfDir))
+    assert(plan.contains("PushedFilters: [IsNotNull(ts), IsNotNull(props)]"),
+      s"null skips not pushed to the scan:\n$plan")
+    // node lines, top to bottom, without the tree-drawing prefix
+    val nodes = plan.split("\n").map(_.replaceAll("^[\\s:+-]*", "")).toSeq
+    val exchange = nodes.indexWhere(_.startsWith("Exchange rangepartitioning"))
+    val filters = nodes.zipWithIndex.collect { case (l, i) if l.startsWith("Filter ") => i }
+    assert(exchange >= 0 && filters.size == 1 && filters.head > exchange,
+      s"skip filter not (only) below the range exchange:\n$plan")
+    assert(nodes(filters.head).contains("variant_get"),
+      s"JSON k check not in the pushed filter:\n$plan")
+  }
+
   test("q1 pushes the shipdate filter and prunes columns") {
     val plan = finalPlan(Relational.q1PricingSummary(spark, sfDir))
     assert(plan.contains("PushedFilters") && plan.contains("LessThanOrEqual(l_shipdate"),

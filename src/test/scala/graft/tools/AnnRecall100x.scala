@@ -1,4 +1,5 @@
 package graft
+package tools
 
 import java.nio.file.Files
 
@@ -31,7 +32,7 @@ import graft.operators.{BinaryAnn, SimilaritySearch}
   * Coarse structures train with k = cluster count, as the spec
   * trains k=4 on its 4 clusters.
   *
-  * Run: sbt "runMain graft.AnnRecall100x" — prints one JSON line.
+  * Run: sbt "Test/runMain graft.tools.AnnRecall100x" — prints one JSON line.
   */
 object AnnRecall100x {
 

@@ -1,4 +1,5 @@
 package graft
+package tools
 
 import org.apache.spark.sql.SparkSession
 
@@ -8,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * copies via SPARK_GRAFT_PARTITIONED_DIR: the oracle keeps reading the
   * flat files, and every green row proves the layout changed no answer.
   *
-  * Run: sbt "runMain graft.LayoutPrep <sfDir> <outDir>"
+  * Run: sbt "Test/runMain graft.tools.LayoutPrep <sfDir> <outDir>"
   * then: SPARK_GRAFT_PARTITIONED_DIR=<outDir> sbt "runMain graft.Verify <sfDir> <out>"
   */
 object LayoutPrep {

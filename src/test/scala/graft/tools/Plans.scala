@@ -1,4 +1,5 @@
 package graft
+package tools
 
 import java.nio.file.{Files, Paths}
 
@@ -7,7 +8,8 @@ import org.apache.spark.sql.SparkSession
 /** Dumps `explain("formatted")` for representative queries to
   * PLANS.md — reviewable evidence that scans prune/push down, joins
   * broadcast, aggregations are partial, and top-k never full-sorts.
-  * Regenerate after plan-affecting changes: `sbt "runMain graft.Plans"`. */
+  * Regenerate after plan-affecting changes:
+  * `sbt "Test/runMain graft.tools.Plans [sfDir] [out]"`. */
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -56,7 +58,7 @@ object Plans {
       "q_fineweb_filters", "q_ann_ivf_bq")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans (sf0.01)\n\n")
-    sb.append("Generated by `graft.Plans`; the properties PlanSpec enforces\n")
+    sb.append("Generated by `sbt \"Test/runMain graft.tools.Plans\"`; the properties PlanSpec enforces\n")
     sb.append("(PushedFilters, pruned ReadSchema, broadcasts, partial aggs,\n")
     sb.append("TakeOrderedAndProject, no cartesian) are visible below.\n")
     for (name <- picks) {
