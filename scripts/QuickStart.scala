@@ -34,15 +34,12 @@ object QuickStart {
     val nWin = windows.count()
     println(s"[quickstart] streaming: event-time windows = $nWin")
 
-    // ---- streaming: bounded log (plan only) + SSE frames over the
-    // event log (AvailableNow) ----
-    val log = graft.streaming.RetentionState
-      .streamBoundedLog(spark, data, capacity = 100000)
-    require(log.isStreaming, "bounded log is not a streaming plan")
-    graft.streaming.SseSink.serve(spark, data,
-      new graft.streaming.SseSink.InMemory("quickstart"))
-    val nFrames = graft.streaming.SseSink.InMemoryTransport.frames("quickstart").size
-    println(s"[quickstart] streaming: SSE frames = $nFrames")
+    // ---- streaming: the hub's bounded per-route ring of SSE frames;
+    // a subscription replays what the ring retains ----
+    val hub = new graft.streaming.SseHub(spark, data, capacity = 100000)
+    hub.start()
+    val nFrames = try hub.subscribe("click").drain().size finally hub.stop()
+    println(s"[quickstart] streaming: SSE frames replayed for route click = $nFrames")
 
     require(nDups > 0 && nWin > 0 && nFrames > 0, "quickstart produced empty results")
     println("[quickstart] OK")

@@ -22,7 +22,7 @@ import graft.sources.Tables
   *    one-shot query bit-for-bit (the equalities are additionally
   *    spec-pinned: PipelineOpsSpec, MSeriesSpec, RSeriesSpec,
   *    WinnowingSpec, RemovalSpec, BqAnnSpec, …).
-  *  - [[Bench.benchFromForms]] times the same thunks over the same
+  *  - `Bench.benchFromForms` times the same thunks over the same
   *    persisted stages (stage builds untimed — they are the
   *    refresh-cadence cost a deployment amortizes across consumers).
   *

@@ -22,7 +22,7 @@ import graft.sources.Tables
   * scales both sides) and robust to bounded noise — the same
   * invariance class that makes dHash perceptual for images; the spec
   * pins both. Near-dup pairs feed the EXISTING Manku block-pair
-  * hamming index unchanged ([[Dedup.hammingPairsOf]]).
+  * hamming index unchanged (`Dedup.hammingPairsOf`).
   *
   * Encode/decode run in the per-blob mapPartitions class (the F1
   * rationale); everything downstream is C3's measured shape. At

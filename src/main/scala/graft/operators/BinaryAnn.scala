@@ -28,7 +28,7 @@ import graft.sources.Tables
   *
   * Scale shape: packing is one narrow codegen'd pass (N rows); the
   * hamming scan touches every vector (like D1) but reads 8 B/vector
-  * and runs two-stage bounded [[TopK]] partial aggregation, so only
+  * and runs two-stage bounded [[graft.functions.TopK]] partial aggregation, so only
   * ShortM·P rows per query cross the shuffle; the rescore reads
   * ShortM·|queries| float rows. At 100 TB the packed words column is
   * what a deployment persists (3 TB instead of 100), and the scan

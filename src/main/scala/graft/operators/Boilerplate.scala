@@ -31,7 +31,7 @@ import graft.sources.Tables
   * tile, ≤18 compares even at the cap — the round-10 `array_contains`
   * linear scan cost O(hotset) per tile and measured 67× wall at 100×
   * once the relative threshold grew the hot set to ~5k tiles.
-  * [[HotSetCap]] fails loudly if a corpus breaks the "boilerplate is
+  * `HotSetCap` fails loudly if a corpus breaks the "boilerplate is
   * small" premise rather than silently shipping a giant broadcast.
   *
   * Cross-engine exactness: tiling is integer arithmetic (ceil-div
@@ -61,7 +61,7 @@ object Boilerplate {
 
   /** The scrub over an arbitrary (doc_id, text) frame: doc_id,
     * clean_text (hot tiles removed, order kept), n_tiles, n_dropped.
-    * The [[HotSetCap]] guard lives IN THE PLAN (a raise_error branch
+    * The `HotSetCap` guard lives IN THE PLAN (a raise_error branch
     * on the 1-row hot aggregate), so a corpus that breaks the
     * "boilerplate is small" premise fails the job loudly instead of
     * silently shipping an unbounded broadcast array. */

@@ -99,7 +99,7 @@ object CharLm {
     * the exploded trigram stream + broadcast join + doc-grain
     * aggregation (5·10⁸ interpreted-lambda rows at 100× — the stage
     * every lmScore consumer shared; CharLmSpec pins kernel ≡ chain
-    * bit-for-bit, the chain survives as [[lmScoreWithPortable]]).
+    * bit-for-bit, the chain survives as `lmScoreWithPortable`).
     * Grams absent from the table (impossible when self-trained,
     * possible under a persisted model on NEW docs) price as the
     * γ-floor ln(1/γ), the same "rare transition" mass the smoothing

@@ -318,8 +318,8 @@ object Dedup {
     * retraining is the expensive side.
     *
     * Scale shape: G11's composition — the pair set is LSH-bounded and
-    * delta-sized; each end's split is DERIVED from the id ([[
-    * Sampling.splitOf]]), a narrow projection on the pair row itself,
+    * delta-sized; each end's split is DERIVED from the id
+    * ([[Sampling.splitOf]]), a narrow projection on the pair row itself,
     * so the audit adds ZERO joins and zero shuffles beyond the pair
     * generation it reuses. Output ≤ pair count; ~2% of pairs straddle
     * under a 98/1/1 split if dup structure is split-independent
@@ -486,7 +486,7 @@ object Dedup {
 
   /** The FULL C2→C4 path under an ARBITRARY banding (b × r) of the
     * same H-hash signature: band keys on hashes [i·r, i·r + r),
-    * bucket-collect with the house [[BucketCap]], then exact
+    * bucket-collect with the house `BucketCap`, then exact
     * distinct-shingle Jaccard for every bucket-colliding pair — one
     * row per CANDIDATE pair with its verified jaccard. */
   private[graft] def verifiedPairsAt(spark: SparkSession,
@@ -863,7 +863,7 @@ object Dedup {
     * vector, vs the ub+1 one-bit-flip probes this replaces, whose
     * fan-out grew with the corpus (ub ≈ log2(n/pop)) and cost 4.4× on
     * the local bench. Pairs are generated by bucket-collect (the same
-    * shape as [[lshPairs]] — the sketch pipeline runs once, embeddings
+    * shape as `lshPairs` — the sketch pipeline runs once, embeddings
     * ride the collect so no separate embeddings join is needed), with
     * the cap applied identically in the oracle. The bit-width ladder is
     * exact integer CASE arithmetic (no float log2 whose ceil could
@@ -1019,7 +1019,7 @@ object Dedup {
       |SELECT vec_a, vec_b, cos_sim FROM epairs
       |ORDER BY vec_a, vec_b""".stripMargin
 
-  /** N5's twin (declared after [[embeddingPairsSqlCtes]] — object val
+  /** N5's twin (declared after `embeddingPairsSqlCtes` — object val
     * init order). */
   val splitLeakageSemanticSql: String = {
     val rank = (s: String) =>
@@ -1041,7 +1041,7 @@ object Dedup {
   // ---------------------------------------------------------------- J8
   /** J8: semantic near-dup CLUSTERS — C5's SRP pair graph closed into
     * connected components with G4's pointer-jumping min-label machinery
-    * (same [[propagateMinLabels]], same O(log diameter) round bound):
+    * (same `propagateMinLabels`, same O(log diameter) round bound):
     * the embedding-space counterpart of `q_dedup_clusters`, turning
     * pairwise cosine evidence into canonical-representative groups a
     * curation pass can act on (keep `is_canonical`, drop the rest —
@@ -1214,7 +1214,7 @@ object Dedup {
     * join).
     *
     * Single signature pass: buckets collect (doc_id, is_new) members
-    * once; the sorted member list is capped at [[BucketCap]] BEFORE
+    * once; the sorted member list is capped at `BucketCap` BEFORE
     * the new/old split (identical rule in the oracle), then each new
     * member pairs only with the bucket's old members. */
   private val BatchSalt = "batch"
@@ -1277,7 +1277,7 @@ object Dedup {
   /** Blocked fuzzy matching: edit-distance pairs without an all-pairs
     * scan. Docs are blocked on (first two tokens, length(text) DIV
     * 20); within a block, the sorted-capped member list explodes into
-    * pairs (the [[lshPairs]] shape — the block pass runs once, no
+    * pairs (the `lshPairs` shape — the block pass runs once, no
     * self-join) and pairs within levenshtein ≤ [[FuzzyMaxDist]] on the
     * first [[FuzzyPrefixLen]] chars survive. Blocking is the standard
     * record-linkage trade: recall is bounded by the block key (a
@@ -1349,7 +1349,7 @@ object Dedup {
     *
     * Pair collision is a pure pair property (equal band keys), so
     * evaluating on the probe subset is EXACT for the family — bucket
-    * co-members don't matter ([[BucketCap]] is deliberately absent:
+    * co-members don't matter (`BucketCap` is deliberately absent:
     * the eval prices the hash family, not the cap).
     *
     * Scale shape: corpus work is one narrow scan + TakeOrdered(256);

@@ -182,7 +182,7 @@ object EventLogOps {
       |ORDER BY event_id""".stripMargin
 
   /** [[since]] over the date-partitioned layout
-    * ([[Tables.writeEventsPartitioned]]): identical rows, but the
+    * ([[graft.sources.Tables.writeEventsPartitioned]]): identical rows, but the
     * resume instant also bounds the PARTITION column —
     * `event_date >= date(since)` is implied by `ts >= since` (the
     * partition key is the UTC date of `ts`), and stating it lets the
@@ -209,9 +209,11 @@ object EventLogOps {
 
   // ---------------------------------------------------------------- A3
   /** Timestamp→nearest-offset, the reference's only query operator
-    * (timestamp2offset.go:60-80): for each probe instant, the smallest
-    * offset at-or-after it, else (backward fallback) the largest offset
-    * before it.
+    * (timestamp2offset.go:60-80), answered for each probe instant by
+    * the one `since` rule stated at
+    * [[graft.streaming.SseHub.resolveSinceOffset]] (forward seek,
+    * backward fallback), over the whole log instead of one route's
+    * ring.
     *
     * Scalable shape: aggregate events to the hourly probe grid (one
     * shuffle of |hours| rows), then a suffix-min / prefix-max window
@@ -238,7 +240,12 @@ object EventLogOps {
     * not required. Same-instant ordering: for the forward seek the
     * event row sorts with the probe's frame (ts >= probe includes the
     * probe's own hour); for the backward fallback it is excluded
-    * (strictly earlier only). */
+    * (strictly earlier only).
+    *
+    * Both windows are unpartitioned, so Spark warns "No Partition
+    * Defined" and runs them in one task. They read only the union of
+    * the hourly aggregate and the probe rows: at most |hours| +
+    * |probes| rows, never |events|. `PlanSpec` pins that bound. */
   def nearestOffsetFor(spark: SparkSession, dir: String, probes: DataFrame): DataFrame = {
     val ev = Tables.events(spark, dir)
     // UTC hour-truncation, arithmetic: date_trunc runs in the session
@@ -404,9 +411,9 @@ object EventLogOps {
   /** Start-position resolution (kinesis2sse.go:117-126): map each of
     * LATEST / TRIM_HORIZON / AT_TIMESTAMP / DURATION-ago to the offset
     * a new subscription would begin at. One aggregate pass computes all
-    * four; AT_TIMESTAMP and DURATION reuse the nearest-offset
-    * semantics (forward seek, backward fallback) as conditional
-    * aggregates. */
+    * four; AT_TIMESTAMP and DURATION apply the one `since` rule
+    * ([[graft.streaming.SseHub.resolveSinceOffset]]: forward seek,
+    * backward fallback) as conditional aggregates. */
   def startPosition(spark: SparkSession, dir: String,
                     atUs: Long = 1705276800000000L /* 2024-01-15T00:00:00Z */,
                     durUs: Long = MicrosPerDay): DataFrame = {

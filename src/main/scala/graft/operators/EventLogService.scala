@@ -1,21 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
-
-/** Facade composing the event-log primitives into the reference's
-  * user-visible request flow
-  * (/root/reference/internal/kinesis2sse/service.go:217-283): a client
-  * subscribes to a ROUTE with an optional `since` instant and receives
-  * SSE frames from the resolved offset onward.
-  *
-  * Batch semantics of `GET /routes/{route}?since=...`: resolve since →
-  * offset (forward seek, backward fallback), then frame everything at
-  * or after it. Serving resolves `since` in the hub's ring instead
-  * (graft.streaming.SseHub.resolveSinceOffset), forward only: with no
-  * retained event at or after `since`, a client gets a live tail.
+/** `?since=` request-value parsing for `GET /routes/{route}?since=...`
+  * (internal/kinesis2sse/service.go:226-242): the
+  * reference's two accepted forms, an RFC3339 instant or a Go duration
+  * meaning that-long-ago. [[graft.streaming.SseHttpServer]] parses with
+  * [[parseSinceNs]] and hands the instant to the hub's seek,
+  * [[graft.streaming.SseHub.resolveSinceOffset]], which states the one
+  * `since` → offset rule.
   */
 object EventLogService {
 
@@ -71,29 +62,4 @@ object EventLogService {
             Left(s"invalid since value (want RFC3339 or duration): $s")
         }
     }
-
-  /** Request-shaped entry: parse `since` (either form), then resolve +
-    * frame. Left is the 400 path — malformed input never reaches the
-    * query. */
-  def framesSinceRequest(spark: SparkSession, dir: String, route: String,
-                         since: String, nowNs: Long): Either[String, DataFrame] =
-    parseSinceNs(since, nowNs).map(framesSince(spark, dir, route, _))
-
-  /** Frames a client resuming at `sinceNs` on `route` would receive,
-    * in offset order. Route + time predicates are pushed to the scan. */
-  def framesSince(spark: SparkSession, dir: String, route: String,
-                  sinceNs: Long): DataFrame = {
-    val ev = Tables.events(spark, dir).where(col("event_type") === route)
-    // nearest-offset resolution (timestamp2offset.go:60-80) as a tiny
-    // broadcast aggregate: min offset at-or-after, else max before
-    val resolved = ev.agg(
-      min(when(col("ts") >= sinceNs, col("event_id"))).as("fwd"),
-      max(when(col("ts") < sinceNs, col("event_id"))).as("bwd"))
-      .select(coalesce(col("fwd"), col("bwd")).as("start_offset"))
-    ev.crossJoin(broadcast(resolved))
-      .where(col("event_id") >= col("start_offset"))
-      .select(col("event_id"),
-        EventLogOps.sseFrameCol(col("ts_us"), col("props")).as("frame"))
-      .orderBy("event_id")
-  }
 }

@@ -22,19 +22,19 @@ import graft.sources.Tables
   *
   * Pipeline, all REAL codec work (javax.imageio, in-JVM, public):
   *   1. render each document's deterministic synthetic image and
-  *      encode it as an actual PNG ([[renderPng]] — `ImageIO.write`,
+  *      encode it as an actual PNG (`renderPng` — `ImageIO.write`,
   *      real deflate stream);
   *   2. exact layer: md5 over the PNG bytes, hash-groupBy — C1's
   *      shape on the binary column (F2);
   *   3. perceptual layer: `ImageIO.read` the PNG back to pixels,
   *      block-average resize to the 9×8 dHash grid, difference-hash
-  *      to 64 bits ([[dHash]] — the published dHash algorithm), and
+  *      to 64 bits (`dHash` — the published dHash algorithm), and
   *      feed the EXISTING Manku block-pair hamming index
-  *      ([[Dedup.hammingPairsOf]]) unchanged for ham ≤ 4 pairs (F3).
+  *      (`Dedup.hammingPairsOf`) unchanged for ham ≤ 4 pairs (F3).
   *
   * Oracle construction: the synthetic image is built so its dHash
   * recovers the document's C3 simhash EXACTLY — each of the 8 rows
-  * walks its 9 cells ±[[Step]] gray levels by the simhash's bits, so
+  * walks its 9 cells ±`Step` gray levels by the simhash's bits, so
   * the row's adjacent-cell differences ARE the bits; row base levels
   * carry 7 bits each of md5(text), so byte-identity of the PNG tracks
   * text identity. DuckDB can therefore predict both layers portably
@@ -82,7 +82,7 @@ object ImageDedup {
     baos.toByteArray
   }
 
-  /** The raster behind [[renderPng]] — shared with the video limb
+  /** The raster behind `renderPng` — shared with the video limb
     * (F8/F9 encode the same grid per FRAME through a different
     * codec). */
   private[graft] def renderGrid(hash: Long, md5hex: String): BufferedImage = {

@@ -2,7 +2,7 @@ package graft.operators
 
 /** Process-wide data-dir context for dump-only oracle fallbacks: the
   * CLI mains (Verify/Bench) pin it to the run's sf dir at startup, so
-  * an [[OracleModelCache.oracleModel]] evaluated WITHOUT its query
+  * an `OracleModelCache.oracleModel` evaluated WITHOUT its query
   * having run (SPARK_GRAFT_VERIFY_ONLY subsets, ad-hoc dumps) still
   * trains on this run's data instead of a hardcoded default — and any
   * nested trainer it triggers lands on the same dir as the queries

@@ -107,7 +107,7 @@ object Packing {
     * docs, and the spans of a sequence tile [0, seqLen) exactly.
     *
     * Same deterministic global hash order and TWO-LEVEL prefix sum as
-    * I1 (shared [[PrefixSum]] machinery — no full-corpus single-task
+    * I1 (shared `PrefixSum` machinery — no full-corpus single-task
     * window); the span explode is a codegen'd `sequence()` over the
     * doc's [start, end) block range — pure arithmetic, zero extra
     * shuffle, output size O(docs + sequences). ALL-INTEGER, so both
@@ -119,7 +119,7 @@ object Packing {
     seqPackFrom(Tables.documents(spark, dir), seqLen, salt)
 
   /** `tokenCounter` swaps the chars/4 heuristic for a learned counter
-    * (the P1 BPE column) through the shared [[PrefixSum]] hook — the
+    * (the P1 BPE column) through the shared `PrefixSum` hook — the
     * sequences then measure REAL tokenizer lengths, which is what the
     * trainer's loader actually packs by. */
   def seqPackFrom(docs: DataFrame,

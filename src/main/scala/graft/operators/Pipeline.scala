@@ -105,7 +105,7 @@ object Pipeline {
     * re-runs the live semantic stage at sf0.01 and asserts it still
     * equals this checked-in list, so the trained stage cannot silently
     * drift (the oracle itself now embeds the run's own drop-set via
-    * [[oracleDropIds]] and is valid at every SF). */
+    * `oracleDropIds` and is valid at every SF). */
   private[graft] lazy val goldenDropIdsSf001: Seq[Long] = {
     val in = getClass.getResourceAsStream("/graft/semantic_drop_sf0.01.csv")
     require(in != null, "missing resource graft/semantic_drop_sf0.01.csv")
@@ -116,7 +116,7 @@ object Pipeline {
 
   /** Oracle: the stages' own verified SQL composed as CTEs —
     * [[Curation.curateSql]] verbatim, the run's semantic drop list
-    * ([[oracleDropIds]] — evaluated at dump time, AFTER the queries
+    * (`oracleDropIds` — evaluated at dump time, AFTER the queries
     * ran, per the Verify contract), then the mix-resample and
     * shard-pack arithmetic re-stated over the survivor CTE with the
     * exact text of their standalone twins

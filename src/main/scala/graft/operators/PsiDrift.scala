@@ -100,7 +100,7 @@ object PsiDrift {
 
   /** PSI of an arriving population's band counts against a standing
     * reference's — the per-micro-batch body of the streaming monitor,
-    * and exactly the batch arithmetic ([[widen]] + [[psiTail]]). */
+    * and exactly the batch arithmetic (`widen` + `psiTail`). */
   def psiOfCounts(refCounts: DataFrame, curCounts: DataFrame): DataFrame =
     psiTail(widen(
       refCounts.select(col("source"), col("b"), col("c"), lit(false).as("nw"))

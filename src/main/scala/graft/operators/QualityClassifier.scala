@@ -12,8 +12,8 @@ import graft.sources.Tables
   * fixed-weight heuristic.
   *
   * Features: hashed token-presence — each distinct word maps to one of
-  * [[Dim]] buckets via the portable salted-md5 hash ([[
-  * Sampling.hashBucket]] % Dim), plus a constant bias feature at index
+  * [[Dim]] buckets via the portable salted-md5 hash
+  * (`Sampling.hashBucket` % Dim), plus a constant bias feature at index
   * Dim. Weak labels come from E2's score bands: top-band docs are
   * positives, bottom-band negatives, the middle is excluded (the
   * standard weak-supervision trick — train only where the teacher is

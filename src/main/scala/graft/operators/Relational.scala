@@ -330,7 +330,7 @@ object Relational {
   // ---------------------------------------------------------------- B12
   /** JSON field extraction from the props payload, then aggregate by
     * the extracted key. Extraction rides the variant fast path
-    * ([[Portable.jsonGetString]] — 8.5× over get_json_object at 100×,
+    * ([[graft.functions.Portable.jsonGetString]] — 8.5× over get_json_object at 100×,
     * see BASELINE round-10 table) and happens before the shuffle so
     * only (k, partials) move. */
   def qJsonExtract(spark: SparkSession, dir: String): DataFrame =

@@ -257,7 +257,7 @@ object Removal {
   /** DuckDB twin of [[removalAuditV3]]: postings/df/corpus-stats
     * rebuilt over the remaining docs, the packed index rebuilt over
     * the remaining embeddings via the explicit Σ 2^j sign-bit chain
-    * ([[BinaryAnn.wordSql]] — integer-exact in both engines). */
+    * (`BinaryAnn.wordSql` — integer-exact in both engines). */
   def removalAuditV3Sql: String = {
     val keepD = s"NOT (${Sampling.hashBucketSql("CAST(doc_id AS VARCHAR)",
       ForgetSalt)} < ${Sampling.pctThreshold(ForgetPct)})"
@@ -323,7 +323,7 @@ object Removal {
     * directories are ever read or rewritten; untouched buckets' files
     * are never opened (RemovalSpec proves it by corrupting an
     * untouched bucket's files — the removal must still succeed).
-    * Each touched bucket publishes through [[ArtifactStore.maintain]]
+    * Each touched bucket publishes through [[graft.sources.ArtifactStore.maintain]]
     * — replayed batches are per-bucket no-ops, crashes leave every
     * bucket complete, and the layout root is swept for interrupted
     * swaps first so partition discovery never sees a stale

@@ -218,7 +218,7 @@ object Reporting {
 
   /** Oracle: each stage's verified SQL contributes its drop arm; the
     * semantic stage embeds the RUN's drop list (the Pipeline/J1
-    * [[OracleModelCache]] device — k-means is not SQL-expressible), so
+    * `OracleModelCache` device — k-means is not SQL-expressible), so
     * this twin is valid at every SF. A def: the list must be resolved
     * at DUMP time, after the queries ran. */
   def dropLedgerSql: String = {

@@ -100,7 +100,7 @@ object Retrieval {
 
   /** O1's persisted POSTINGS artifact: the vocab-pruned
     * `(doc_id, term, tf, dl)` frame — one row per (matching doc,
-    * query term), the exact frame [[bm25ScoredFrom]] scores from. At
+    * query term), the exact frame `bm25ScoredFrom` scores from. At
     * a deployment this persists at ingest cadence and the serving
     * pass never re-tokenizes the corpus. */
   def bm25Postings(docs: DataFrame): DataFrame = {
@@ -219,7 +219,7 @@ object Retrieval {
     * — no token explode, no aggregation, no state store, valid in ANY
     * output mode. Emits (doc_id, query_id, score) for docs matching ≥1
     * query term; row set and scores are equality-pinned against
-    * [[bm25ScoredFrom]] in OSeriesSpec (the stream sums terms in
+    * `bm25ScoredFrom` in OSeriesSpec (the stream sums terms in
     * query order vs the batch shuffle's order — identical after the
     * shared 6 dp round). */
   def bm25ScoreStream(stream: DataFrame, model: Bm25Model): DataFrame = {

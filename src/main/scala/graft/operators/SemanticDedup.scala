@@ -178,7 +178,7 @@ object SemanticDedup {
     * equals, so this is reference identity — a rebuilt frame over the
     * same path is a fresh key and re-collects, so data can never go
     * stale under a reused key; GC of the frame drops its entry).
-    * Callers that run [[assignTo]] more than once on one frame — the
+    * Callers that run `assignTo` more than once on one frame — the
     * incremental and maintained-index paths, a streaming caller
     * assigning each micro-batch ([[graft.streaming.VecStreams]]) —
     * pay the collect job once. */
@@ -211,7 +211,7 @@ object SemanticDedup {
     * (column 0: Int id, column 1: the embedding) via the fused
     * `graft_cent_topn` kernel — one NARROW projection, no aggregation
     * (stream-safe), deterministic (ns asc, cid asc) selection with
-    * the NaN→+2.0 sentinel ("NaN loses", [[assignTo]]'s rule), the
+    * the NaN→+2.0 sentinel ("NaN loses", `assignTo`'s rule), the
     * exact contract of the former `slice(array_sort(transform(...)),
     * 1, n).cid` chain. The matrix rides the
     * expression as FrozenSeq reference fields, so k in the low
@@ -293,7 +293,7 @@ object SemanticDedup {
   }
 
   /** Train-and-assign over the full embeddings table; `k <= 0` means
-    * [[autoK]]. `probeCoarse = 0` is the exact regime: full-corpus
+    * `autoK`. `probeCoarse = 0` is the exact regime: full-corpus
     * Lloyd's + exact argmax (n·k per pass). `probeCoarse != 0`
     * ([[ProbeAuto]] for the adaptive dial, `> 0` for an explicit
     * probe width) is the >10⁷-vector regime END TO END: training
@@ -371,7 +371,7 @@ object SemanticDedup {
     *
     * Scale shape: the corpus never all-pairs — pairwise work is
     * within-cluster only, one shuffle on `cid`, and `k` is DERIVED
-    * from the corpus ([[autoK]]: k ≈ n/125, floor 16) so the per-task
+    * from the corpus (`autoK`: k ≈ n/125, floor 16) so the per-task
     * join input stays ~target members at any size — bounded by
     * CONSTRUCTION, not by data luck, because k-means splits mass
     * wherever it concentrates (SemDeDup's ~100k clusters at web scale
@@ -386,7 +386,7 @@ object SemanticDedup {
     * cluster to 1,307 (ScalingStats' deliberate exhibit); autoK
     * (k=160) keeps clusters target-bounded and beats it on wall-clock
     * too (3.35 vs 4.99 s, BASELINE.md). Beyond ~10⁷ vectors the n·k
-    * assignment FLOPs take over — [[assignViaIvf]] is that regime's
+    * assignment FLOPs take over — `assignViaIvf` is that regime's
     * path (probe nearest coarse buckets instead of scoring all k,
     * ~2·probe·√k per vector), agreement-gated by PackingSpec. The
     * rank window is per-cluster (same bound). Training cost is the
@@ -664,7 +664,7 @@ object SemanticDedup {
     * per-row independent, so maintenance is even simpler than L4's
     * (which must re-window touched groups): departed/changed vectors
     * leave by anti-join on their ids, arrived/changed vectors are the
-    * ONLY rows that touch an embedding — one [[assignTo]] pass over
+    * ONLY rows that touch an embedding — one `assignTo` pass over
     * the delta, O(|delta|·k) work total, zero reads of unchanged
     * embeddings (the OSeriesSpec poison-proof corrupts every
     * non-delta embedding and the maintained index must still equal
@@ -673,8 +673,8 @@ object SemanticDedup {
     * Centroid-generation contract, stated rather than hidden: the
     * maintained index answers for the centroids it was built with.
     * Retraining (drift refresh) is a new generation — one full
-    * [[assignTo]] pass, after which delta maintenance resumes.
-    * [[assignTo]] is one per-row kernel, so a row's assignment does
+    * `assignTo` pass, after which delta maintenance resumes.
+    * `assignTo` is one per-row kernel, so a row's assignment does
     * not depend on which frame it was scored in: maintained and
     * rebuilt rows are bit-identical, not merely close.
     *
@@ -743,7 +743,7 @@ object SemanticDedup {
   }
 
   /** The boolean the maintenance loop consumes: true ⇒ this
-    * generation is done — retrain centroids (one full [[assignTo]]
+    * generation is done — retrain centroids (one full `assignTo`
     * pass), then resume delta maintenance. */
   def needsRefresh(oldAssigned: DataFrame, newAssigned: DataFrame): Boolean =
     assignmentDrift(oldAssigned, newAssigned).head().getBoolean(3)
@@ -760,7 +760,7 @@ object SemanticDedup {
     * (an O(|delta|·k) [[maintainAssignments]] pass), read the drift
     * gate off the maintained index itself, and on a tripped gate
     * retrain generation g+1 ON THE MAINTAINED CORPUS and re-assign —
-    * one full [[assignTo]] pass, after which delta maintenance resumes
+    * one full `assignTo` pass, after which delta maintenance resumes
     * against the new centroids. Deterministic end to end (the trainer
     * is seeded, the tie rule shared), so a refresh is bit-identical to
     * training from scratch on the same corpus — OSeriesSpec drives

@@ -403,7 +403,7 @@ object SimilaritySearch {
     })
 
   /** Collected centroids back to the (cid, c_emb) frame shape
-    * [[ivfSearchOn]] consumes — a LocalRelation of the SAME doubles
+    * `ivfSearchOn` consumes — a LocalRelation of the SAME doubles
     * the lineage form produced (collect/createDataFrame round-trips
     * doubles exactly), so search semantics are unchanged. */
   private def centsDf(spark: SparkSession,
@@ -420,10 +420,10 @@ object SimilaritySearch {
     a.map(fmtD).mkString("[", ", ", "]")
 
   /** IVF ANN over UNLABELED embeddings: [[trainCentroids]] +
-    * [[ivfSearchOn]]. The iterative training itself is not
+    * `ivfSearchOn`. The iterative training itself is not
     * SQL-expressible, but its frozen RESULT is: the run's centroids
     * ride [[ivfTopKTrainedSql]] as a VALUES literal (via
-    * [[ivfCentCache]]), putting assignment + probe + top-k — and,
+    * `ivfCentCache`), putting assignment + probe + top-k — and,
     * through the literal, the training — under the DuckDB hash gate.
     * Recall stays gated by AnnRecallSpec's clustered fixture, which
     * never touches `label` (that path trains with a non-default k and
@@ -437,7 +437,7 @@ object SimilaritySearch {
   }
 
   /** DuckDB twin of [[ivfTopKTrained]]: the trained centroids as a
-    * VALUES literal, then the [[ivfSearchOn]] semantics restated —
+    * VALUES literal, then the `ivfSearchOn` semantics restated —
     * nearest-centroid assignment (round-9 desc, ties to the smallest
     * cid), NProbe probes per query, exact cosine + round-9/vec_id rank
     * inside the probed buckets. A `def`: Verify dumps oracle SQL after
@@ -589,7 +589,7 @@ object SimilaritySearch {
     * across runs and engines; ties on vec_id).
     *
     * Scale shape: assignment is the codegen'd broadcast argmax pass
-    * (n·k cosine, no shuffle); the quota is the bounded [[TopK]]
+    * (n·k cosine, no shuffle); the quota is the bounded [[graft.functions.TopK]]
     * partial aggregation keyed by cid — only cap·P rows per cluster
     * cross the shuffle, never the corpus (a per-cid window would
     * hash-shuffle every row). Output is k·cap rows. */
@@ -1053,7 +1053,7 @@ object SimilaritySearch {
       |ORDER BY query_id, rank""".stripMargin
 
   /** DuckDB twin of [[pqTopK]]: codebook/LUT literals from the frozen
-    * run artifact, the encode argmin restated ([[encodeCtesSql]]), the
+    * run artifact, the encode argmin restated (`encodeCtesSql`), the
     * ADC score as the same left-associated lookup sums, shortlist by
     * (round-9 desc, vec_id), exact rescore. Every floating-point step
     * is either a shared literal or an identically-ordered IEEE op, so
@@ -1241,8 +1241,8 @@ object SimilaritySearch {
     * the frozen run artifact; assignment and probes restated with the
     * house round-9-desc/cid-asc rule; residuals re-derived with the
     * identical DOUBLE−DOUBLE→FLOAT cast chain; the encode argmin and
-    * ADC sums as identically-ordered IEEE ops ([[encodeCtesSql]] /
-    * [[adcSumSql]]); shortlist [[PqShortlistIvf]]; exact rescore. */
+    * ADC sums as identically-ordered IEEE ops (`encodeCtesSql` /
+    * `adcSumSql`); shortlist `PqShortlistIvf`; exact rescore. */
   def ivfPqTopKSql: String = {
     val art = ivfPqCache.oracleModel()
     val model = art.adc.model
@@ -1350,7 +1350,7 @@ object SimilaritySearch {
   /** DuckDB twin of [[ivfBqTopK]]: frozen centroids as the VALUES
     * literal, assignment + probes restated with the house
     * round-9-desc/cid-asc rule, packed words as the explicit integer
-    * chains ([[BinaryAnn.wordSql]]), hamming shortlist (ASC, vec_id),
+    * chains (`BinaryAnn.wordSql`), hamming shortlist (ASC, vec_id),
     * exact rescore. The bucket-restricted shortlist stage is integer
     * end-to-end, like Z1. A `def` (oracle-dump-after-queries rule). */
   def ivfBqTopKSql: String = {

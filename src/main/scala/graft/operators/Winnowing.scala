@@ -28,7 +28,7 @@ import graft.sources.Tables
   * so candidate generation is sub-quadratic at any corpus size (never
   * all-pairs). Hot fingerprints (boilerplate) concentrate a bucket
   * exactly like a hot LSH band, so the pair generator applies C2's
-  * [[WinnowBucketCap]] device — each fp's sorted doc list is capped
+  * `WinnowBucketCap` device — each fp's sorted doc list is capped
   * IDENTICALLY in plan and oracle, bounding a template fingerprint
   * shared by 10M docs to cap² pairs instead of 10¹³ (the L2
   * boilerplate scrub still runs upstream in a production pipeline;
@@ -142,7 +142,7 @@ object Winnowing {
   /** Candidate copy pairs: docs sharing ≥1 fingerprint VALUE, with
     * the shared-value count (the MOSS ranking signal). Pairs come from
     * grouping fingerprints into buckets and exploding in-bucket
-    * combinations over the sorted, [[WinnowBucketCap]]-capped member
+    * combinations over the sorted, `WinnowBucketCap`-capped member
     * list — the fingerprint pipeline runs ONCE (a self-join would run
     * it twice) and no bucket can detonate. */
   def winnowPairs(spark: SparkSession, dir: String): DataFrame =

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   * Words hold 32 bits (never 64): bit 63 of a BIGINT is its sign bit,
   * and the SQL twin builds each word as an explicit Σ 2^j literal
   * chain — 32-bit words keep every partial sum comfortably positive
-  * and portable. Short arrays fail fast (the [[SrpSketch.checkDims]]
+  * and portable. Short arrays fail fast (the `SrpSketch.checkDims`
   * rationale: DuckDB's out-of-range list index yields NULL and would
   * silently unset bits the native side sets); longer arrays read
   * exactly the first [[BitPack.Dims]] elements.

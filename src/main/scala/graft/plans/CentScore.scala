@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** Fused centroid-scoring kernels: the one centroid assignment
-  * ([[graft.operators.SemanticDedup.assignTo]], at every k, batch and
+  * (`graft.operators.SemanticDedup.assignTo`, at every k, batch and
   * streaming) and the probe router.
   *
   * The previous shape built the centroid table INTO the expression
@@ -36,7 +36,7 @@ import org.apache.spark.sql.types._
   *    this domain.
   *
   * Near-tie rule ([[CentOps.best]]): rounding is monotone, so a raw
-  * cosine more than [[CentOps.NearTie]] below the row's maximum rounds
+  * cosine more than `CentOps.NearTie` below the row's maximum rounds
   * strictly below the winner (HALF_UP moves a value by at most
   * 0.5·10⁻⁹). `best` therefore rounds only the NaN and near-maximum
   * cosines — every output bit is the all-rounded loop's, at one
@@ -78,7 +78,7 @@ object CentOps {
   }
 
   /** Winner under (ns asc, cid asc) → struct(ns, cid). Raw cosines
-    * first; only NaN and near-maximum ones ([[NearTie]]) are rounded
+    * first; only NaN and near-maximum ones (`NearTie`) are rounded
     * and compared — the rest cannot tie or beat the winner. */
   def best(e: ArrayData, ef: Boolean, flat: Array[Double],
            cids: Array[Int]): InternalRow = {

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the relative df threshold), making the narrow pass O(tokens ·
   * hotset) — measured 67× wall at 100× data. The hot array is already
   * SORTED (built with `sort_array`, i.e. UTF8 binary order — the same
-  * order [[UTF8String#compareTo]] implements), so membership is a
+  * order `UTF8String#compareTo` implements), so membership is a
   * binary search: O(tokens · log hotset), with the whole
   * tiles-vs-hot-set subtraction fused into one compiled loop instead
   * of an interpreted per-element lambda.

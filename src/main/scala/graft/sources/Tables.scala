@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * StructType.
   *
   * `events.ts` has shipped in two physical vintages (see
-  * [[Tables.eventsTsIsMicros]]): parquet TIMESTAMP(NANOS) — which
+  * `Tables.eventsTsIsMicros`): parquet TIMESTAMP(NANOS) — which
   * Spark's vectorized reader rejects ([PARQUET_TYPE_ILLEGAL]), so it
   * is read as a nanos BIGINT via `spark.sql.legacy.parquet
   * .nanosAsLong` — and plain µs TIMESTAMP, normalized to the same
@@ -196,7 +196,7 @@ object Tables {
   /** events with `ts >= loNs` (and `< hiNs` unless `Long.MaxValue`)
     * stated on the PHYSICAL column BEFORE normalization, so the
     * predicate reaches the parquet scan in EITHER ts vintage — a
-    * filter written after [[normalizeMicrosEvents]] sits above the
+    * filter written after `normalizeMicrosEvents` sits above the
     * `unix_micros · 1000` projection and never pushes. On µs files
     * the nanos bounds translate exactly (`ts_ns ⋈ L ⟺ ts_us ⋈
     * ⌈L/1000⌉` because every ts_ns is a µs multiple) to foldable

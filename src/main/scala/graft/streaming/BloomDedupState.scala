@@ -31,7 +31,7 @@ import graft.functions.Portable
   * up front regardless of corpus size; shard count spreads both the
   * state rows and the per-batch CPU across executors.
   *
-  * The signature is C1's order-normalized [[Portable.bagSignature]],
+  * The signature is C1's order-normalized [[graft.functions.Portable.bagSignature]],
   * so batch and streaming dedup agree on what "exact duplicate"
   * means. Emission picks ONE representative per signature; which
   * in-batch copy wins is batch-iteration-order dependent (the same

@@ -22,7 +22,7 @@ import graft.sources.Tables
   * bounded-state continuous form is needed).
   *
   * At scale the static side is a PERSISTED band index (computed once
-  * by [[Dedup.bandsOf]] over the corpus and bucketed on (band, key)),
+  * by [[graft.operators.Dedup.bandsOf]] over the corpus and bucketed on (band, key)),
   * not recomputed per micro-batch as the file-source test harness
   * does; the join then co-locates on the bucketing and the stream
   * side alone moves.
@@ -130,7 +130,7 @@ object DocStreams {
     * at-least-once under retries, batch id for idempotent writes.
     *
     * Returns the configured writer; the caller picks trigger /
-    * checkpoint and starts it (the SseSink precedent). */
+    * checkpoint and starts it. */
   def spanScrubForeachBatch(spark: SparkSession, streamDir: String,
                             bench: DataFrame)
                            (sink: (DataFrame, Long) => Unit)

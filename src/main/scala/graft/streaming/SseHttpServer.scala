@@ -108,11 +108,11 @@ class SseHttpServer(spark: SparkSession, dir: String,
 
   /** Graceful shutdown: new writes stop, every subscription and the
     * hub are closed, then the listener and handler pool close. Runs
-    * under the same monitor as [[ensureIngest]], so a connect racing
+    * under the same monitor as `ensureIngest`, so a connect racing
     * shutdown either subscribes before the sweep (and is swept) or
     * observes `closed` and refuses; late registrations that slip past
     * the sweep re-check `closed` after registering and tear themselves
-    * down (see [[streamTo]]). */
+    * down (see `streamTo`). */
   def stop(): Unit = synchronized {
     closed = true
     activeSubs.values.foreach(s => try s.close() catch { case _: Exception => () })
@@ -151,7 +151,7 @@ class SseHttpServer(spark: SparkSession, dir: String,
         case Some(v) => v.toLongOption.map(off => () => off)
         case None => queryParam(ex, "since") match {
           // the hub's in-memory ts->offset index resolves the instant
-          // (the reference's t2o role), forward-only over the ring
+          // (the reference's t2o role) over the route's ring
           case Some(s) => EventLogService.parseSinceNs(s, nowNs()).toOption
             .map(ns => () => hub.resolveSinceOffset(route, ns))
           // absent since = the route's latest retained offset

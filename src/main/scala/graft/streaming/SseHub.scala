@@ -10,6 +10,8 @@ import org.apache.spark.sql.{ForeachWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.EventLogOps
+
 /** Shared-query serving core: ONE continuous Spark query per event
   * directory feeds an in-JVM bounded ring log, and every connected
   * client replays from its own seek position out of the ring and then
@@ -96,7 +98,7 @@ class SseHub(spark: SparkSession, dir: String,
       checkpoint = Some(ckpt)
       val q = EventStreams.readEvents(spark, dir)
         .select(col("event_id"), col("event_type"), col("ts"),
-          SseSink.frameCol.as("frame"))
+          EventLogOps.sseFrameCol(col("ts_us"), col("props")).as("frame"))
         .writeStream
         .foreach(new HubWriter(hubId))
         .option("checkpointLocation", ckpt.toString)
@@ -115,7 +117,7 @@ class SseHub(spark: SparkSession, dir: String,
     * subscriptions (the reference's KCL worker likewise resumes into
     * the same memlog, service.go:133-141). The replacement query runs
     * from a fresh temp checkpoint, so it re-reads the source from the
-    * start and re-appends every retained offset — [[append]]'s
+    * start and re-appends every retained offset — `append`'s
     * first-insertion gate suppresses those (the documented
     * at-least-once window), so connected clients see only genuinely
     * new frames, and events that landed during the outage are picked
@@ -173,16 +175,25 @@ class SseHub(spark: SparkSession, dir: String,
   }
 
   /** In-memory timestamp→offset seek over the route's retained ring
-    * (the reference's t2o.NearestOffset role, with forward-only
-    * `ts >= since` semantics): smallest retained offset whose ts is
-    * at/after the instant, minus one (strictly-after subscription); no
-    * such event → the latest retained offset (pure live tail); empty
-    * ring → everything (the reference's empty-log path,
-    * service.go:254-258). No Spark job runs. The window follows
-    * OFFSETS, as in the reference: an event whose ts precedes the
-    * instant but whose offset follows the resolved one is delivered;
-    * one whose ts is at/after the instant but whose offset precedes
-    * it (a late arrival, or one the ring no longer retains) is not. */
+    * (the reference's t2o.NearestOffset role). This states the one
+    * `since` rule (timestamp2offset.go:60-80), which
+    * `EventLogOps.nearestOffsetFor` and `EventLogOps.startPosition`
+    * also follow:
+    *
+    *  - the smallest offset whose ts is at/after the instant;
+    *  - else (every event is earlier) the largest earlier offset;
+    *  - empty log → no offset.
+    *
+    * The result is the resolved offset minus one, because a
+    * subscription starts strictly after its offset: the client replays
+    * from the resolved event on, then follows live. Empty ring →
+    * everything (the reference's empty-log path, service.go:254-258).
+    * No Spark job runs. The window follows OFFSETS, as in the
+    * reference: an event whose ts precedes the instant but whose
+    * offset follows the resolved one is delivered; one whose ts is
+    * at/after the instant but whose offset precedes it (a late
+    * arrival) is not. The seek sees only what the ring retains, so an
+    * instant before the oldest retained event resolves to that event. */
   def resolveSinceOffset(route: String, sinceNs: Long): Long = lock.synchronized {
     rings.get(route).filter(!_.ring.isEmpty) match {
       case Some(r) =>
@@ -192,7 +203,7 @@ class SseHub(spark: SparkSession, dir: String,
           val e = it.next()
           if (e.ts >= sinceNs) fwd = e.offset
         }
-        if (fwd != Long.MinValue) fwd - 1 else r.ring.lastKey()
+        (if (fwd != Long.MinValue) fwd else r.ring.lastKey()) - 1
       case None => Long.MinValue
     }
   }
@@ -209,7 +220,7 @@ class SseHub(spark: SparkSession, dir: String,
     * SNAPSHOTTED (not pushed into the live queue, whose bound exists
     * for slow LIVE consumers — a replay bigger than the bound must
     * not kill the client before it reads a byte) and served first by
-    * [[Subscription.poll]]; later arrivals follow live. Snapshot and
+    * `Subscription.poll`; later arrivals follow live. Snapshot and
     * registration happen under the append lock, so no frame is lost
     * or doubled at the hand-over point. */
   def subscribe(route: String, afterOffset: Long = Long.MinValue): Subscription =
@@ -228,8 +239,8 @@ class SseHub(spark: SparkSession, dir: String,
 
   private[streaming] def unsubscribe(id: Long): Unit = subs.remove(id)
 
-  private[streaming] def append(offset: Long, route: String, ts: Long,
-                                frame: String): Unit =
+  private[graft] def append(offset: Long, route: String, ts: Long,
+                            frame: String): Unit =
     lock.synchronized {
       val r = rings.getOrElseUpdate(route, new RouteRing)
       val first = r.ring.put(offset, Entry(offset, ts, frame)) == null

@@ -7,22 +7,22 @@ import graft.operators.{SemanticDedup, SimilaritySearch}
 import graft.sources.Tables
 
 /** I7: streaming semantic dedup — the continuous form of
-  * [[SemanticDedup.semanticDedupIncremental]], mirroring H9's
+  * [[graft.operators.SemanticDedup.semanticDedupIncremental]], mirroring H9's
   * stream-static design in embedding space: vectors arrive as a
   * stream and are flagged against the KEPT members of the existing
   * deduped corpus as they arrive, with ZERO streaming state.
   *
   * The statelessness hinges on how assignment is computed: the one
-  * centroid assignment ([[SemanticDedup.assignTo]]) is a narrow
+  * centroid assignment (`SemanticDedup.assignTo`) is a narrow
   * per-row projection — the collected centroid matrix rides the plan
   * as kernel reference fields and each arriving vector argmaxes it in
   * place (max round-9 cosine, NaN loses, ties to the smallest cid) —
   * so it is legal in a stateless append-mode stream at any k, and the
-  * stream and the batch form share one plan ([[matchesOfBatch]]).
+  * stream and the batch form share one plan (`matchesOfBatch`).
   * Then one stream-static equi-join on `cid` against the kept-corpus
   * index + the cosine filter emits `(vec_id, old_id, cos_sim)`
   * matches in append mode. The static side is built ONCE from the
-  * deduped corpus ([[SemanticDedup.incrementalKeptOld]]) and
+  * deduped corpus (`SemanticDedup.incrementalKeptOld`) and
   * persisted by the caller, exactly like H9's band index.
   */
 object VecStreams {
@@ -84,7 +84,7 @@ object VecStreams {
     * legal per micro-batch), with the usual
     * at-least-once delivery under retries and the batch id for
     * idempotent downstream writes. Emission equality with the batch
-    * [[SimilaritySearch.ivfTopKForQueries]] over the same query set is
+    * [[graft.operators.SimilaritySearch.ivfTopKForQueries]] over the same query set is
     * spec-pinned through a real AvailableNow stream. */
   def annTopKForeachBatch(spark: SparkSession, streamDir: String,
                           index: DataFrame, cents: DataFrame,

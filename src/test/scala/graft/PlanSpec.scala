@@ -48,6 +48,35 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"no broadcast join:\n$plan")
   }
 
+  test("nearest offset: both unpartitioned windows read only the hourly aggregate and the probes") {
+    import org.apache.spark.sql.execution.{DataSourceScanExec, SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = EventLogOps.nearestOffset(spark, sfDir)
+    df.collect() // force AQE to finalize
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+    // a scan reached from `p` without first passing an aggregate
+    def rawScan(p: SparkPlan): Boolean = p match {
+      case _: HashAggregateExec => false
+      case _: DataSourceScanExec => true
+      case _ => children(p).exists(rawScan)
+    }
+    val plan = df.queryExecution.executedPlan
+    val windows = nodes(plan).collect { case w: WindowExec => w }
+    assert(windows.size == 2 && windows.forall(_.partitionSpec.isEmpty),
+      s"expected the two unpartitioned windows:\n$plan")
+    for (w <- windows) {
+      assert(nodes(w).exists(_.isInstanceOf[UnionExec]), s"window not over the union:\n$plan")
+      assert(!rawScan(w), s"window reads events rows, not the hourly aggregate:\n$plan")
+    }
+  }
+
   test("capacity retention plans as TakeOrderedAndProject (no full sort)") {
     val plan = finalPlan(EventLogOps.retentionCapacity(spark, sfDir, 100))
     assert(plan.contains("TakeOrderedAndProject"), s"full sort instead of top-N:\n$plan")

@@ -4,8 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TopK
 import graft.functions.TopK.Scored
-import graft.streaming.RetentionState
-import graft.streaming.RetentionState.Ev
+import graft.streaming.SseHub
 
 /** Randomized-property tests (seeded, 200 trials) for the
   * order-sensitivity-critical pieces: partial aggregation is only
@@ -125,17 +124,20 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("RetentionState.insert: keeps exactly the newest-N distinct offsets") {
+  test("SseHub.append: keeps exactly the newest-N distinct offsets") {
     val rnd = new scala.util.Random(11)
     for (_ <- 1 to 200) {
       val cap = 1 + rnd.nextInt(10)
       // duplicates included: redelivery must not evict distinct entries
       val offs = List.fill(rnd.nextInt(40))(rnd.nextInt(20).toLong)
-      val evs = offs.map(o => Ev("r", o, o * 10))
-      val log = evs.foldLeft(List.empty[Ev])((acc, e) =>
-        RetentionState.insert(acc, e, cap))
+      // append/subscribe are the ring alone: no ingest starts, so the
+      // hub needs no session
+      val hub = new SseHub(null, "", capacity = cap)
+      offs.foreach(o => hub.append(o, "r", o * 10, s"data: $o\n\n"))
+      val retained = hub.subscribe("r").drain()
+        .map(_.linesIterator.next().stripPrefix("id: ").toLong)
       val expected = offs.distinct.sorted(Ordering[Long].reverse).take(cap)
-      assert(log.map(_.offset) == expected)
+      assert(retained == expected.reverse)
     }
   }
 }

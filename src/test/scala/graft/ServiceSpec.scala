@@ -1,39 +1,8 @@
 package graft
 
-import graft.sources.Tables
-
-import org.apache.spark.sql.functions._
-import graft.operators.{EventLogOps, EventLogService, Sampling}
+import graft.operators.{EventLogService, Sampling}
 
 class ServiceSpec extends SparkSpec {
-
-  test("framesSince composes resolution + framing like the reference flow") {
-    val route = "click"
-    val sinceNs = 1705276800000000000L // 2024-01-15T00:00:00Z
-    val got = EventLogService.framesSince(spark, sfDir, route, sinceNs)
-    // resolution: first frame's offset = forward-seek result for the route
-    val ev = Tables.eventsRaw(spark, sfDir)
-      .where(col("event_type") === route)
-    val expectedStart = ev.where(col("ts") >= sinceNs)
-      .agg(min("event_id")).collect()(0).getLong(0)
-    assert(got.select(min("event_id")).collect()(0).getLong(0) == expectedStart)
-    // framing: byte format matches the batch SSE projection
-    val f = got.select("frame").head().getString(0)
-    assert(f.startsWith("data: {\"time\":\"") && f.endsWith("}\n\n"))
-    // completeness: every route event at/after the offset is framed
-    val expectedN = ev.where(col("event_id") >= expectedStart).count()
-    assert(got.count() == expectedN)
-  }
-
-  test("framesSince falls back to the largest earlier offset") {
-    // since far beyond the data: no forward match -> newest event only
-    val sinceNs = 4102444800000000000L // 2100-01-01
-    val got = EventLogService.framesSince(spark, sfDir, "view", sinceNs)
-    val maxId = Tables.eventsRaw(spark, sfDir)
-      .where(col("event_type") === "view")
-      .agg(max("event_id")).collect()(0).getLong(0)
-    assert(got.select("event_id").collect().map(_.getLong(0)).toSeq == Seq(maxId))
-  }
 
   test("since accepts RFC3339, Go durations, and rejects garbage (400 path)") {
     val nowNs = 1705363200000000000L // 2024-01-16T00:00:00Z
@@ -61,15 +30,6 @@ class ServiceSpec extends SparkSpec {
     // wrap around into a future instant
     for (over <- Seq("9999999999h9999999999h", "99999999999999999999h", "9223372037s"))
       assert(EventLogService.parseSinceNs(over, nowNs).isLeft, s"accepted: $over")
-  }
-
-  test("framesSinceRequest: duration form equals the equivalent instant form") {
-    val nowNs = 1705363200000000000L
-    val viaDur = EventLogService.framesSinceRequest(spark, sfDir, "click", "24h", nowNs)
-      .fold(e => fail(e), identity)
-    val viaTs = EventLogService.framesSince(spark, sfDir, "click", 1705276800000000000L)
-    assert(viaDur.collect().toSeq == viaTs.collect().toSeq)
-    assert(EventLogService.framesSinceRequest(spark, sfDir, "click", "nope", nowNs).isLeft)
   }
 
   test("hash sample is stable under repartitioning and roughly pct-sized") {

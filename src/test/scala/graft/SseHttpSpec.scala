@@ -191,6 +191,23 @@ class SseHttpSpec extends SparkSpec {
     }
   }
 
+  test("since after every retained event replays the route's newest event, then the live tail") {
+    withServer(1 to 10) { (srv, evDir) =>
+      // clicks 2..10 sit at T0+2s..T0+10s; the instant is later than all
+      val c = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:01:00Z")
+      assert(c.awaitStatus() == 200)
+      // the backward fallback: the largest earlier offset, click 10
+      assert(eventually()(c.has(10)), "newest retained event not replayed")
+      writeEvents(evDir, 11 to 14, append = true)
+      assert(eventually()(c.has(12) && c.has(14)), "tail frames missing")
+      val idLines = c.lines.asScala.filter(_.startsWith("id: ")).toSeq
+      assert(c.lines.asScala.head == ":ok", "missing :ok preamble")
+      assert(idLines == Seq("id: 10", "id: 12", "id: 14"),
+        s"not the newest event then the live tail: $idLines")
+      c.close()
+    }
+  }
+
   test("client disconnect tears down only that client's query") {
     withServer() { (srv, _) =>
       val cA = new SseClient(srv.boundPort, "/routes/click?since=2024-01-15T00:00:00Z")

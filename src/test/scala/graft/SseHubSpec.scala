@@ -378,6 +378,50 @@ class SseHubSpec extends SparkSpec {
     } finally hub.stop()
   }
 
+  /** Per route, the (offset, frame) pairs a hub over the corpus
+    * replays to a subscriber from the beginning, in replay order. */
+  private def corpusReplay(capacity: Int): Map[String, Seq[(Long, String)]] = {
+    val routes = spark.read.parquet(s"$sfDir/events.parquet")
+      .groupBy("event_type").agg(org.apache.spark.sql.functions.max("event_id"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val hub = new graft.streaming.SseHub(spark, sfDir, capacity = capacity)
+    hub.start()
+    try {
+      assert(eventually()(routes.forall { case (r, last) =>
+        hub.retainedRange(r).exists(_._2 == last) }), "corpus ingest never landed")
+      routes.keys.map { r =>
+        r -> hub.subscribe(r).drain().map { f =>
+          val Array(id, frame) = f.split("\n", 2)
+          (id.stripPrefix("id: ").toLong, frame)
+        }
+      }.toMap
+    } finally hub.stop()
+  }
+
+  test("hub over the corpus: each route replays the batch frame projection row for row") {
+    val batch = graft.operators.EventLogOps.sseFrames(spark, sfDir)
+      .join(spark.read.parquet(s"$sfDir/events.parquet")
+        .select("event_id", "event_type"), "event_id")
+      .collect().groupBy(_.getAs[String]("event_type"))
+      .map { case (r, rows) => r -> rows.map(x =>
+        (x.getAs[Long]("event_id"), x.getAs[String]("frame"))).toSeq.sortBy(_._1) }
+    val replay = corpusReplay(capacity = 100000)
+    assert(replay.keySet == batch.keySet)
+    for ((r, want) <- batch)
+      assert(replay(r) == want, s"route $r: hub replay differs from sseFrames")
+  }
+
+  test("hub over the corpus at capacity 50 retains each route's newest 50 offsets") {
+    val ids = spark.read.parquet(s"$sfDir/events.parquet")
+      .select("event_type", "event_id").collect()
+      .groupBy(_.getString(0)).map { case (r, rows) => r -> rows.map(_.getLong(1)) }
+    val replay = corpusReplay(capacity = 50)
+    assert(replay.keySet == ids.keySet)
+    for ((r, all) <- ids)
+      assert(replay(r).map(_._1) == all.sorted.takeRight(50).toSeq,
+        s"route $r: retained ids are not the newest 50")
+  }
+
   private def filesUnder(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
     val st = Files.walk(dir)
     try { import scala.jdk.CollectionConverters._; st.iterator.asScala.toVector }
