@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR
   * and emits ONE JSON line (stdout) plus a file copy (BENCH.json or
-  * $SPARK_GRAFT_BENCH_OUT) so the driver's parse is log-format
+  * \$SPARK_GRAFT_BENCH_OUT) so a reader of the record is log-format
   * independent. A failing query records an "errors" entry instead of
   * masquerading as a fast timing.
   *

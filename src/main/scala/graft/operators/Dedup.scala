@@ -156,7 +156,7 @@ object Dedup {
     * frame. Narrow end to end (split → native signature → explode), so
     * it works on a STREAMING frame too — the per-micro-batch half of
     * the stream-static incremental dedup
-    * ([[graft.streaming.DocStreams.incrementalMatches]]). */
+    * ([[graft.streaming.DocStreams.incrementalMatches(spark:org\.apache\.spark\.sql\.SparkSession,streamDir:String,corpusIndex:org\.apache\.spark\.sql\.DataFrame):org\.apache\.spark\.sql\.DataFrame* DocStreams.incrementalMatches]]). */
   def bandsOf(spark: SparkSession, docs: DataFrame): DataFrame =
     explodeBands(minhashSigOf(spark, shingled(docs), carrySh = false), Nil)
 

@@ -444,7 +444,7 @@ object Retrieval {
     * statement about the label, not the ranker.)
     *
     * Scale shape: the label is ONE narrow per-doc projection (coverage
-    * = array_intersect vs the literal term array, phrase = padded
+    * is array_intersect vs the literal term array, phrase a padded
     * contains — no explode-join, no shuffle); the ideal ranking is a
     * `row_number ≤ k` per query over the matched rows (WindowGroupLimit
     * — k rows per partition cross the wire); the ranked pool is

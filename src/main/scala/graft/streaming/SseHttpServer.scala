@@ -211,7 +211,7 @@ class SseHttpServer(spark: SparkSession, dir: String,
       // close and heartbeat checks still run at least every PollWaitMs
       val frame = sub.poll(PollWaitMs)
       if (frame != null) {
-        os.write(frame.getBytes(UTF_8))
+        os.write(frame)
         os.flush()
         lastWrite = System.currentTimeMillis()
       } else if (sub.isClosed || !hub.isIngesting) {

@@ -1,7 +1,8 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.nio.file.{Files, Path => JPath}
-import java.util.concurrent.{ConcurrentSkipListMap, TimeUnit}
+import java.util.concurrent.TimeUnit
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.concurrent.TrieMap
@@ -67,13 +68,6 @@ class SseHub(spark: SparkSession, dir: String,
 
   private val hubId = hubIds.incrementAndGet()
 
-  /** One bounded offset-sorted log per route (the reference's
-    * per-route memlog). `size` is maintained under `lock`: skip-list
-    * size() is O(n). */
-  private final class RouteRing {
-    val ring = new ConcurrentSkipListMap[Long, Entry]()
-    var size = 0
-  }
   private val rings = TrieMap.empty[String, RouteRing]
   private def capacityFor(route: String): Int =
     routeCapacities.getOrElse(route, capacity)
@@ -98,7 +92,7 @@ class SseHub(spark: SparkSession, dir: String,
       checkpoint = Some(ckpt)
       val q = EventStreams.readEvents(spark, dir)
         .select(col("event_id"), col("event_type"), col("ts"),
-          EventLogOps.sseFrameCol(col("ts_us"), col("props")).as("frame"))
+          EventLogOps.sseFrameCol(col("ts_us"), col("props")).cast("binary").as("frame"))
         .writeStream
         .foreach(new HubWriter(hubId))
         .option("checkpointLocation", ckpt.toString)
@@ -162,16 +156,14 @@ class SseHub(spark: SparkSession, dir: String,
 
   /** Offset span retained across ALL routes (diagnostics). */
   def retainedRange: Option[(Long, Long)] = lock.synchronized {
-    val nonEmpty = rings.values.filter(!_.ring.isEmpty)
+    val nonEmpty = rings.values.filter(_.size > 0)
     if (nonEmpty.isEmpty) None
-    else Some((nonEmpty.map(_.ring.firstKey()).min,
-      nonEmpty.map(_.ring.lastKey()).max))
+    else Some((nonEmpty.map(_.offset(0)).min, nonEmpty.map(_.lastOffset).max))
   }
 
   /** Offset span retained for one route's bounded log. */
   def retainedRange(route: String): Option[(Long, Long)] = lock.synchronized {
-    rings.get(route).filter(!_.ring.isEmpty)
-      .map(r => (r.ring.firstKey(), r.ring.lastKey()))
+    rings.get(route).filter(_.size > 0).map(r => (r.offset(0), r.lastOffset))
   }
 
   /** In-memory timestamp→offset seek over the route's retained ring
@@ -193,26 +185,17 @@ class SseHub(spark: SparkSession, dir: String,
     * offset follows the resolved one is delivered; one whose ts is
     * at/after the instant but whose offset precedes it (a late
     * arrival) is not. The seek sees only what the ring retains, so an
-    * instant before the oldest retained event resolves to that event. */
+    * instant before the oldest retained event resolves to that event.
+    * The seek scans the ring's ts array in offset order. */
   def resolveSinceOffset(route: String, sinceNs: Long): Long = lock.synchronized {
-    rings.get(route).filter(!_.ring.isEmpty) match {
-      case Some(r) =>
-        var fwd = Long.MinValue
-        val it = r.ring.values().iterator()
-        while (it.hasNext && fwd == Long.MinValue) {
-          val e = it.next()
-          if (e.ts >= sinceNs) fwd = e.offset
-        }
-        (if (fwd != Long.MinValue) fwd else r.ring.lastKey()) - 1
-      case None => Long.MinValue
-    }
+    rings.get(route).filter(_.size > 0)
+      .fold(Long.MinValue)(_.resolveSince(sinceNs) - 1)
   }
 
   /** Latest retained offset for `route` (absent-`since` live tails);
     * empty ring → everything is new. */
   def latestOffset(route: String): Long = lock.synchronized {
-    rings.get(route).filter(!_.ring.isEmpty)
-      .map(_.ring.lastKey()).getOrElse(Long.MinValue)
+    rings.get(route).filter(_.size > 0).fold(Long.MinValue)(_.lastOffset)
   }
 
   /** Subscribe a client at its own seek position: frames with offset
@@ -220,89 +203,249 @@ class SseHub(spark: SparkSession, dir: String,
     * SNAPSHOTTED (not pushed into the live queue, whose bound exists
     * for slow LIVE consumers — a replay bigger than the bound must
     * not kill the client before it reads a byte) and served first by
-    * `Subscription.poll`; later arrivals follow live. Snapshot and
-    * registration happen under the append lock, so no frame is lost
-    * or doubled at the hand-over point. */
+    * `Subscription.poll`; later arrivals follow live. The snapshot
+    * shares the ring's frame arrays. Snapshot and registration happen
+    * under the append lock, so no frame is lost or doubled at the
+    * hand-over point. */
   def subscribe(route: String, afterOffset: Long = Long.MinValue): Subscription =
     lock.synchronized {
       val id = subIds.incrementAndGet()
-      val replay = Vector.newBuilder[String]
-      rings.get(route).foreach { r =>
-        val it = r.ring.tailMap(afterOffset, false).values.iterator()
-        while (it.hasNext) { val e = it.next(); replay += idFrame(e.offset, e.frame) }
+      val replay = rings.get(route).fold(Array.empty[Array[Byte]]) { r =>
+        val from = r.indexAfter(afterOffset)
+        Array.tabulate(r.size - from)(i => r.frame(from + i))
       }
       val sub = new Subscription(id, this, route, afterOffset,
-        replay.result(), new BoundedQueue(maxQueuedFrames))
+        replay, new BoundedQueue(maxQueuedFrames))
       subs.put(id, sub)
       sub
     }
 
   private[streaming] def unsubscribe(id: Long): Unit = subs.remove(id)
 
-  private[graft] def append(offset: Long, route: String, ts: Long,
-                            frame: String): Unit =
+  /** Append the first `n` rows of a chunk (parallel arrays; `frames`
+    * are the bare frames, without the `id:` line). The rows are
+    * grouped by route and each route's run is merged into its ring in
+    * offset order, under one lock acquisition for the whole chunk. The
+    * result equals appending the rows one at a time in that order:
+    * each ring keeps its newest `capacity` distinct offsets, and only
+    * an offset the ring does not hold fans out — the foreach sink is
+    * at-least-once, and a retried batch must not double-deliver. An
+    * offset older than a full ring is delivered but not stored, once
+    * per chunk however often the chunk repeats it. */
+  private[graft] def append(offsets: Array[Long], routes: Array[String],
+                            ts: Array[Long], frames: Array[Array[Byte]],
+                            n: Int): Unit = {
+    val order = Array.range(0, n).sorted(Ordering.fromLessThan[Int] { (a, b) =>
+      val c = RouteOrder.compare(routes(a), routes(b))
+      c < 0 || c == 0 && offsets(a) < offsets(b)
+    })
+    val fresh = new Fresh(n)
     lock.synchronized {
-      val r = rings.getOrElseUpdate(route, new RouteRing)
-      val first = r.ring.put(offset, Entry(offset, ts, frame)) == null
-      if (first) {
-        r.size += 1
-        val cap = capacityFor(route)
-        while (r.size > cap) { r.ring.pollFirstEntry(); r.size -= 1 }
-        // fan out only first-time offsets: the foreach sink is
-        // at-least-once, and a retried batch must not double-deliver
-        subs.values.foreach { s =>
-          if (s.route == route && offset > s.afterOffset)
-            s.queue.add(SseHub.idFrame(offset, frame))
+      var from = 0
+      while (from < n) {
+        val route = routes(order(from))
+        var until = from + 1
+        while (until < n && routes(order(until)) == route) until += 1
+        rings.getOrElseUpdate(route, new RouteRing(capacityFor(route)))
+          .merge(offsets, ts, frames, order, from, until, fresh)
+        if (fresh.n > 0) subs.values.foreach { s =>
+          if (s.route == route) {
+            var i = 0
+            while (i < fresh.n) {
+              if (fresh.offsets(i) > s.afterOffset) s.queue.add(fresh.frames(i))
+              i += 1
+            }
+          }
         }
+        from = until
       }
     }
+  }
 
   // One lock serializes append/subscribe/seek for exact replay
-  // hand-over. It is taken once per ROW (HubWriter.process appends
-  // each row), from the micro-batch's task threads; the critical
-  // section is a skip-list insert plus a queue offer per matching
+  // hand-over. It is taken once per CHUNK of up to ChunkRows rows
+  // (HubWriter buffers a task's rows), from the micro-batch's task
+  // threads; the critical section merges each route's run into its
+  // ring and offers every first-time frame to each matching
   // subscriber. A production hub would shard it by route.
   private val lock = new Object
 }
 
 object SseHub {
-  private[streaming] case class Entry(offset: Long, ts: Long, frame: String)
+  /** Rows a [[HubWriter]] buffers before it appends them as a chunk. */
+  private val ChunkRows = 512
+
+  private val RouteOrder =
+    java.util.Comparator.nullsFirst(java.util.Comparator.naturalOrder[String]())
 
   /** Delivered frames carry the SSE `id:` field (offset = event id) so
-    * a client can resume with `Last-Event-ID` after a drop — the ring
-    * stores the bare frame once and the id line is prepended at
-    * delivery, where the offset is in hand anyway. */
-  private[streaming] def idFrame(offset: Long, frame: String): String =
-    "id: " + offset + "\n" + frame
+    * a client can resume with `Last-Event-ID` after a drop. The ring
+    * builds the delivered bytes once, when an offset it does not hold
+    * arrives: `id: <offset>\n` prepended to the frame's bytes. Every
+    * replay and live delivery writes that array as it is. */
+  private[streaming] def idFrame(offset: Long, frame: Array[Byte]): Array[Byte] = {
+    val id = ("id: " + offset + "\n").getBytes(US_ASCII)
+    val body = if (frame == null) Array.emptyByteArray else frame
+    val out = java.util.Arrays.copyOf(id, id.length + body.length)
+    System.arraycopy(body, 0, out, id.length, body.length)
+    out
+  }
+
+  /** The first-time rows of one route's run, in offset order, with
+    * their delivered frames: what [[RouteRing.merge]] hands the
+    * fan-out. */
+  private final class Fresh(cap: Int) {
+    val offsets = new Array[Long](cap)
+    val ts = new Array[Long](cap)
+    val frames = new Array[Array[Byte]](cap)
+    var n = 0
+  }
+
+  /** One route's bounded log (the reference's per-route memlog): at
+    * most `cap` entries in strictly increasing offset order, held in a
+    * circular set of primitive arrays that grow by doubling up to
+    * `cap`. An entry's frame is its delivered bytes ([[idFrame]]),
+    * shared with every snapshot and queue that delivers it. Guarded
+    * by the hub's lock. */
+  private final class RouteRing(cap: Int) {
+    private var offs = new Array[Long](math.min(cap, 16))
+    private var tss = new Array[Long](offs.length)
+    private var frames = new Array[Array[Byte]](offs.length)
+    private var head = 0
+    var size = 0
+
+    private def at(i: Int): Int = {
+      val p = head + i
+      if (p >= offs.length) p - offs.length else p
+    }
+    def offset(i: Int): Long = offs(at(i))
+    def lastOffset: Long = offset(size - 1)
+    def frame(i: Int): Array[Byte] = frames(at(i))
+    private def ts(i: Int): Long = tss(at(i))
+
+    /** The first index whose offset is greater than `off` (`size` if
+      * none). */
+    def indexAfter(off: Long): Int = {
+      var lo = 0
+      var hi = size
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (offset(mid) <= off) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
+    /** The `since` rule on a non-empty ring: the smallest offset with
+      * ts at/after `sinceNs`, else the largest. */
+    def resolveSince(sinceNs: Long): Long = {
+      var i = 0
+      while (i < size && ts(i) < sinceNs) i += 1
+      offset(math.min(i, size - 1))
+    }
+
+    /** Merge the chunk rows `order(from until until)` (one route, in
+      * offset order) and leave the first-time ones in `fresh`. The run
+      * is merged, never inserted row by row: the retained entries above
+      * its first new offset are popped, then both sorted runs are
+      * pushed back in order, each push onto a full ring evicting the
+      * oldest entry. */
+    def merge(chunkOffsets: Array[Long], chunkTs: Array[Long],
+              chunkFrames: Array[Array[Byte]], order: Array[Int],
+              from: Int, until: Int, fresh: Fresh): Unit = {
+      fresh.n = 0
+      var k = from
+      while (k < until) {
+        val r = order(k)
+        val off = chunkOffsets(r)
+        val i = indexAfter(off)
+        if ((fresh.n == 0 || fresh.offsets(fresh.n - 1) != off) &&
+            (i == 0 || offset(i - 1) != off)) {
+          fresh.offsets(fresh.n) = off
+          fresh.ts(fresh.n) = chunkTs(r)
+          fresh.frames(fresh.n) = idFrame(off, chunkFrames(r))
+          fresh.n += 1
+        }
+        k += 1
+      }
+      // a full ring never keeps an offset below its oldest one
+      var s = 0
+      if (size == cap) while (s < fresh.n && fresh.offsets(s) < offs(head)) s += 1
+      if (s == fresh.n) return
+      val p = indexAfter(fresh.offsets(s))
+      val t = size - p
+      val tOffs = Array.tabulate(t)(j => offset(p + j))
+      val tTs = Array.tabulate(t)(j => ts(p + j))
+      val tFrames = Array.tabulate(t)(j => frame(p + j))
+      while (size > p) popBack()
+      var j = 0
+      while (s < fresh.n || j < t) {
+        if (j == t || s < fresh.n && fresh.offsets(s) < tOffs(j)) {
+          pushBack(fresh.offsets(s), fresh.ts(s), fresh.frames(s)); s += 1
+        } else {
+          pushBack(tOffs(j), tTs(j), tFrames(j)); j += 1
+        }
+      }
+    }
+
+    private def pushBack(off: Long, t: Long, f: Array[Byte]): Unit = {
+      if (size == cap) popFront()
+      else if (size == offs.length) grow()
+      val p = at(size)
+      offs(p) = off; tss(p) = t; frames(p) = f
+      size += 1
+    }
+
+    private def popFront(): Unit = {
+      frames(head) = null
+      head = at(1)
+      size -= 1
+    }
+
+    private def popBack(): Unit = {
+      frames(at(size - 1)) = null
+      size -= 1
+    }
+
+    private def grow(): Unit = {
+      val len = math.min(cap, offs.length * 2)
+      val o = new Array[Long](len)
+      val t = new Array[Long](len)
+      val f = new Array[Array[Byte]](len)
+      var i = 0
+      while (i < size) { o(i) = offset(i); t(i) = ts(i); f(i) = frame(i); i += 1 }
+      offs = o; tss = t; frames = f; head = 0
+    }
+  }
 
   /** Handle a client holds: replay-then-live frame source + close.
     * `poll` drains the replay snapshot first (unbounded by the live
     * queue's cap — it is already bounded by ring capacity), then the
-    * live queue. */
+    * live queue. Frames are the bytes a socket writes. */
   final class Subscription private[streaming] (
       val id: Long, hub: SseHub,
       private[streaming] val route: String,
       private[streaming] val afterOffset: Long,
-      replaySnapshot: Vector[String],
+      replaySnapshot: Array[Array[Byte]],
       private[streaming] val queue: BoundedQueue) {
     private var replayAt = 0 // handler-thread-confined
     @volatile private var closedFlag = false
 
     /** Next frame, or null if none pending. */
-    def poll(): String = poll(0L)
+    def poll(): Array[Byte] = poll(0L)
 
     /** Next frame, waiting up to `waitMs` for a live one to arrive;
       * null if none came. A serving loop waits here instead of
       * sleeping, so a frame is handed over the moment it is appended. */
-    def poll(waitMs: Long): String =
+    def poll(waitMs: Long): Array[Byte] =
       if (replayAt < replaySnapshot.length) {
         val f = replaySnapshot(replayAt); replayAt += 1; f
       } else queue.poll(waitMs)
 
+    /** Every pending frame, decoded. */
     def drain(): Seq[String] = {
       val out = Vector.newBuilder[String]
       var f = poll()
-      while (f != null) { out += f; f = poll() }
+      while (f != null) { out += new String(f, UTF_8); f = poll() }
       out.result()
     }
 
@@ -319,10 +462,10 @@ object SseHub {
     * than growing the heap (the serving layer turns that into a
     * disconnect, as [[SseHttpServer]] does). */
   private[streaming] final class BoundedQueue(cap: Int) {
-    private val q = new java.util.concurrent.LinkedBlockingQueue[String](cap)
+    private val q = new java.util.concurrent.LinkedBlockingQueue[Array[Byte]](cap)
     @volatile var overflowed = false
-    def add(frame: String): Unit = if (!q.offer(frame)) overflowed = true
-    def poll(waitMs: Long): String = q.poll(waitMs, TimeUnit.MILLISECONDS)
+    def add(frame: Array[Byte]): Unit = if (!q.offer(frame)) overflowed = true
+    def poll(waitMs: Long): Array[Byte] = q.poll(waitMs, TimeUnit.MILLISECONDS)
     def size: Int = q.size()
   }
 
@@ -332,11 +475,35 @@ object SseHub {
   private val subIds = new AtomicLong(0L)
   private val hubs = TrieMap.empty[Long, SseHub]
 
+  /** Buffers a task's rows and appends them a chunk of up to
+    * [[ChunkRows]] at a time, so the hub's lock is taken once per
+    * chunk, not once per row. */
   private final class HubWriter(hubId: Long) extends ForeachWriter[Row] {
-    override def open(partitionId: Long, epochId: Long): Boolean = true
-    override def process(r: Row): Unit =
-      hubs.get(hubId).foreach(
-        _.append(r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
-    override def close(errorOrNull: Throwable): Unit = ()
+    private var offsets: Array[Long] = _
+    private var routes: Array[String] = _
+    private var ts: Array[Long] = _
+    private var frames: Array[Array[Byte]] = _
+    private var n = 0
+
+    override def open(partitionId: Long, epochId: Long): Boolean = {
+      offsets = new Array[Long](ChunkRows)
+      routes = new Array[String](ChunkRows)
+      ts = new Array[Long](ChunkRows)
+      frames = new Array[Array[Byte]](ChunkRows)
+      n = 0
+      true
+    }
+    override def process(r: Row): Unit = {
+      offsets(n) = r.getLong(0); routes(n) = r.getString(1)
+      ts(n) = r.getLong(2); frames(n) = r.getAs[Array[Byte]](3)
+      n += 1
+      if (n == ChunkRows) flush()
+    }
+    override def close(errorOrNull: Throwable): Unit = flush()
+
+    private def flush(): Unit = {
+      if (n > 0) hubs.get(hubId).foreach(_.append(offsets, routes, ts, frames, n))
+      n = 0
+    }
   }
 }

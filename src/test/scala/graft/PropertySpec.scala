@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TopK
@@ -124,6 +129,11 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** One row appended as a chunk of one. */
+  private def appendRow(hub: SseHub, offset: Long, route: String, ts: Long,
+                        frame: String): Unit =
+    hub.append(Array(offset), Array(route), Array(ts), Array(frame.getBytes(UTF_8)), 1)
+
   test("SseHub.append: keeps exactly the newest-N distinct offsets") {
     val rnd = new scala.util.Random(11)
     for (_ <- 1 to 200) {
@@ -133,11 +143,77 @@ class PropertySpec extends AnyFunSuite {
       // append/subscribe are the ring alone: no ingest starts, so the
       // hub needs no session
       val hub = new SseHub(null, "", capacity = cap)
-      offs.foreach(o => hub.append(o, "r", o * 10, s"data: $o\n\n"))
+      offs.foreach(o => appendRow(hub, o, "r", o * 10, s"data: $o\n\n"))
       val retained = hub.subscribe("r").drain()
         .map(_.linesIterator.next().stripPrefix("id: ").toLong)
       val expected = offs.distinct.sorted(Ordering[Long].reverse).take(cap)
       assert(retained == expected.reverse)
+    }
+  }
+
+  test("SseHub.append: random chunks match a per-row model of the ring") {
+    // The model is the per-row rule, applied to each chunk's distinct
+    // (route, offset) rows in offset order: an offset the route's log
+    // does not hold is stored and fans out, then the log drops its
+    // oldest offsets down to the route's capacity. Chunks repeat
+    // offsets within and across chunks, and arrive out of order
+    // across chunks.
+    val rnd = new scala.util.Random(23)
+    val routes = Seq("a", "b")
+    def frameOf(o: Long) = s"data: {\"k\":\"$o\u00e9\"}\n\n".getBytes(UTF_8)
+    def bytesOf(sub: SseHub.Subscription): Seq[Seq[Byte]] =
+      Iterator.continually(sub.poll()).takeWhile(_ != null).map(_.toSeq).toSeq
+    def idOf(frame: Seq[Byte]): Long =
+      new String(frame.toArray, UTF_8).linesIterator.next().stripPrefix("id: ").toLong
+    def modelSince(log: java.util.TreeMap[Long, Long], instant: Long): Long =
+      if (log.isEmpty) Long.MinValue
+      else log.asScala.collectFirst { case (o, t) if t >= instant => o }
+        .getOrElse(log.lastKey()) - 1
+    final case class Client(route: String, after: Long, sub: SseHub.Subscription,
+                            want: ArrayBuffer[Long])
+    for (trial <- 1 to 300) {
+      val caps = Map("a" -> (1 + rnd.nextInt(10)), "b" -> (1 + rnd.nextInt(10)))
+      val inOrder = trial % 2 == 0
+      // in-order: ts rises with the offset; otherwise shuffled, with ties
+      val tsOf = Array.tabulate(40)(o => if (inOrder) o * 10L else rnd.nextInt(40) * 10L)
+      val hub = new SseHub(null, "", capacity = caps("a"),
+        routeCapacities = Map("b" -> caps("b")))
+      val model = routes.map(_ -> new java.util.TreeMap[Long, Long]()).toMap
+      val clients = ArrayBuffer.empty[Client]
+      def connect(): Unit = {
+        val route = routes(rnd.nextInt(2))
+        val after = if (rnd.nextInt(4) == 0) Long.MinValue else rnd.nextInt(44) - 2L
+        clients += Client(route, after, hub.subscribe(route, after),
+          model(route).tailMap(after, false).keySet.asScala.to(ArrayBuffer))
+      }
+      (1 to 3).foreach(_ => connect())
+      for (_ <- 1 to 1 + rnd.nextInt(8)) {
+        val n = rnd.nextInt(13)
+        val offs = Array.fill(n)(rnd.nextInt(40).toLong)
+        val rs = Array.fill(n)(routes(rnd.nextInt(2)))
+        hub.append(offs, rs, offs.map(o => tsOf(o.toInt)), offs.map(frameOf), n)
+        for (i <- (0 until n).distinctBy(i => (rs(i), offs(i))).sortBy(offs(_))) {
+          val (o, log) = (offs(i), model(rs(i)))
+          if (!log.containsKey(o)) {
+            log.put(o, tsOf(o.toInt))
+            clients.foreach(c => if (c.route == rs(i) && o > c.after) c.want += o)
+            while (log.size > caps(rs(i))) log.pollFirstEntry()
+          }
+        }
+        for (r <- routes; _ <- 1 to 3) {
+          val instant = rnd.nextInt(440) - 20L
+          assert(hub.resolveSinceOffset(r, instant) == modelSince(model(r), instant),
+            s"trial $trial: since $instant on $r")
+        }
+        if (rnd.nextInt(3) == 0) connect()
+      }
+      for (r <- routes) {
+        val want = model(r).keySet.asScala.toSeq.map(o =>
+          (s"id: $o\n".getBytes(UTF_8) ++ frameOf(o)).toSeq)
+        assert(bytesOf(hub.subscribe(r)) == want, s"trial $trial: route $r retained")
+      }
+      clients.foreach(c => assert(bytesOf(c.sub).map(idOf) == c.want,
+        s"trial $trial: client on ${c.route} after ${c.after}"))
     }
   }
 }
