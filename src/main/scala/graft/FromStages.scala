@@ -97,7 +97,7 @@ final class FromStages(spark: SparkSession, sfDir: String) {
   // F8's stored corpus: at a deployment the clips are BYTES ON DISK;
   // the persist is the untimed synthesis of that corpus
   lazy val vidBlobs: DataFrame = persist("vid_blobs",
-    VideoDedup.videoTable(spark, sfDir).toDF)
+    VideoDedup.videoTable(spark, sfDir).toDF())
 
   // ------------------------------------------- I4 / O4 / Y5 / T1 state
   lazy val semAssigned: DataFrame = persist("sem_assigned", {

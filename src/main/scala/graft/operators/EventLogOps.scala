@@ -330,39 +330,27 @@ object EventLogOps {
   // ---------------------------------------------------------------- A6
   /** SSE frame `data: {"time":"<RFC3339-µs>","detail":<json>}\n\n` —
     * byte-compatible with service.go:271's `data: %s\n\n`. THE single
-    * source of the frame format: the batch projection, the service
-    * facade, and the streaming sink all use this column. Assembled
-    * with concat (not to_json) so the bytes are engine-independent. */
-  def sseFrameCol(tsUs: Column, detail: Column): Column = {
-    // Wall-clock fields derived arithmetically from µs-since-epoch, so
-    // the 'Z'-labeled rendering is correct in ANY session timezone
-    // (date_format renders in the session zone — a non-UTC caller
-    // would emit frames labeled UTC containing local time). Double
-    // division is exact here: µs values stay under 2^53 until ~2255.
-    val us = unix_micros(tsUs)
-    val day = floor(us / 86400000000L)
-    val rem = us - day * 86400000000L
-    val h = floor(rem / 3600000000L)
-    val m = floor(pmod(rem, lit(3600000000L)) / 60000000L)
-    val s = floor(pmod(rem, lit(60000000L)) / 1000000L)
-    def p2(c: Column) = lpad(c.cast("string"), 2, "0")
-    concat(
-      lit("data: {\"time\":\""),
-      date_format(date_add(to_date(lit("1970-01-01")), day.cast("int")), "yyyy-MM-dd"),
-      lit("T"), p2(h), lit(":"), p2(m), lit(":"), p2(s),
-      lit("."), lpad(pmod(us, lit(1000000L)).cast("string"), 6, "0"), lit("Z"),
-      lit("\",\"detail\":"), detail, lit("}\n\n"))
+    * source of the frame format: the batch projection ([[sseFrames]])
+    * and the hub's ingest (`graft.streaming.SseHub.start`) both use
+    * this column. It is one `graft_sse_frame` node
+    * ([[graft.plans.SseFrameOps]]): the frame is written in one pass
+    * by exact integer arithmetic in UTC, so it is the same in every
+    * session time zone and needs no formatter or intermediate string.
+    * Null when either input is null. */
+  def sseFrameCol(spark: SparkSession, tsUs: Column, detail: Column): Column = {
+    graft.plans.GraftFunctions.register(spark)
+    call_function("graft_sse_frame", tsUs, detail)
   }
 
   /** SSE frame projection (service.go:271).
     *
     * Same shape as [[parse]]: range-partition the RAW scan first, sort
     * within partitions, then project — output is still totally ordered
-    * (contiguous ranges in partition order), but the heavy per-row
-    * frame concat runs on every core instead of serializing behind a
+    * (contiguous ranges in partition order), but the per-row frame
+    * building runs on every core instead of serializing behind a
     * single-split scan + trailing sort (the documented local
     * single-split narrow-op pattern; a trailing orderBy also made the
-    * range sampler re-evaluate the concat for a second pass).
+    * range sampler build every frame a second time).
     *
     * ORDERING CONTRACT: the plan carries no logical Sort — rows are
     * ordered only under partition-order consumption (collect,
@@ -376,7 +364,7 @@ object EventLogOps {
       .repartitionByRange(col("event_id"))
       .sortWithinPartitions("event_id")
       .select(col("event_id"),
-        sseFrameCol(col("ts_us"), col("props")).as("frame"))
+        sseFrameCol(spark, col("ts_us"), col("props")).as("frame"))
 
   val sseFramesSql: String =
     """SELECT event_id,

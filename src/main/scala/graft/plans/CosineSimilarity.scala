@@ -363,11 +363,16 @@ object GraftFunctions {
     (children: Seq[Expression]) => MinIds(
       children(0), litInt(children(1), "graft_min_ids cap")): Expression)
 
+  private val sseFrameDesc = (
+    FunctionIdentifier("graft_sse_frame"),
+    new ExpressionInfo(classOf[SseFrame].getName, null, "graft_sse_frame"),
+    (children: Seq[Expression]) => SseFrame(children(0), children(1)): Expression)
+
   private val all = Seq(cosineDesc, srpDesc, minhashDesc, simhashDesc,
     pqEncodeDesc, shinglesDesc, gramStatsDesc, gramBucketsDesc,
     mightContainDesc, sortedExceptDesc, bpeCountDesc, bpeEncodeDesc,
     bitPackDesc, nbScoresDesc, winnowFpDesc, lmScoreDesc, minIdsDesc,
-    lutSumDesc, charGramsDesc, centBestDesc, centTopNDesc)
+    lutSumDesc, charGramsDesc, centBestDesc, centTopNDesc, sseFrameDesc)
 
   /** Idempotent per-session registration (for sessions built without
     * the extensions config). */

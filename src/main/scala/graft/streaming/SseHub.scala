@@ -92,7 +92,7 @@ class SseHub(spark: SparkSession, dir: String,
       checkpoint = Some(ckpt)
       val q = EventStreams.readEvents(spark, dir)
         .select(col("event_id"), col("event_type"), col("ts"),
-          EventLogOps.sseFrameCol(col("ts_us"), col("props")).cast("binary").as("frame"))
+          EventLogOps.sseFrameCol(spark, col("ts_us"), col("props")).cast("binary").as("frame"))
         .writeStream
         .foreach(new HubWriter(hubId))
         .option("checkpointLocation", ckpt.toString)
@@ -235,10 +235,7 @@ class SseHub(spark: SparkSession, dir: String,
   private[graft] def append(offsets: Array[Long], routes: Array[String],
                             ts: Array[Long], frames: Array[Array[Byte]],
                             n: Int): Unit = {
-    val order = Array.range(0, n).sorted(Ordering.fromLessThan[Int] { (a, b) =>
-      val c = RouteOrder.compare(routes(a), routes(b))
-      c < 0 || c == 0 && offsets(a) < offsets(b)
-    })
+    val order = chunkOrder(routes, offsets, n)
     val fresh = new Fresh(n)
     lock.synchronized {
       var from = 0
@@ -275,8 +272,47 @@ object SseHub {
   /** Rows a [[HubWriter]] buffers before it appends them as a chunk. */
   private val ChunkRows = 512
 
-  private val RouteOrder =
-    java.util.Comparator.nullsFirst(java.util.Comparator.naturalOrder[String]())
+  /** The chunk's row indices `0 until n` grouped by route (routes in
+    * order of first appearance) and ordered by offset within a route,
+    * rows of equal route and offset in chunk order. Each row gets its
+    * route's rank, then a stable bottom-up merge sort orders the
+    * indices by (rank, offset) on primitive arrays, boxing nothing per
+    * row. */
+  private def chunkOrder(routes: Array[String], offsets: Array[Long],
+                         n: Int): Array[Int] = {
+    val ranks = new java.util.HashMap[String, Integer]()
+    val rank = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      var r = ranks.get(routes(i))
+      if (r == null) { r = ranks.size; ranks.put(routes(i), r) }
+      rank(i) = r
+      i += 1
+    }
+    def before(a: Int, b: Int): Boolean =
+      rank(a) < rank(b) || rank(a) == rank(b) && offsets(a) < offsets(b)
+    var src = Array.range(0, n)
+    var dst = new Array[Int](n)
+    var width = 1
+    while (width < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + width, n)
+        val hi = math.min(lo + 2 * width, n)
+        var l = lo; var r = mid; var k = lo
+        while (k < hi) {
+          // the left run wins ties, so equal keys keep chunk order
+          if (r == hi || l < mid && !before(src(r), src(l))) { dst(k) = src(l); l += 1 }
+          else { dst(k) = src(r); r += 1 }
+          k += 1
+        }
+        lo = hi
+      }
+      val t = src; src = dst; dst = t
+      width *= 2
+    }
+    src
+  }
 
   /** Delivered frames carry the SSE `id:` field (offset = event id) so
     * a client can resume with `Last-Event-ID` after a drop. The ring

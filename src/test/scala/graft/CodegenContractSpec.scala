@@ -122,7 +122,9 @@ class CodegenContractSpec extends SparkSpec {
         array(bpeWords.map(lit(_)): _*),
         array(bpeOffsets.map(lit(_)): _*),
         array(bpeIds.map(lit(_)): _*),
-        array(bpePieces.map(lit(_)): _*)).as("be"))
+        array(bpePieces.map(lit(_)): _*)).as("be"),
+      call_function("graft_sse_frame",
+        timestamp_micros(col("id") * -86399999999L), col("text")).as("sse"))
       .orderBy("id")
   }
 

@@ -127,6 +127,50 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"))
   }
 
+  test("SSE frames: one graft_sse_frame inside whole-stage codegen, batch and hub ingest") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+    // the nodes one codegen stage compiles: its subtree above the
+    // InputAdapters that feed it
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(stage)
+    }
+    def named(ps: Seq[SparkPlan], names: Set[String]): Seq[Expression] =
+      ps.flatMap(_.expressions.flatMap(_.collect {
+        case e if names.contains(e.prettyName) => e
+      }))
+    def check(what: String, plan: SparkPlan): Unit = {
+      val all = nodes(plan)
+      val stages = all.collect { case w: WholeStageCodegenExec => w }
+        .filter(w => named(stage(w.child), Set("graft_sse_frame")).nonEmpty)
+      assert(named(all, Set("graft_sse_frame")).size == 1 && stages.size == 1,
+        s"$what: not exactly one graft_sse_frame, inside whole-stage codegen:\n$plan")
+      // a stage whose source Janino rejects runs interpreted, silently
+      CodeGenerator.compile(stages.head.doCodeGen()._2)
+      val old = named(all, Set("lpad", "date_format", "concat"))
+      assert(old.isEmpty, s"$what: frame built from ${old.map(_.prettyName)}:\n$plan")
+    }
+    val df = EventLogOps.sseFrames(spark, sfDir)
+    df.collect() // force AQE to finalize
+    check("sseFrames", df.queryExecution.executedPlan)
+    val hub = new graft.streaming.SseHub(spark, sfDir)
+    try {
+      val q = hub.start().asInstanceOf[StreamingQueryWrapper].streamingQuery
+      assert(q.lastExecution != null, "hub ingest ran no batch")
+      check("hub ingest", q.lastExecution.executedPlan)
+    } finally hub.stop()
+  }
+
   test("embedding dedup evaluates the native SRP sketch, not a generated term chain") {
     val plan = finalPlan(graft.operators.Dedup.embeddingNearDup(spark, sfDir))
     assert(plan.contains("graft_srp_sketch"), s"native sketch missing:\n$plan")
