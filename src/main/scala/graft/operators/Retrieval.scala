@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -475,7 +477,7 @@ object Retrieval {
           val terms = q.split(" ").distinct
           val t = q.split(" ")
           val cov = size(array_intersect(toks,
-            array(terms.map(lit(_)): _*))) === terms.length
+            array(ArraySeq.unsafeWrapArray(terms.map(lit(_))): _*))) === terms.length
           struct(lit(qid).as("query_id"),
             when(padded.contains(s" ${t(0)} ${t(1)} "), 2L)
               .when(cov, 1L).otherwise(0L).as("rel"))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -205,7 +207,7 @@ object SemanticDedup {
     * spaces, not routing). */
   private[graft] def assignTo(spark: SparkSession, emb: DataFrame,
                               cents: DataFrame): DataFrame =
-    assignToLiteral(spark, emb, centRowsOf(cents))
+    assignToLiteral(spark, emb, ArraySeq.unsafeWrapArray(centRowsOf(cents)))
 
   /** Top-`n` centroid ids per row against a COLLECTED centroid frame
     * (column 0: Int id, column 1: the embedding) via the fused

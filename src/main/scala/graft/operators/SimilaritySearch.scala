@@ -943,11 +943,11 @@ object SimilaritySearch {
     * `code` column in scope; `off` selects a slice of a flattened
     * multi-LUT array (0 for a single-LUT array). Same left-fold
     * order — bit-identical sums. */
-  private def adcLutSum(spark: SparkSession, model: PqModel, lut: Seq[Double],
+  private def adcLutSum(spark: SparkSession, model: PqModel, lut: Array[Double],
                         off: Column = lit(0)): Column = {
     graft.plans.GraftFunctions.register(spark)
     call_function("graft_lut_sum", col("code"), off,
-      lit(lut.toArray), lit(model.k))
+      lit(lut), lit(model.k))
   }
 
   /** ADC score column; requires `code`, `qidx`, `q_norm` in scope.
@@ -956,7 +956,7 @@ object SimilaritySearch {
     * gains |c|² + 2c·r̂ (the cross term is the per-centroid LUT sum
     * a caller passes via `normBase`). */
   private def adcScore(spark: SparkSession, model: PqModel,
-                       dotFlat: Seq[Double], normLut: Seq[Double],
+                       dotFlat: Array[Double], normLut: Array[Double],
                        dotBase: Column = lit(0.0),
                        normBase: Column = lit(0.0)): Column =
     (dotBase + adcLutSum(spark, model, dotFlat,

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -183,7 +185,7 @@ object Tables {
     (name, pdir) match {
       case ("events", Some(p)) =>
         eventsPartitionedRaw(spark, p)
-          .select(eventsRawSchema.fieldNames.map(col): _*)
+          .select(ArraySeq.unsafeWrapArray(eventsRawSchema.fieldNames.map(col)): _*)
       case ("documents", Some(p)) =>
         documentsPartitioned(spark, p)
       case ("events", None) if eventsTsIsMicros(spark, dir) =>
@@ -347,7 +349,7 @@ object Tables {
   def documentsPartitioned(spark: SparkSession, dir: String): DataFrame =
     spark.read.schema(documentsSchema)
       .parquet(s"$dir/documents.parquet")
-      .select(documentsSchema.fieldNames.map(col): _*)
+      .select(ArraySeq.unsafeWrapArray(documentsSchema.fieldNames.map(col)): _*)
 
   /** events plus derived `ts_us` TimestampType (µs, matches DuckDB).
     * Integer division (DIV) — a double quotient of ~1.7e18 nanos loses

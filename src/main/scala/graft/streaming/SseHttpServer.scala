@@ -58,6 +58,13 @@ import graft.operators.EventLogService
   * soon as the hub appends it. Built on the JDK's
   * com.sun.net.httpserver — no dependency beyond the JRE.
   *
+  * `pollIntervalMs` is the hub's ingest trigger (see [[SseHub]]): the
+  * default 0 starts each micro-batch when the previous one ends, so a
+  * new file is not held for a wall-clock trigger tick; a positive
+  * interval trades pickup latency for less idle CPU. The hub is built
+  * here, so a negative interval fails this constructor, not the first
+  * client's connect.
+  *
   * `shared` is kept only for source compatibility with callers that
   * pass `shared = true` (the benchmark harness does); the hub is the
   * only serving mode, so `false` is rejected. A later change to the
@@ -65,7 +72,7 @@ import graft.operators.EventLogService
   */
 class SseHttpServer(spark: SparkSession, dir: String,
                     port: Int = 0,
-                    pollIntervalMs: Long = 100L,
+                    pollIntervalMs: Long = 0L,
                     heartbeatMs: Long = 500L,
                     maxQueuedFrames: Int = 10000,
                     shared: Boolean = true,
@@ -75,16 +82,17 @@ class SseHttpServer(spark: SparkSession, dir: String,
   require(shared, "shared = false (one query per connection) was removed; " +
     "every connection is served by the hub")
 
+  // ONE hub query serves every client. Built first, so a bad capacity
+  // or interval fails at construction, before the listener socket is
+  // bound, rather than inside the first HTTP handler.
+  private val hub = new SseHub(spark, dir, capacity = hubCapacity,
+    pollIntervalMs = pollIntervalMs, maxQueuedFrames = maxQueuedFrames)
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   private val pool = Executors.newCachedThreadPool()
   private val activeSubs = TrieMap.empty[Long, SseHub.Subscription]
   @volatile private var closed = false
   // longest an idle handler waits on its queue between checks
   private val PollWaitMs = 20L
-  // ONE hub query serves every client. Built here, so a bad capacity
-  // fails at construction rather than inside the first HTTP handler.
-  private val hub = new SseHub(spark, dir, capacity = hubCapacity,
-    pollIntervalMs = pollIntervalMs, maxQueuedFrames = maxQueuedFrames)
 
   /** Starts the ingest on the first connect, and restarts it on the
     * first connect after it died; restart() keeps the rings, so a

@@ -53,15 +53,33 @@ import graft.operators.EventLogOps
   * [[LocalCheckpointFileManager]] (installed by
   * [[EventStreams.readEvents]]), so a micro-batch's metadata writes
   * cost system calls, not forked processes.
+  *
+  * @param pollIntervalMs the ingest's `ProcessingTime` trigger. The
+  *   default 0 runs micro-batches back to back, as Spark's default
+  *   trigger does: a batch starts as soon as the previous one ends, and
+  *   after a batch that found no new file Spark sleeps its own polling
+  *   delay (`spark.sql.streaming.pollingDelay`, 10 ms) before it lists
+  *   the directory again. So a new file waits at most for the batch in
+  *   flight, not for the next tick of a wall-clock grid (a 100 ms grid
+  *   cost a burst ~50 ms on average). The price is idle CPU, because an
+  *   idle hub re-lists its directory every ~10 ms.
+  *   `graft.tools.IdleCost` measured it with no arrivals on a 4-vCPU VM
+  *   (process CPU per idle second; BASELINE.md "Hub trigger"):
+  *   0.14–0.18 s at 100 ms against 0.72–0.86 s at 0 over 200 files,
+  *   and 0.62–0.73 s against 0.92–0.95 s over 2,000 files, where
+  *   listing costs most of a core at either interval. A deployment
+  *   that would rather spend less idle CPU and wait longer for pickup
+  *   passes a positive interval. Negative is rejected.
   */
 class SseHub(spark: SparkSession, dir: String,
              capacity: Int = 100000,
-             pollIntervalMs: Long = 100L,
+             pollIntervalMs: Long = 0L,
              maxQueuedFrames: Int = 10000,
              routeCapacities: Map[String, Int] = Map.empty) {
 
   import SseHub._
 
+  require(pollIntervalMs >= 0, s"pollIntervalMs must be >= 0, got $pollIntervalMs")
   require(capacity > 0, "capacity must be positive")
   require(routeCapacities.values.forall(_ > 0),
     "route capacities must be positive")

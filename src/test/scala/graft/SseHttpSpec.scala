@@ -8,6 +8,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.streaming.Trigger
+
 import graft.streaming.SseHttpServer
 
 /** The literal HTTP transport: real clients over a real socket —
@@ -307,6 +309,28 @@ class SseHttpSpec extends SparkSpec {
       new SseHttpServer(spark, sfDir, shared = false)
     }
     assert(e.getMessage.contains("shared = false"), e.getMessage)
+  }
+
+  test("a negative poll interval fails at construction and starts no query") {
+    val before = spark.streams.active.length
+    val e = intercept[IllegalArgumentException] {
+      new SseHttpServer(spark, sfDir, pollIntervalMs = -1L)
+    }
+    assert(e.getMessage.contains("pollIntervalMs"), e.getMessage)
+    assert(spark.streams.active.length == before)
+  }
+
+  test("the server's hub runs its micro-batches back to back by default") {
+    withServer() { (srv, _) =>
+      val before = spark.streams.active.map(_.id).toSet
+      val c = new SseClient(srv.boundPort, "/routes/click")
+      try {
+        assert(c.awaitStatus() == 200)
+        val started = spark.streams.active.filterNot(q => before(q.id))
+        assert(started.length == 1, s"${started.length} queries started by the first connect")
+        assert(SseHubSpec.triggerOf(started.head) == Trigger.ProcessingTime(0L))
+      } finally c.close()
+    }
   }
 
   test("stop() is graceful: client queries stopped, listener closed") {

@@ -3,6 +3,9 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
 import graft.streaming.SseHub
 
 /** Shared-query serving: one continuous Spark query feeds a bounded
@@ -36,6 +39,23 @@ class SseHubSpec extends SparkSpec {
 
   private def has(frames: Seq[String], i: Int): Boolean =
     frames.exists(_.contains(s""""k":"$i""""))
+
+  test("a default hub runs its micro-batches back to back, not on a trigger grid") {
+    val base = Files.createTempDirectory("graft_hub_trigger").toFile
+    writeEvents(new File(base, "events.parquet"), 1 to 2, append = false)
+    val hub = new SseHub(spark, base.getPath)
+    try assert(SseHubSpec.triggerOf(hub.start()) == Trigger.ProcessingTime(0L))
+    finally hub.stop()
+  }
+
+  test("a negative poll interval fails at construction and starts no query") {
+    val before = spark.streams.active.length
+    val e = intercept[IllegalArgumentException] {
+      new SseHub(spark, sfDir, pollIntervalMs = -1L)
+    }
+    assert(e.getMessage.contains("pollIntervalMs"), e.getMessage)
+    assert(spark.streams.active.length == before)
+  }
 
   test("N subscribers share ONE query, each replaying exactly its own window") {
     val base = Files.createTempDirectory("graft_hub").toFile
@@ -473,4 +493,10 @@ class SseHubSpec extends SparkSpec {
       assert(hub.checkpointDir.isEmpty && !Files.exists(second), s"stop kept $second")
     } finally hub.stop()
   }
+}
+
+object SseHubSpec {
+  /** The trigger a started query runs on. */
+  def triggerOf(q: StreamingQuery): Trigger =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.trigger
 }

@@ -2,6 +2,7 @@ package graft
 package tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.time.Instant
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -15,9 +16,14 @@ import graft.streaming.SseHub
   * (the most and the least frequent route, drained in a loop) ingests
   * burst files one at a time. For each burst batch it records
   * `StreamingQueryProgress.durationMs` (`triggerExecution`, `addBatch`,
-  * `queryPlanning`, `latestOffset`) and the summed `executorCpuTime` of
-  * the batch's tasks. It prints the median and mean of each over all
-  * bursts but the first four, as one JSON line.
+  * `queryPlanning`, `latestOffset`), the summed `executorCpuTime` of
+  * the batch's tasks, and `trigger_wait`: the batch's
+  * `StreamingQueryProgress.timestamp` (when its trigger started) less
+  * the wall-clock time the burst file became visible. The wait is
+  * signed: a trigger that started just before the rename and listed
+  * just after it reads the file with a negative wait. It prints the
+  * median and mean of each over all bursts but the first four, as one
+  * JSON line.
   *
   * The input is perfbench's generator output: the 150k-event prefill
   * in `<root>/events.parquet/` and burst files
@@ -75,16 +81,18 @@ object BurstSplit {
       .map { f =>
         val cpu0 = cpuNs.get()
         Files.move(f, live.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE)
+        val visibleMs = System.currentTimeMillis()
         val p = progress.poll(60, TimeUnit.SECONDS)
         require(p != null && p.numInputRows == 10000, s"$f: batch $p")
         Thread.sleep(300) // task-end events trail the progress event
         require(!tails.exists(_.overflowed), "a tail overflowed")
-        names.map(n => p.durationMs.get(n).doubleValue) :+ (cpuNs.get() - cpu0) / 1e6
+        names.map(n => p.durationMs.get(n).doubleValue) :+ (cpuNs.get() - cpu0) / 1e6 :+
+          (Instant.parse(p.timestamp).toEpochMilli - visibleMs).toDouble
       }.toVector.drop(WarmBursts)
     drainer.interrupt()
     hub.stop()
     spark.stop()
-    val cols = (names.map(_ + "_ms") :+ "task_cpu_ms").zipWithIndex.map { case (n, c) =>
+    val cols = (names.map(_ + "_ms") :+ "task_cpu_ms" :+ "trigger_wait_ms").zipWithIndex.map { case (n, c) =>
       val v = bursts.map(_(c)).sorted
       val median = (v(v.size / 2) + v((v.size - 1) / 2)) / 2
       f""""$n": {"median": $median%.2f, "mean": ${v.sum / v.size}%.2f}"""
