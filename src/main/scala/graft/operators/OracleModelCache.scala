@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared plumbing for in-engine-trained models whose frozen artifact
   * must ride the ORACLE SQL as a literal (the P1/P2 convention): a
@@ -50,4 +50,29 @@ private[operators] final class OracleModelCache[M](
       model(spark, dir)
     }
   }
+}
+
+/** The one rendering of a collected centroid model `(cid, c_emb)`:
+  * as the (cid, c_emb) frame the operators score, and as the VALUES
+  * rows its DuckDB twin embeds. */
+private[operators] object OracleModelCache {
+
+  /** Shortest-round-trip decimal (java.lang.Double.toString): DuckDB's
+    * correctly-rounded parse recovers the exact double, so a literal
+    * model artifact crosses engines bit-for-bit. */
+  def fmtD(v: Double): String = java.lang.Double.toString(v)
+
+  /** Collected centroids back to the (cid, c_emb) frame shape — a
+    * LocalRelation of the SAME doubles the lineage form produced
+    * (collect/createDataFrame round-trips doubles exactly). */
+  def centsDf(spark: SparkSession, cents: Array[(Int, Array[Double])]): DataFrame =
+    spark.createDataFrame(cents.toSeq.map { case (cid, ce) => (cid, ce.toSeq) })
+      .toDF("cid", "c_emb")
+
+  /** The model as `(cid, CAST([...] AS DOUBLE[]))` VALUES rows, one
+    * per line, for a `cents(cid, c_emb) AS (VALUES ...)` CTE. */
+  def centValuesSql(cents: Array[(Int, Array[Double])]): String =
+    cents.map { case (cid, ce) =>
+      s"($cid, CAST(${ce.map(fmtD).mkString("[", ", ", "]")} AS DOUBLE[]))"
+    }.mkString(",\n    ")
 }

@@ -355,10 +355,7 @@ object Removal {
       ForgetSalt)} < ${Sampling.pctThreshold(ForgetPct)})"
     val forgV = s"${Sampling.hashBucketSql("CAST(vec_id AS VARCHAR)",
       ForgetSalt)} < ${Sampling.pctThreshold(ForgetPct)}"
-    val centRows = SemanticDedup.oracleCents().map { case (cid, ce) =>
-      s"($cid, CAST([${ce.map(java.lang.Double.toString).mkString(", ")}]" +
-        " AS DOUBLE[]))"
-    }.mkString(",\n    ")
+    val centRows = OracleModelCache.centValuesSql(SemanticDedup.oracleCents())
     s"""WITH rem AS (
       |  SELECT doc_id, source, text FROM documents WHERE $keepD),
       |${Dedup.rawBandsSqlCtes("rem")},

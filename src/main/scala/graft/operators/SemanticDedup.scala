@@ -3,10 +3,12 @@ package graft.operators
 import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
+import graft.operators.OracleModelCache.{centValuesSql, centsDf}
 import graft.sources.Tables
 
 /** Semantic (embedding-space) deduplication, after the published
@@ -77,63 +79,29 @@ object SemanticDedup {
   private[graft] def adaptiveProbe(coarseK: Int): Int =
     math.max(2, (coarseK + 3) / 4)
 
-  /** The argmax-aggregation that DEFINES the assignment tie rule
-    * (max cosine, ties to the smallest cid): single source of truth —
-    * GoldenSpec pins outputs that flow through it, so the exact and
-    * probed paths must share this block, never re-implement it.
-    * Input: (vec_id, cid, cc) candidate rows — PRIMITIVES ONLY. An
-    * earlier shape carried the embedding through `first()`, which
-    * forces ObjectHashAggregate: every map task buffers ~600 B per
-    * distinct vec_id it sees (and row-partitioned input means every
-    * task sees every key), ~240 MB/task at 4·10⁵ vectors — a measured
-    * local OOM at 200× and an executor OOM at real scale. All-
-    * primitive max(struct) stays in whole-stage-codegen'd fixed-width
-    * aggregation (~48 B/key); the embedding comes back via ONE n-row
-    * equi-join in [[withEmbedding]], which reuses the agg's vec_id
-    * partitioning so only the slim embeddings side shuffles.
-    *
-    * NaN rule: a NaN score (an all-zero centroid — Lloyd's mean of
-    * opposing members — makes cosine 0/0) LOSES. Spark's double
-    * ordering puts NaN greatest, so a bare max(struct(cc, ...)) would
-    * rank the degenerate centroid BEST; argmaxRank's guard gives it
-    * the kernels' rule ([[graft.plans.CentOps]]) instead. Only
-    * [[assignViaIvf]]'s fine scoring over probed buckets uses this. */
-  private def argmaxBest(scored: DataFrame): DataFrame =
-    // single-DOUBLE encoded rank (SimilaritySearch.argmaxRank): a
-    // primitive buffer keeps this on HashAggregateExec — the struct
-    // form planned as SortAggregate and SORTED the n·k stream per
-    // task (500×: 8·10⁹ rows of spill, dead on disk)
-    scored.groupBy("vec_id")
-      .agg(max(SimilaritySearch.argmaxRank(col("cc"), col("cid"))).as("rank"))
-      .select(col("vec_id"),
-        SimilaritySearch.argmaxDecodeCid(col("rank")).as("cid"),
-        SimilaritySearch.argmaxDecodeSim(col("rank")).as("cent_sim"))
-
-  /** Restore the embedding column onto an argmax result — the
-    * (vec_id, embedding, cid, cent_sim) shape every consumer expects. */
-  private def withEmbedding(assignedSlim: DataFrame, emb: DataFrame): DataFrame =
-    assignedSlim
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(col("vec_id"), col("embedding"), col("cid"), col("cent_sim"))
-
   /** Per-row argmax against collected centroid rows via the fused
     * `graft_cent_best` kernel — one NARROW projection, no n·k
     * explode, no aggregation shuffle, and the embedding never leaves
-    * its row (no [[withEmbedding]] restore join), so the same plan is
-    * legal on a stateless append-mode stream. The centroid matrix
-    * rides the expression as FrozenSeq reference fields (O(1) plan
-    * hashing at any k). The tie/NaN rule is the kernel's: max round-9
-    * cosine, NaN loses, ties to the smallest cid. */
+    * its row, so the same plan is legal on a stateless append-mode
+    * stream. The centroid matrix rides the expression as FrozenSeq
+    * reference fields (O(1) plan hashing at any k). The tie/NaN rule
+    * is the kernel's ([[graft.plans.CentOps]]): max round-9 cosine,
+    * NaN loses, ties to the smallest cid. */
   private[graft] def assignToLiteral(spark: SparkSession, emb: DataFrame,
                               centRows: Seq[org.apache.spark.sql.Row]): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val (flat, cids) = flatCentRows(centRows)
-    val best = call_function("graft_cent_best", col("embedding"),
-      lit(flat), lit(cids))
+    withBest(emb, call_function("graft_cent_best", col("embedding"),
+      lit(flat), lit(cids)))
+  }
+
+  /** The assignment's output shape (vec_id, embedding, cid, cent_sim)
+    * from a `graft_cent_best` column; cent_sim is the winner's round-9
+    * cosine (−2.0 when every candidate cosine is NaN). */
+  private def withBest(emb: DataFrame, best: Column): DataFrame =
     emb.select(col("vec_id"), col("embedding"),
       best.getField("cid").as("cid"),
       (-best.getField("ns")).as("cent_sim"))
-  }
 
   /** Collected centroid rows (column 0: Int id, column 1: the
     * embedding as float or double elements) → the kernels' flat
@@ -200,11 +168,13 @@ object SemanticDedup {
   /** Argmax-assign each vector of `emb` to its nearest centroid by
     * cosine: the centroid frame is collected once per instance
     * ([[collectedCents]], bounded by [[collectCentroids]]) and scored
-    * by [[assignToLiteral]]'s narrow kernel — the one assignment at
-    * every k. Package-visible so ScalingStats can measure ROUTING
-    * agreement (probed vs exact against the SAME centroid set —
-    * comparing across different trainings would diff cid label
-    * spaces, not routing). */
+    * by [[assignToLiteral]]'s narrow kernel — the one exact assignment
+    * at every k, for every caller (training, dedup, search,
+    * prototypicality pruning, the cluster-capped sample). Output:
+    * (vec_id, embedding, cid, cent_sim). Package-visible so tests can
+    * measure ROUTING agreement (probed vs exact against the SAME
+    * centroid set — comparing across different trainings would diff
+    * cid label spaces, not routing). */
   private[graft] def assignTo(spark: SparkSession, emb: DataFrame,
                               cents: DataFrame): DataFrame =
     assignToLiteral(spark, emb, ArraySeq.unsafeWrapArray(centRowsOf(cents)))
@@ -238,60 +208,63 @@ object SemanticDedup {
     * coarse quantizer over the CENTROIDS cuts the per-vector argmax
     * from k cosines to ~√k + probe·√k. Coarse centroids come from the
     * same deterministic trainer run over the k fine centroids
-    * (k' ≈ ⌈√k⌉); each vector scores the k' coarse centroids in one
-    * NARROW pass (the `graft_cent_topn` kernel), keeps its
-    * top-`probe` coarse buckets, and scores only the fine centroids
-    * assigned to those buckets (broadcast join + the [[argmaxBest]]
-    * aggregation). Assignment becomes
-    * approximate — a vector whose true centroid lives in an unprobed
-    * coarse bucket lands on its best PROBED one — which trades a
-    * little cluster purity for an O(√k) per-vector cost; the
-    * agreement rate is gated by PackingSpec and the semantics of the
+    * (k' ≈ ⌈√k⌉, float-cast); each fine centroid is routed to its
+    * coarse bucket on the driver with the kernel's own argmax over the
+    * collected coarse rows. Each vector then runs ONE narrow
+    * projection: the `graft_cent_topn` router picks its top-`probe`
+    * populated coarse buckets and `graft_cent_best` scores only the
+    * fine centroids of those buckets (a gid-sorted matrix, original
+    * double `c_emb`) — no candidate stream, no shuffle, no join.
+    * Assignment becomes approximate — a vector whose true centroid
+    * lives in an unprobed coarse bucket lands on its best PROBED one —
+    * which trades a little cluster purity for an O(√k) per-vector
+    * cost; the agreement rate is gated by PackingSpec (probing every
+    * bucket is bit-identical to [[assignTo]]) and the semantics of the
     * dedup rule are unchanged (it never requires optimal clustering,
     * only a deterministic partition). */
   private[graft] def assignViaIvf(spark: SparkSession, emb: DataFrame,
                                   cents: DataFrame, probe: Int = ProbeAuto,
                                   iters: Int = 2): DataFrame = {
-    // probe = 0 would slice an empty coarse list and silently drop
-    // EVERY vector from the output — fail fast like trainCentroids.
-    // ProbeAuto resolves to adaptiveProbe(k') once k' is known below.
+    // probe = 0 would route every vector to no bucket — fail fast
+    // like trainCentroids. ProbeAuto resolves to adaptiveProbe(k')
+    // once k' is known below.
     require(probe >= 1 || probe == ProbeAuto,
       s"probe must be >= 1 or ProbeAuto, got $probe")
+    graft.plans.GraftFunctions.register(spark)
+    val fine = centRowsOf(cents)
+    val coarseK = math.ceil(math.sqrt(fine.length.toDouble)).toInt.max(1)
+    val probeEff = if (probe == ProbeAuto) adaptiveProbe(coarseK) else probe
     // cid is Int and post-Lloyd's centroids are array<double>; the
     // trainer's sample collect reads (Long, array<float>) — cast both
     // (float truncation only affects coarse ROUTING, which is the
     // approximate part by design; fine scoring keeps full precision)
     val centVecs = cents.select(col("cid").cast("long").as("vec_id"),
       col("c_emb").cast("array<float>").as("embedding"))
-    val coarseK = math.ceil(math.sqrt(
-      centVecs.count().toDouble)).toInt.max(1)
-    val probeEff = if (probe == ProbeAuto) adaptiveProbe(coarseK) else probe
-    val coarse = SimilaritySearch.trainCentroids(spark, centVecs, coarseK, iters)
-      .select(col("cid").as("gid"), col("c_emb").as("g_emb"))
-    // fine centroid -> coarse bucket (k rows; broadcast below).
-    // localCheckpoint: the router's collect below and the broadcast
-    // join both consume it — without materialization the assignTo
-    // pass runs twice per invocation
-    val fineByG = assignTo(spark,
-      centVecs, coarse.select(col("gid").as("cid"), col("g_emb").as("c_emb")))
-      .select(col("cid").as("gid"),
-        col("vec_id").cast("int").as("cid")) // back to the cents' Int cid
-      .join(cents, Seq("cid"))
-      .localCheckpoint()
-    // route ONLY over coarse buckets that actually hold fine
-    // centroids: Lloyd's mean update can empty a bucket after its
-    // last re-assignment, and a vector whose every probed bucket were
-    // empty would vanish from the inner join below — silent row loss,
-    // not approximation
-    val populated = coarse.join(fineByG.select("gid").distinct(), Seq("gid"))
-    val topG = emb.select(col("vec_id"), col("embedding"),
-      explode(literalTopCentroids(spark, populated, col("embedding"), probeEff))
-        .as("gid"))
-    withEmbedding(
-      argmaxBest(topG.join(broadcast(fineByG), Seq("gid"))
-        .select(col("vec_id"), col("cid"),
-          round(Vectors.cosineFast(spark, col("embedding"), col("c_emb")), 9).as("cc"))),
-      emb)
+    val coarse = collectCentroids(
+      SimilaritySearch.trainCentroids(spark, centVecs, coarseK, iters))
+    val (gFlat, gCids) = flatCentRows(ArraySeq.unsafeWrapArray(coarse))
+    val gStarts = Array(0, gCids.length)
+    // fine centroid -> coarse gid: the kernel over the same float cast
+    val gidOf = fine.map { r =>
+      val e = r.getSeq[Any](1).map(_.asInstanceOf[Number].floatValue).toArray
+      graft.plans.CentOps.best(UnsafeArrayData.fromPrimitiveArray(e),
+        ef = true, gFlat, gCids, gStarts, graft.plans.CentOps.OneBucket).getInt(1)
+    }
+    // route ONLY over coarse buckets that hold fine centroids: Lloyd's
+    // mean update can empty a bucket after its last re-assignment, and
+    // a vector whose every probed bucket were empty would have no
+    // candidate. Router cids are bucket indexes in gid order, so the
+    // router's (ns, cid) tie order is the gid order.
+    val bucketOf = gidOf.distinct.sorted.zipWithIndex.toMap
+    val router = coarse.flatMap(r =>
+      bucketOf.get(r.getInt(0)).map(b => org.apache.spark.sql.Row(b, r.get(1))))
+    val bucket = gidOf.map(bucketOf)
+    val order = fine.indices.sortBy(i => (bucket(i), fine(i).getInt(0)))
+    val (flat, cids) = flatCentRows(order.map(fine))
+    val starts = Array.tabulate(bucketOf.size + 1)(b => bucket.count(_ < b))
+    withBest(emb, call_function("graft_cent_best", col("embedding"),
+      lit(flat), lit(cids), lit(starts),
+      literalTopCentroids(spark, router.toIndexedSeq, col("embedding"), probeEff)))
   }
 
   /** Train-and-assign over the full embeddings table; `k <= 0` means
@@ -420,7 +393,7 @@ object SemanticDedup {
       dedupAssigned(spark,
         assignTo(spark,
           Tables.parallelized(spark, Tables.embeddings(spark, dir)),
-          semCentsDf(spark, semCentCache.model(spark, dir))), tau)
+          centsDf(spark, semCentCache.model(spark, dir))), tau)
     else dedupAssigned(spark, assigned(spark, dir, k, iters, probeCoarse), tau)
 
   /** Shipped similarity threshold for the dedup verdict. */
@@ -441,20 +414,13 @@ object SemanticDedup {
         .sortBy(_._1)
     })
 
-  private def semCentsDf(spark: SparkSession,
-                         cents: Array[(Int, Array[Double])]): DataFrame =
-    spark.createDataFrame(cents.toSeq.map { case (cid, ce) => (cid, ce.toSeq) })
-      .toDF("cid", "c_emb")
-
-  private def fmtD(v: Double): String = java.lang.Double.toString(v)
-
   /** O5's trained-generation artifacts for the removal audit (M-series
     * v2): the I4 centroid trainer's frame form and its frozen oracle
     * literal — ONE trainer feeds the dedup, recall, and removal-audit
     * queries, so their cid label spaces agree. */
   private[graft] def trainedCentsDf(spark: SparkSession,
                                     dir: String): DataFrame =
-    semCentsDf(spark, semCentCache.model(spark, dir))
+    centsDf(spark, semCentCache.model(spark, dir))
 
   private[operators] def oracleCents(): Array[(Int, Array[Double])] =
     semCentCache.oracleModel()
@@ -506,7 +472,9 @@ object SemanticDedup {
   /** Assignment at the centroid table's own regime: the exact argmax
     * up to [[ExactAssignMaxK]] centroids, the coarse-quantized IVF
     * probe above it (where the n·k exact argmax is the measured wall).
-    * Decides on the memoized collect, so it runs no count job. */
+    * Both are one `graft_cent_best` projection over the corpus; they
+    * differ only in the candidate set each row scores. Decides on the
+    * memoized collect, so it runs no count job. */
   private[graft] def assignAtScale(spark: SparkSession, emb: DataFrame,
                                    cents: DataFrame): DataFrame =
     if (centRowsOf(cents).length <= ExactAssignMaxK) assignTo(spark, emb, cents)
@@ -524,10 +492,7 @@ object SemanticDedup {
     * construction and is absent from this data — the documented D3
     * invariant. */
   def semanticDedupSql: String = {
-    val cents = semCentCache.oracleModel()
-    val rows = cents.map { case (cid, ce) =>
-      s"($cid, CAST(${ce.map(fmtD).mkString("[", ", ", "]")} AS DOUBLE[]))"
-    }.mkString(",\n    ")
+    val rows = centValuesSql(semCentCache.oracleModel())
     val cos = Vectors.cosineSql("e.embedding", "c.c_emb")
     val pairCos = Vectors.cosineSql("ea.embedding", "eb.embedding")
     s"""WITH cents(cid, c_emb) AS (VALUES
@@ -820,7 +785,7 @@ object SemanticDedup {
     * the smallest cid; the frozen centroids ride the oracle as VALUES
     * literals (the I4 convention). */
   def semanticRecall(spark: SparkSession, dir: String): DataFrame = {
-    val cents = semCentsDf(spark, semCentCache.model(spark, dir))
+    val cents = centsDf(spark, semCentCache.model(spark, dir))
     val probe = Tables.embeddings(spark, dir)
       .orderBy(Sampling.hashBucket(col("vec_id"), semRecallSalt),
         col("vec_id"))
@@ -855,10 +820,7 @@ object SemanticDedup {
     * round-9 argmax assignment over the probe, the same decile
     * arithmetic. */
   def semanticRecallSql: String = {
-    val cents = semCentCache.oracleModel()
-    val rows = cents.map { case (cid, ce) =>
-      s"($cid, CAST(${ce.map(fmtD).mkString("[", ", ", "]")} AS DOUBLE[]))"
-    }.mkString(",\n    ")
+    val rows = centValuesSql(semCentCache.oracleModel())
     val hb = Sampling.hashBucketSql("CAST(vec_id AS VARCHAR)", semRecallSalt)
     val cos = Vectors.cosineSql("e.embedding", "c.c_emb")
     val pairCos = Vectors.cosineSql("a.embedding", "b.embedding")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TopK, Vectors}
+import graft.operators.OracleModelCache.{centValuesSql, centsDf, fmtD}
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -206,59 +207,6 @@ object SimilaritySearch {
     emb.select(col("vec_id"), col("embedding"))
       .orderBy(md5(col("vec_id").cast("string"))).limit(m)
 
-  /** PRIMITIVE-ENCODED argmax rank, found by the 500× ProbeLab rung:
-    * `max(struct(cc, ncid))` has a STRUCT aggregation buffer, which
-    * Spark 4 plans as SortAggregateExec — the n·k candidate stream is
-    * SORTED per task before aggregating, materializing through
-    * UnsafeExternalSorter. Measured at 500× (n=1M, autoK k=8000):
-    * 8·10⁹ candidate rows spilled past the host's 77 GB free disk and
-    * killed the job — on disk volume, not heap, and invisible at
-    * every smaller scale. The same argmax packed into ONE DOUBLE
-    * aggregates through HashAggregateExec (primitive buffer), so the
-    * candidate stream PIPELINES map-side and nothing materializes:
-    *
-    *   rank = rint(cc·10⁹) · 2²¹ − cid
-    *
-    * is order-isomorphic to the struct rule "max round9(cosine), ties
-    * to the smallest cid": equal rounded cosines differ by −cid
-    * (< 2²¹ apart), different ones by ≥ 2²¹. Every value is an exact
-    * integer ≤ 2⁵¹ (|cc| ≤ 1 → |c9| ≤ 10⁹; `cid < 2²¹` required), so
-    * encode/decode are lossless: cid = c9·2²¹ − rank with
-    * c9 = ⌈rank/2²¹⌉ (the /2²¹ is a power-of-two division — exact),
-    * and cent_sim = c9/10⁹ is the SAME double `round(cc, 9)` produced
-    * (both are the correctly-rounded double of the decimal). Callers
-    * pass the ALREADY-round(_, 9)'d cosine, so cc·10⁹ sits within
-    * ~10⁻⁷ of an integer and `rint` is exact recovery — never a
-    * half-way tie-break. NaN cosines map to −2 (below any real
-    * cosine) before encoding — "NaN loses", the rule the struct form
-    * implemented with its −∞ guard, and the kernels' rule
-    * ([[graft.plans.CentOps]]). Used by [[SemanticDedup.assignViaIvf]]'s
-    * fine scoring over probed buckets and by the protoPrune and
-    * clusterCap argmaxes; PackingSpec's full-coverage probe gates
-    * bit-equality with [[SemanticDedup.assignTo]]. */
-  private[graft] val ArgmaxCidCap: Int = 1 << 21
-
-  private[graft] def argmaxRank(cc: Column, cid: Column): Column = {
-    // encode-side cap guard: a cid outside [0, 2^21) would silently
-    // DECODE to a wrong assignment, and only the trainer used to
-    // enforce the cap — assignViaIvf accepts arbitrary centroid
-    // frames. In-plan raise_error (the Boilerplate HotSetCap
-    // pattern): constant per-row cost, fails loudly wherever the
-    // encoding is applied, zero extra jobs.
-    val checked = when(cid < 0 || cid >= ArgmaxCidCap,
-      raise_error(concat(lit("argmax cid outside encodable [0, 2^21): "),
-        cid.cast("string"))).cast("int")).otherwise(cid)
-    rint(when(isnan(cc), lit(-2.0)).otherwise(cc) * lit(1e9)) *
-      lit(2097152.0) - checked
-  }
-
-  /** Decode (cid, cent_sim) from a max'd [[argmaxRank]] value. */
-  private[graft] def argmaxDecodeCid(rank: Column): Column =
-    (ceil(rank / lit(2097152.0)) * lit(2097152L) - rank).cast("int")
-
-  private[graft] def argmaxDecodeSim(rank: Column): Column =
-    ceil(rank / lit(2097152.0)).cast("double") / lit(1e9)
-
   def trainCentroids(spark: SparkSession, emb: DataFrame, k: Int,
                      iters: Int = 3): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -381,7 +329,8 @@ object SimilaritySearch {
     }
     // the returned frame keeps the historical "already materialized"
     // contract — several consumers read it more than once
-    // (assignViaIvf's coarse table, VecStreams' per-batch centroids)
+    // (assignViaIvf collects the fine table and trains its coarse
+    // quantizer over it; VecStreams' per-batch centroids)
     cents.localCheckpoint()
   }
 
@@ -401,20 +350,6 @@ object SimilaritySearch {
         .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1)
     })
-
-  /** Collected centroids back to the (cid, c_emb) frame shape
-    * `ivfSearchOn` consumes — a LocalRelation of the SAME doubles
-    * the lineage form produced (collect/createDataFrame round-trips
-    * doubles exactly), so search semantics are unchanged. */
-  private def centsDf(spark: SparkSession,
-                      cents: Array[(Int, Array[Double])]): DataFrame =
-    spark.createDataFrame(cents.toSeq.map { case (cid, ce) => (cid, ce.toSeq) })
-      .toDF("cid", "c_emb")
-
-  /** Shortest-round-trip decimal (java.lang.Double.toString): DuckDB's
-    * correctly-rounded parse recovers the exact double, so a literal
-    * model artifact crosses engines bit-for-bit. */
-  private def fmtD(v: Double): String = java.lang.Double.toString(v)
 
   private def dArrSql(a: Seq[Double]): String =
     a.map(fmtD).mkString("[", ", ", "]")
@@ -443,10 +378,7 @@ object SimilaritySearch {
     * inside the probed buckets. A `def`: Verify dumps oracle SQL after
     * the queries run, so the literal is the exact last-run model. */
   def ivfTopKTrainedSql: String = {
-    val cents = ivfCentCache.oracleModel()
-    val rows = cents.map { case (cid, ce) =>
-      s"($cid, CAST(${dArrSql(ce.toSeq)} AS DOUBLE[]))"
-    }.mkString(",\n    ")
+    val rows = centValuesSql(ivfCentCache.oracleModel())
     s"""WITH cents(cid, c_emb) AS (VALUES
       |    $rows),
       |cscore AS (
@@ -494,11 +426,14 @@ object SimilaritySearch {
     * ties at the cut are kept. A cluster absent from the sample prunes
     * nothing (honest default, keep=true).
     *
-    * Determinism: assignment is the argmaxRank rule (max round-9
-    * cosine, ties to the smallest cid) and the SAME max() stream also
-    * yields the assigned cosine (max over the round-9 scores IS the
-    * argmax value). No corpus vector is zero (the documented D3
-    * invariant), so no NaN reaches either engine's max. */
+    * Determinism: assignment is [[SemanticDedup.assignTo]]'s kernel
+    * (max round-9 cosine, NaN loses, ties to the smallest cid) and the
+    * prototypicality score is the winner's round-9 cosine, its
+    * `cent_sim`. A degenerate (all-zero) centroid scores NaN against
+    * every row and is never the winner, so it neither captures rows
+    * nor turns their scores to NaN. No corpus vector is zero (the
+    * documented D3 invariant), so no row scores −2.0 and the DuckDB
+    * twin's row_number assignment agrees. */
   def protoPrune(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     protoPruneOn(spark, emb, centsDf(spark, ivfCentCache.model(spark, dir)))
@@ -506,14 +441,11 @@ object SimilaritySearch {
 
   private[graft] def protoPruneOn(spark: SparkSession, emb: DataFrame,
                                   cents: DataFrame): DataFrame = {
-    val c9 = round(Vectors.cosineFast(spark, col("embedding"), col("c_emb")), 9)
-    // slim (vec_id, cid, proto9) frame, two consumers (sample + final)
-    val assigned = emb.join(broadcast(cents))
-      .select(col("vec_id"), argmaxRank(c9, col("cid")).as("r"), c9.as("c9"))
-      .groupBy("vec_id")
-      .agg(max(col("r")).as("rank"), max(col("c9")).as("proto9"))
-      .select(col("vec_id"), argmaxDecodeCid(col("rank")).as("cid"),
-        col("proto9"))
+    // slim (vec_id, cid, proto9) frame, two consumers (sample + final);
+    // materialized once: measured faster than scanning and scoring the
+    // sample again (BASELINE.md "One centroid scorer")
+    val assigned = SemanticDedup.assignTo(spark, emb, cents)
+      .select(col("vec_id"), col("cid"), col("cent_sim").as("proto9"))
       .localCheckpoint()
     val samp = assigned.where(
       Sampling.hashBucket(col("vec_id"), protoSalt) < ProtoSampleBar)
@@ -538,10 +470,7 @@ object SimilaritySearch {
     * VALUES literal, assignment + sampled order-statistic cut + keep
     * rule restated. A `def` (the oracle-dump-after-queries rule). */
   def protoPruneSql: String = {
-    val cents = ivfCentCache.oracleModel()
-    val rows = cents.map { case (cid, ce) =>
-      s"($cid, CAST(${dArrSql(ce.toSeq)} AS DOUBLE[]))"
-    }.mkString(",\n    ")
+    val rows = centValuesSql(ivfCentCache.oracleModel())
     val hb = Sampling.hashBucketSql("CAST(vec_id AS VARCHAR)", protoSalt)
     s"""WITH cents(cid, c_emb) AS (VALUES
       |    $rows),
@@ -588,8 +517,8 @@ object SimilaritySearch {
     * deterministic salted hash rank (uniform within cluster, stable
     * across runs and engines; ties on vec_id).
     *
-    * Scale shape: assignment is the codegen'd broadcast argmax pass
-    * (n·k cosine, no shuffle); the quota is the bounded [[graft.functions.TopK]]
+    * Scale shape: assignment is [[SemanticDedup.assignTo]]'s narrow
+    * kernel projection (n·k cosines, no join, no shuffle); the quota is the bounded [[graft.functions.TopK]]
     * partial aggregation keyed by cid — only cap·P rows per cluster
     * cross the shuffle, never the corpus (a per-cid window would
     * hash-shuffle every row). Output is k·cap rows. */
@@ -600,11 +529,8 @@ object SimilaritySearch {
 
   private[graft] def clusterCapOn(spark: SparkSession, emb: DataFrame,
                                   cents: DataFrame): DataFrame = {
-    val c9 = round(Vectors.cosineFast(spark, col("embedding"), col("c_emb")), 9)
-    val assigned = emb.join(broadcast(cents))
-      .select(col("vec_id"), argmaxRank(c9, col("cid")).as("r"))
-      .groupBy("vec_id").agg(max(col("r")).as("rank"))
-      .select(col("vec_id"), argmaxDecodeCid(col("rank")).as("cid"),
+    val assigned = SemanticDedup.assignTo(spark, emb, cents)
+      .select(col("vec_id"), col("cid"),
         Sampling.hashBucket(col("vec_id"), clusterCapSalt).as("hrank"))
     // TopK ranks (round-9 DESC, id ASC); negated integer hrank makes
     // that (hrank ASC, vec_id ASC) with no float rounding in play
@@ -622,10 +548,7 @@ object SimilaritySearch {
     * VALUES literal, argmax assignment, per-cid (hrank, vec_id)
     * row_number quota. A `def` (oracle-dump-after-queries rule). */
   def clusterCapSampleSql: String = {
-    val cents = ivfCentCache.oracleModel()
-    val rows = cents.map { case (cid, ce) =>
-      s"($cid, CAST(${dArrSql(ce.toSeq)} AS DOUBLE[]))"
-    }.mkString(",\n    ")
+    val rows = centValuesSql(ivfCentCache.oracleModel())
     val hb = Sampling.hashBucketSql("CAST(vec_id AS VARCHAR)", clusterCapSalt)
     s"""WITH cents(cid, c_emb) AS (VALUES
       |    $rows),
@@ -1246,9 +1169,7 @@ object SimilaritySearch {
   def ivfPqTopKSql: String = {
     val art = ivfPqCache.oracleModel()
     val model = art.adc.model
-    val centRows = art.cents.map { case (cid, ce) =>
-      s"($cid, CAST(${dArrSql(ce.toSeq)} AS DOUBLE[]))"
-    }.mkString(",\n    ")
+    val centRows = centValuesSql(art.cents)
     val xs = (1 to model.d).map(i =>
       s"CAST(CAST(CAST(embedding[mi*${model.d} + $i] AS DOUBLE) - c_emb[mi*${model.d} + $i] AS REAL) AS DOUBLE) AS x$i")
       .mkString(",\n    ")
@@ -1354,10 +1275,7 @@ object SimilaritySearch {
     * exact rescore. The bucket-restricted shortlist stage is integer
     * end-to-end, like Z1. A `def` (oracle-dump-after-queries rule). */
   def ivfBqTopKSql: String = {
-    val cents = ivfCentCache.oracleModel()
-    val rows = cents.map { case (cid, ce) =>
-      s"($cid, CAST(${dArrSql(ce.toSeq)} AS DOUBLE[]))"
-    }.mkString(",\n    ")
+    val rows = centValuesSql(ivfCentCache.oracleModel())
     val wordCols = (0 until graft.plans.BitPack.Words)
       .map(w => s"${BinaryAnn.wordSql(w)} AS w_$w").mkString(",\n    ")
     s"""WITH cents(cid, c_emb) AS (VALUES
@@ -1563,10 +1481,7 @@ object SimilaritySearch {
     * members outside the probed buckets are unseen by design — so its
     * oracle must restate the probe, not the exhaustive scan.) */
   def hardNegativesFromIndexSql: String = {
-    val cents = ivfCentCache.oracleModel()
-    val rows = cents.map { case (cid, ce) =>
-      s"($cid, CAST(${dArrSql(ce.toSeq)} AS DOUBLE[]))"
-    }.mkString(",\n    ")
+    val rows = centValuesSql(ivfCentCache.oracleModel())
     s"""WITH cents(cid, c_emb) AS (VALUES
       |    $rows),
       |cscore AS (

@@ -1,15 +1,20 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.UnaryExpression
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** Fused centroid-scoring kernels: the one centroid assignment
-  * (`graft.operators.SemanticDedup.assignTo`, at every k, batch and
-  * streaming) and the probe router.
+/** Fused centroid-scoring kernels: the one centroid assignment and
+  * the probe router. Every centroid argmax runs [[CentOps.best]]:
+  * `graft.operators.SemanticDedup.assignTo` at every k, batch and
+  * streaming (the trainer's Lloyd's rounds, dedup, ANN search,
+  * prototypicality pruning, the cluster-capped sample), the IVF
+  * probe's fine scoring over its probed buckets and its fine→coarse
+  * routing on the driver. The DuckDB oracles restate the same rule in
+  * SQL (`row_number() OVER (ORDER BY round(cos, 9) DESC, cid)`).
   *
   * The previous shape built the centroid table INTO the expression
   * tree — `array(struct(lit(cid), array(lit(d₀)…lit(d₆₃))))`, k·d
@@ -77,35 +82,64 @@ object CentOps {
     if (java.lang.Double.isNaN(c9)) 2.0 else -c9
   }
 
-  /** Winner under (ns asc, cid asc) → struct(ns, cid). Raw cosines
-    * first; only NaN and near-maximum ones (`NearTie`) are rounded
-    * and compared — the rest cannot tie or beat the winner. */
-  def best(e: ArrayData, ef: Boolean, flat: Array[Double],
-           cids: Array[Int]): InternalRow = {
-    val k = cids.length
-    val d = flat.length / k
-    val raw = new Array[Double](k)
+  /** The exact assignment's probe: bucket 0, whose rows (starts
+    * `[0, k]`) are the whole matrix. */
+  val OneBucket: ArrayData = UnsafeArrayData.fromPrimitiveArray(Array(0))
+
+  /** Winner under (ns asc, cid asc) → struct(ns, cid), over the
+    * candidate rows: matrix rows [starts(g), starts(g + 1)) of every
+    * bucket g in `probed` (the exact assignment is starts `[0, k]` with
+    * [[OneBucket]]; the IVF probe passes a gid-sorted matrix and the
+    * router's buckets, populated ones only, so there is always a
+    * candidate). A bucket probed twice scores its rows twice, which
+    * cannot change the winner. Raw cosines first; only NaN and
+    * near-maximum ones (`NearTie`) are rounded and compared — the rest
+    * cannot tie or beat the winner. */
+  def best(e: ArrayData, ef: Boolean, flat: Array[Double], cids: Array[Int],
+           starts: Array[Int], probed: ArrayData): InternalRow = {
+    val d = flat.length / cids.length
+    val np = probed.numElements()
+    var m = 0
+    var p = 0
+    while (p < np) {
+      val g = probed.getInt(p)
+      m += starts(g + 1) - starts(g)
+      p += 1
+    }
+    val raw = new Array[Double](m)
     var maxRaw = Double.NegativeInfinity
-    var j = 0
-    while (j < k) {
-      val c = cosOf(e, ef, flat, j * d, d)
-      raw(j) = c
-      if (c > maxRaw) maxRaw = c
-      j += 1
+    var r = 0
+    p = 0
+    while (p < np) {
+      val g = probed.getInt(p)
+      var j = starts(g)
+      while (j < starts(g + 1)) {
+        val c = cosOf(e, ef, flat, j * d, d)
+        raw(r) = c
+        if (c > maxRaw) maxRaw = c
+        r += 1; j += 1
+      }
+      p += 1
     }
     val floor = maxRaw - NearTie
     var bestNs = 0.0; var bestCid = 0; var found = false
-    j = 0
-    while (j < k) {
-      val c = raw(j)
-      if (java.lang.Double.isNaN(c) || c >= floor) {
-        val ns = nsOfCos(c)
-        val cid = cids(j)
-        if (!found || ns < bestNs || (ns == bestNs && cid < bestCid)) {
-          bestNs = ns; bestCid = cid; found = true
+    r = 0
+    p = 0
+    while (p < np) {
+      val g = probed.getInt(p)
+      var j = starts(g)
+      while (j < starts(g + 1)) {
+        val c = raw(r)
+        if (java.lang.Double.isNaN(c) || c >= floor) {
+          val ns = nsOfCos(c)
+          val cid = cids(j)
+          if (!found || ns < bestNs || (ns == bestNs && cid < bestCid)) {
+            bestNs = ns; bestCid = cid; found = true
+          }
         }
+        r += 1; j += 1
       }
-      j += 1
+      p += 1
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](bestNs, bestCid))
@@ -145,10 +179,11 @@ object CentOps {
 }
 
 /** Shared plumbing for the two centroid-matrix kernels. */
-sealed trait CentKernel extends UnaryExpression {
+sealed trait CentKernel extends Expression {
+  def embedding: Expression
   def flat: IndexedSeq[Double]
   def cids: IndexedSeq[Int]
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+  protected def checkMatrix(): TypeCheckResult = embedding.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _)
       if cids.nonEmpty && flat.length % cids.length == 0 =>
       TypeCheckResult.TypeCheckSuccess
@@ -160,38 +195,61 @@ sealed trait CentKernel extends UnaryExpression {
       s"$prettyName expects array<float|double>, got $dt")
   }
   protected def elemFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    embedding.dataType.asInstanceOf[ArrayType].elementType == FloatType
   @transient protected lazy val flatArr: Array[Double] = flat.toArray
   @transient protected lazy val cidArr: Array[Int] = cids.toArray
 }
 
-/** `graft_cent_best(embedding, flat_lit, cids_lit)` →
-  * struct(ns double, cid int): the centroid assignment argmax. */
-case class CentBest(child: org.apache.spark.sql.catalyst.expressions.Expression,
-                    flat: IndexedSeq[Double], cids: IndexedSeq[Int])
-    extends CentKernel {
+/** `graft_cent_best(embedding, flat_lit, cids_lit[, starts_lit,
+  * probed])` → struct(ns double, cid int): the centroid assignment
+  * argmax ([[CentOps.best]]). `left` is the embedding, `right` the
+  * probed buckets of the matrix split at `starts`; the three-argument
+  * form is the exact assignment, one bucket holding every row. */
+case class CentBest(left: Expression, right: Expression,
+                    flat: IndexedSeq[Double], cids: IndexedSeq[Int],
+                    starts: IndexedSeq[Int])
+    extends BinaryExpression with CentKernel {
+  override def embedding: Expression = left
+  override def checkInputDataTypes(): TypeCheckResult = checkMatrix() match {
+    case ok if ok.isSuccess => right.dataType match {
+      case ArrayType(IntegerType, _) if starts.nonEmpty && starts.head == 0 &&
+          starts.last == cids.length &&
+          starts.indices.tail.forall(i => starts(i - 1) <= starts(i)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName bucket starts must rise from 0 to the cid count")
+      case dt => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects array<int> probed buckets, got $dt")
+    }
+    case failed => failed
+  }
   override def dataType: DataType = StructType(Seq(
     StructField("ns", DoubleType, nullable = false),
     StructField("cid", IntegerType, nullable = false)))
   override def prettyName: String = "graft_cent_best"
-  override protected def nullSafeEval(input: Any): Any =
-    CentOps.best(input.asInstanceOf[ArrayData], elemFloat, flatArr, cidArr)
+  @transient private lazy val startArr: Array[Int] = starts.toArray
+  override protected def nullSafeEval(e: Any, probed: Any): Any =
+    CentOps.best(e.asInstanceOf[ArrayData], elemFloat, flatArr, cidArr,
+      startArr, probed.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val fRef = ctx.addReferenceObj("centFlat", flatArr, "double[]")
     val cRef = ctx.addReferenceObj("centCids", cidArr, "int[]")
-    defineCodeGen(ctx, ev, e =>
-      s"graft.plans.CentOps$$.MODULE$$.best($e, $elemFloat, $fRef, $cRef)")
+    val sRef = ctx.addReferenceObj("centStarts", startArr, "int[]")
+    defineCodeGen(ctx, ev, (e, p) =>
+      s"graft.plans.CentOps$$.MODULE$$.best($e, $elemFloat, $fRef, $cRef, $sRef, $p)")
   }
-  override protected def withNewChildInternal(
-      newChild: org.apache.spark.sql.catalyst.expressions.Expression): CentBest =
-    copy(child = newChild)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CentBest =
+    copy(left = newLeft, right = newRight)
 }
 
 /** `graft_cent_topn(embedding, flat_lit, cids_lit, n)` → array<int>
   * of the top-n cids: the probe router. */
-case class CentTopN(child: org.apache.spark.sql.catalyst.expressions.Expression,
+case class CentTopN(child: Expression,
                     flat: IndexedSeq[Double], cids: IndexedSeq[Int], n: Int)
-    extends CentKernel {
+    extends UnaryExpression with CentKernel {
+  override def embedding: Expression = child
+  override def checkInputDataTypes(): TypeCheckResult = checkMatrix()
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "graft_cent_topn"
   override protected def nullSafeEval(input: Any): Any =
@@ -202,7 +260,6 @@ case class CentTopN(child: org.apache.spark.sql.catalyst.expressions.Expression,
     defineCodeGen(ctx, ev, e =>
       s"graft.plans.CentOps$$.MODULE$$.topn($e, $elemFloat, $fRef, $cRef, $n)")
   }
-  override protected def withNewChildInternal(
-      newChild: org.apache.spark.sql.catalyst.expressions.Expression): CentTopN =
+  override protected def withNewChildInternal(newChild: Expression): CentTopN =
     copy(child = newChild)
 }

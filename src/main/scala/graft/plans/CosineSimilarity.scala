@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -294,10 +294,17 @@ object GraftFunctions {
   private val centBestDesc = (
     FunctionIdentifier("graft_cent_best"),
     new ExpressionInfo(classOf[CentBest].getName, null, "graft_cent_best"),
-    (children: Seq[Expression]) => CentBest(
-      children(0),
-      litDoubleArray(children(1), "graft_cent_best centroids"),
-      litIntArray(children(2), "graft_cent_best cids")): Expression)
+    (children: Seq[Expression]) => {
+      val cids = litIntArray(children(2), "graft_cent_best cids")
+      val (starts, probed) =
+        if (children.length == 3)
+          (FrozenSeq(IndexedSeq(0, cids.length)), Literal(CentOps.OneBucket,
+            ArrayType(IntegerType, containsNull = false)))
+        else (litIntArray(children(3), "graft_cent_best starts"), children(4))
+      CentBest(children(0), probed,
+        litDoubleArray(children(1), "graft_cent_best centroids"), cids,
+        starts): Expression
+    })
 
   private val centTopNDesc = (
     FunctionIdentifier("graft_cent_topn"),

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 /** The fused centroid-scoring kernels (graft_cent_best /
   * graft_cent_topn) behind SemanticDedup's one assignment route. These
   * tests pin bit-equality with the expression chain they replaced and,
-  * for `best`'s near-tie rounding, with a loop that rounds every
-  * centroid (the oracle gate pins the consumers end-to-end).
+  * for `best`'s near-tie rounding and its candidate set (the IVF
+  * probe's buckets), with a loop that rounds every candidate centroid
+  * (the oracle gate pins the consumers end-to-end).
   */
 class CentScoreSpec extends SparkSpec {
 
@@ -90,7 +91,7 @@ class CentScoreSpec extends SparkSpec {
     val r = df.select(best.getField("cid"), (-best.getField("ns")))
       .collect().head
     // every cosine NaN -> every ns = 2.0 -> ties to the smallest cid,
-    // cent_sim decodes to -2.0 (the agg route's argmaxRank guard)
+    // cent_sim decodes to -2.0 (the sentinel: NaN loses)
     assert(r.getInt(0) == cids.min)
     assert(r.getDouble(1) == -2.0)
   }
@@ -156,6 +157,12 @@ class CentScoreSpec extends SparkSpec {
     (bestNs, bestCid)
   }
 
+  /** The exact assignment: one bucket holding every row. */
+  private def exact(e: org.apache.spark.sql.catalyst.util.ArrayData, ef: Boolean,
+                    flat: Array[Double], cids: Array[Int]) =
+    graft.plans.CentOps.best(e, ef, flat, cids, Array(0, cids.length),
+      graft.plans.CentOps.OneBucket)
+
   private def vec(xs: Double*) =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(xs.map(x => x: Any).toArray)
 
@@ -173,7 +180,7 @@ class CentScoreSpec extends SparkSpec {
   private def bestMatches(e: Seq[Double], cents: Seq[(Int, Seq[Double])]): (Double, Int) = {
     val flat = cents.flatMap(_._2).toArray
     val cids = cents.map(_._1).toArray
-    val r = graft.plans.CentOps.best(vec(e: _*), ef = false, flat, cids)
+    val r = exact(vec(e: _*), ef = false, flat, cids)
     val got = (r.getDouble(0), r.getInt(1))
     val want = allRounded(vec(e: _*), ef = false, flat, cids)
     assert(java.lang.Double.doubleToLongBits(got._1) ==
@@ -245,10 +252,77 @@ class CentScoreSpec extends SparkSpec {
     for (row <- mkEmb(300, 5)) {
       val fs = row._2.toArray
       val e = new org.apache.spark.sql.catalyst.util.GenericArrayData(fs.map(x => x: Any))
-      val r = graft.plans.CentOps.best(e, ef = true, flat, cids)
+      val r = exact(e, ef = true, flat, cids)
       val want = allRounded(e, ef = true, flat, cids)
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(want._1) && r.getInt(1) == want._2)
+    }
+  }
+
+  /** `best` over the `probed` buckets of a bucketed matrix, asserted
+    * bit-equal to [[allRounded]] over the union of those buckets'
+    * rows. */
+  private def probedMatches(e: Seq[Double], buckets: Seq[Seq[(Int, Seq[Double])]],
+                            probed: Seq[Int]): (Double, Int) = {
+    val rows = buckets.flatten
+    val starts = buckets.scanLeft(0)(_ + _.length).toArray
+    val r = graft.plans.CentOps.best(vec(e: _*), ef = false,
+      rows.flatMap(_._2).toArray, rows.map(_._1).toArray, starts,
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(probed.toArray))
+    val got = (r.getDouble(0), r.getInt(1))
+    val union = probed.distinct.flatMap(buckets)
+    val want = allRounded(vec(e: _*), ef = false,
+      union.flatMap(_._2).toArray, union.map(_._1).toArray)
+    assert(java.lang.Double.doubleToLongBits(got._1) ==
+      java.lang.Double.doubleToLongBits(want._1) && got._2 == want._2,
+      s"probed $probed: best $got, all-rounded reference $want")
+    got
+  }
+
+  test("candidate set: a NaN centroid in a probed bucket loses") {
+    val zero = Seq(0.0, 0.0)
+    val e = Seq(1.0, 0.0)
+    val buckets = Seq(
+      Seq(0 -> zero, 5 -> atCos(0.3)),
+      Seq(2 -> atCos(0.6)),
+      Seq(1 -> atCos(0.95)),
+      Seq(3 -> zero))
+    assert(probedMatches(e, buckets, Seq(0)) == (-0.3, 5))
+    assert(probedMatches(e, buckets, Seq(1, 0))._2 == 2)
+    assert(probedMatches(e, buckets, Seq(3, 0, 2))._2 == 1)
+    // a probe that reaches only the NaN centroid: the sentinel
+    assert(probedMatches(e, buckets, Seq(3)) == (2.0, 3))
+  }
+
+  test("candidate set: tied rounded cosines in two probed buckets go to the smaller cid") {
+    val e = Seq(1.0, 0.0)
+    // a near tie (raw cosines under 1e-9 apart) and an exact tie, each
+    // split across two buckets, the larger raw cosine on the larger cid
+    val near = Seq(Seq(7 -> atCos(0.9000000004)), Seq(3 -> atCos(0.9000000001)),
+      Seq(1 -> atCos(0.5)))
+    val same = Seq(Seq(9 -> atCos(0.7)), Seq(1 -> atCos(0.2)), Seq(4 -> atCos(0.7)))
+    for (probed <- Seq(0, 1, 2).permutations.toSeq ++ Seq(Seq(0, 1), Seq(1, 0))) {
+      assert(probedMatches(e, near, probed)._2 == 3, s"near tie, probed $probed")
+    }
+    for (probed <- Seq(Seq(0, 2), Seq(2, 0), Seq(2, 1, 0))) {
+      assert(probedMatches(e, same, probed)._2 == 4, s"exact tie, probed $probed")
+    }
+  }
+
+  test("candidate set: a bucket probed twice scores as probed once") {
+    val rng = new scala.util.Random(19)
+    // bucket 2 is empty: its starts entry repeats
+    val buckets = Seq(3, 2, 0, 4).scanLeft(0)(_ + _).sliding(2).map { case Seq(a, b) =>
+      (a until b).map(j => (17 - j) -> Seq.fill(4)(rng.nextDouble() - 0.5))
+    }.toSeq
+    for (_ <- 0 until 200) {
+      val e = Seq.fill(4)(rng.nextDouble() - 0.5)
+      // the router probes populated buckets only; an empty one may ride along
+      val probed = Seq.fill(rng.nextInt(4))(rng.nextInt(buckets.length)) :+
+        Seq(0, 1, 3)(rng.nextInt(3))
+      val twice = probedMatches(e, buckets, probed ++ probed)
+      assert(twice == probedMatches(e, buckets, probed.distinct))
     }
   }
 }

@@ -301,20 +301,6 @@ class PlanSpec extends SparkSpec {
       .findFirstIn(plan).isDefined, s"no cid-keyed equi-join:\n$plan")
   }
 
-  test("trained IVF scores centroids via broadcast (corpus never shuffles to score)") {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val cents = graft.operators.SimilaritySearch.trainCentroids(spark, emb, k = 4, iters = 1)
-    // the assignment pass inside training is the plan shape every
-    // Lloyd's round and the search itself reuse: centroids broadcast,
-    // corpus side stays where it is
-    val assigned = emb.join(
-      org.apache.spark.sql.functions.broadcast(cents))
-    val plan = finalPlan(assigned)
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastHashJoin"),
-      s"centroids not broadcast:\n$plan")
-  }
-
   test("partitioned events layout: since prunes date partitions (files), not just row groups") {
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toFile.getPath
     try {
@@ -467,16 +453,87 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("proto prune broadcasts centroids and cuts; corpus never nested-loops") {
-    val plan = finalPlan(graft.SparkEntry.queries("q_proto_prune")(spark, sfDir))
-    // centroid scoring and the cut table both ride broadcasts
-    assert(plan.contains("BroadcastExchange"), s"no broadcast:\n$plan")
-    assert(!plan.contains("CartesianProduct"),
-      s"corpus-scale cartesian in proto prune:\n$plan")
-    // assignment aggregates hash-side (primitive argmaxRank buffers),
-    // never a SortAggregate over the n·k score stream
-    assert(!plan.contains("SortAggregate"),
-      s"assignment fell back to SortAggregate:\n$plan")
+  test("centroid argmax: one graft_cent_best per codegen stage, fed by the scan") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    import graft.operators.{SemanticDedup, SimilaritySearch}
+    import graft.plans.CentBest
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
+    // the nodes one codegen stage compiles: its subtree above the
+    // InputAdapters that feed it
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(stage)
+    }
+    def kernels(p: SparkPlan): Seq[CentBest] =
+      p.expressions.flatMap(_.collect { case b: CentBest => b })
+    def nestedLoop(p: SparkPlan): Boolean = p match {
+      case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => true
+      case _ => false
+    }
+    def check(what: String, plan: SparkPlan): Unit = {
+      val all = nodes(plan)
+      val scoring = all.filter(kernels(_).nonEmpty)
+      assert(scoring.nonEmpty, s"$what: centroids not scored by graft_cent_best:\n$plan")
+      val stages = all.collect { case w: WholeStageCodegenExec => w }
+      scoring.foreach { n =>
+        val in = stages.filter(w => stage(w.child).exists(_ eq n))
+        assert(in.size == 1, s"$what: graft_cent_best outside whole-stage codegen:\n$plan")
+        val ks = stage(in.head.child).flatMap(kernels).map(_.canonicalized).distinct
+        assert(ks.size == 1, s"$what: ${ks.size} centroid kernels in one stage:\n$plan")
+        // between the kernel and the embeddings scan: narrow operators only
+        val below = nodes(n).tail
+        assert(below.exists {
+          case f: FileSourceScanExec =>
+            f.relation.location.rootPaths.exists(_.toString.contains("embeddings"))
+          case _ => false
+        }, s"$what: graft_cent_best does not read the embeddings scan:\n$plan")
+        assert(!below.exists(p => p.isInstanceOf[Exchange] || nestedLoop(p)),
+          s"$what: exchange or nested-loop join below graft_cent_best:\n$plan")
+      }
+      assert(!all.exists(nestedLoop), s"$what: nested-loop join in the plan:\n$plan")
+    }
+    def finalOf(df: DataFrame): SparkPlan = {
+      df.collect() // force AQE to finalize
+      df.queryExecution.executedPlan
+    }
+    // q_proto_prune materializes its (vec_id, cid, proto9) assignment
+    // with localCheckpoint, whose plan is an execution of its own
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = runs.add(f -> qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val proto = finalOf(graft.SparkEntry.queries("q_proto_prune")(spark, sfDir))
+      val assign = eventually(timeout(Span(30, Seconds))) {
+        runs.asScala.collectFirst {
+          case ("localCheckpoint", qe) if qe.analyzed.output.exists(_.name == "proto9") =>
+            qe.executedPlan
+        }.getOrElse(fail(s"no proto9 checkpoint among ${runs.asScala.map(_._1)}"))
+      }
+      check("q_proto_prune assignment", assign)
+      assert(!nodes(proto).exists(nestedLoop), s"nested-loop join in proto prune:\n$proto")
+      // the sampled per-cluster cut table still rides a broadcast
+      assert(proto.toString.contains("BroadcastExchange"), s"cut table not broadcast:\n$proto")
+    } finally spark.listenerManager.unregister(listener)
+    check("q_sample_cluster_cap",
+      finalOf(graft.SparkEntry.queries("q_sample_cluster_cap")(spark, sfDir)))
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
+    val cents = SimilaritySearch.trainCentroids(spark, emb, 16, iters = 1)
+    check("assignViaIvf", finalOf(SemanticDedup.assignViaIvf(spark, emb, cents, probe = 2)))
   }
 
   test("cdc dedup aggregates chunk occurrences hash-side with no cartesian") {
@@ -595,9 +652,8 @@ class PlanSpec extends SparkSpec {
       s"bin counts not partial-aggregated:\n$plan")
   }
 
-  test("cluster-cap sample: centroids broadcast, quota via bounded partial top-k") {
+  test("cluster-cap sample: quota via bounded partial top-k, no corpus window") {
     val plan = finalPlan(graft.SparkEntry.queries("q_sample_cluster_cap")(spark, sfDir))
-    assert(plan.contains("BroadcastExchange"), s"centroids not broadcast:\n$plan")
     assert(!plan.contains("CartesianProduct"),
       s"corpus-scale cartesian in cluster-cap sample:\n$plan")
     // the per-cid quota is the bounded TopK aggregator (partial+final),

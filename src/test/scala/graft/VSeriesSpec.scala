@@ -157,6 +157,31 @@ class VSeriesSpec extends SparkSpec {
     }
   }
 
+  test("proto_prune: an all-zero centroid changes no row's cid, proto, cut or keep") {
+    // Lloyd's mean of opposing members can be the zero vector; its
+    // cosine is NaN against every row. The assignment's rule is that
+    // NaN loses, so the centroid must be inert: neither winning rows
+    // nor turning the winner's prototypicality score into NaN
+    val vecs = (0 until 120).map { i =>
+      val a = 0.01 + i * 0.004
+      val (x, y) = (math.cos(a).toFloat, math.sin(a).toFloat)
+      if (i % 2 == 0) (i.toLong, Seq(x, y)) else (i.toLong, Seq(y, x))
+    }
+    val emb = vecs.toDF("vec_id", "embedding")
+    val two = Seq((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)))
+    def run(cents: Seq[(Int, Seq[Double])]) =
+      SimilaritySearch.protoPruneOn(spark, emb, cents.toDF("cid", "c_emb"))
+        .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cid"),
+          r.getAs[Double]("proto"), Option(r.get(3)), r.getAs[Boolean]("keep")))
+        .toSeq
+    val base = run(two)
+    val withZero = run(two :+ ((2, Seq(0.0, 0.0))))
+    assert(base.size == 120 && base.count(!_._5) > 0, "fixture must prune")
+    assert(withZero.forall(r => !r._3.isNaN), "a NaN proto reached the output")
+    assert(withZero == base,
+      s"zero centroid moved rows: ${withZero.diff(base).take(5)}")
+  }
+
   // ------------------------------------------------------------- W1
   test("sample_pareto implements the GPT-3 keep rule bit-exactly and tilts by quality") {
     // bimodal corpus: diverse 120-word docs vs 10x-repeated-word docs
