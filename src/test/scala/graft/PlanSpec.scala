@@ -15,6 +15,72 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  private def finalExec(df: DataFrame): org.apache.spark.sql.execution.SparkPlan = {
+    df.collect() // force AQE to finalize
+    df.queryExecution.executedPlan
+  }
+
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }).flatMap(planNodes)
+  }
+
+  private def nestedLoop(p: org.apache.spark.sql.execution.SparkPlan): Boolean = {
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    p match {
+      case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => true
+      case _ => false
+    }
+  }
+
+  /** The centroid-kernel contract. Every node that scores centroids
+    * does it with graft_cent_best inside one whole-stage codegen stage
+    * holding exactly one distinct kernel, and reads the embeddings scan
+    * with no Exchange, BroadcastNestedLoopJoin or CartesianProduct
+    * below it; the plan has no nested-loop join at all. The centroid
+    * matrix rides the kernel expression, so it reaches the executors
+    * in the stage's broadcast task binary while the corpus stays where
+    * it is. */
+  private def assertCentKernel(what: String,
+                               plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.plans.CentBest
+    // the nodes one codegen stage compiles: its subtree above the
+    // InputAdapters that feed it
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(stage)
+    }
+    def kernels(p: SparkPlan): Seq[CentBest] =
+      p.expressions.flatMap(_.collect { case b: CentBest => b })
+    val all = planNodes(plan)
+    val scoring = all.filter(kernels(_).nonEmpty)
+    assert(scoring.nonEmpty, s"$what: centroids not scored by graft_cent_best:\n$plan")
+    val stages = all.collect { case w: WholeStageCodegenExec => w }
+    scoring.foreach { n =>
+      val in = stages.filter(w => stage(w.child).exists(_ eq n))
+      assert(in.size == 1, s"$what: graft_cent_best outside whole-stage codegen:\n$plan")
+      val ks = stage(in.head.child).flatMap(kernels).map(_.canonicalized).distinct
+      assert(ks.size == 1, s"$what: ${ks.size} centroid kernels in one stage:\n$plan")
+      // between the kernel and the embeddings scan: narrow operators only
+      val below = planNodes(n).tail
+      assert(below.exists {
+        case f: FileSourceScanExec =>
+          f.relation.location.rootPaths.exists(_.toString.contains("embeddings"))
+        case _ => false
+      }, s"$what: graft_cent_best does not read the embeddings scan:\n$plan")
+      assert(!below.exists(p => p.isInstanceOf[Exchange] || nestedLoop(p)),
+        s"$what: exchange or nested-loop join below graft_cent_best:\n$plan")
+    }
+    assert(!all.exists(nestedLoop), s"$what: nested-loop join in the plan:\n$plan")
+  }
+
   test("since-filter pushes down to the parquet scan") {
     val plan = finalPlan(EventLogOps.since(spark, sfDir))
     assert(plan.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts"),
@@ -453,61 +519,12 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("centroid argmax: one graft_cent_best per codegen stage, fed by the scan") {
+  test("proto prune broadcasts centroids and cuts; corpus never nested-loops") {
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.{Seconds, Span}
-    import graft.operators.{SemanticDedup, SimilaritySearch}
-    import graft.plans.CentBest
-    def children(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case _ => p.children
-    }
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: children(p).flatMap(nodes)
-    // the nodes one codegen stage compiles: its subtree above the
-    // InputAdapters that feed it
-    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
-      case _: InputAdapter => Nil
-      case _ => p +: p.children.flatMap(stage)
-    }
-    def kernels(p: SparkPlan): Seq[CentBest] =
-      p.expressions.flatMap(_.collect { case b: CentBest => b })
-    def nestedLoop(p: SparkPlan): Boolean = p match {
-      case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => true
-      case _ => false
-    }
-    def check(what: String, plan: SparkPlan): Unit = {
-      val all = nodes(plan)
-      val scoring = all.filter(kernels(_).nonEmpty)
-      assert(scoring.nonEmpty, s"$what: centroids not scored by graft_cent_best:\n$plan")
-      val stages = all.collect { case w: WholeStageCodegenExec => w }
-      scoring.foreach { n =>
-        val in = stages.filter(w => stage(w.child).exists(_ eq n))
-        assert(in.size == 1, s"$what: graft_cent_best outside whole-stage codegen:\n$plan")
-        val ks = stage(in.head.child).flatMap(kernels).map(_.canonicalized).distinct
-        assert(ks.size == 1, s"$what: ${ks.size} centroid kernels in one stage:\n$plan")
-        // between the kernel and the embeddings scan: narrow operators only
-        val below = nodes(n).tail
-        assert(below.exists {
-          case f: FileSourceScanExec =>
-            f.relation.location.rootPaths.exists(_.toString.contains("embeddings"))
-          case _ => false
-        }, s"$what: graft_cent_best does not read the embeddings scan:\n$plan")
-        assert(!below.exists(p => p.isInstanceOf[Exchange] || nestedLoop(p)),
-          s"$what: exchange or nested-loop join below graft_cent_best:\n$plan")
-      }
-      assert(!all.exists(nestedLoop), s"$what: nested-loop join in the plan:\n$plan")
-    }
-    def finalOf(df: DataFrame): SparkPlan = {
-      df.collect() // force AQE to finalize
-      df.queryExecution.executedPlan
-    }
     // q_proto_prune materializes its (vec_id, cid, proto9) assignment
     // with localCheckpoint, whose plan is an execution of its own
     val runs = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
@@ -517,23 +534,27 @@ class PlanSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      val proto = finalOf(graft.SparkEntry.queries("q_proto_prune")(spark, sfDir))
+      val proto = finalExec(graft.SparkEntry.queries("q_proto_prune")(spark, sfDir))
       val assign = eventually(timeout(Span(30, Seconds))) {
         runs.asScala.collectFirst {
           case ("localCheckpoint", qe) if qe.analyzed.output.exists(_.name == "proto9") =>
             qe.executedPlan
         }.getOrElse(fail(s"no proto9 checkpoint among ${runs.asScala.map(_._1)}"))
       }
-      check("q_proto_prune assignment", assign)
-      assert(!nodes(proto).exists(nestedLoop), s"nested-loop join in proto prune:\n$proto")
-      // the sampled per-cluster cut table still rides a broadcast
+      assertCentKernel("q_proto_prune assignment", assign)
+      assert(!planNodes(proto).exists(nestedLoop), s"nested-loop join in proto prune:\n$proto")
+      // the sampled per-cluster cut table rides a BroadcastExchange
       assert(proto.toString.contains("BroadcastExchange"), s"cut table not broadcast:\n$proto")
+      assert(!proto.toString.contains("SortAggregate"),
+        s"proto prune fell back to SortAggregate:\n$proto")
     } finally spark.listenerManager.unregister(listener)
-    check("q_sample_cluster_cap",
-      finalOf(graft.SparkEntry.queries("q_sample_cluster_cap")(spark, sfDir)))
+  }
+
+  test("trained IVF scores centroids via broadcast (corpus never shuffles to score)") {
+    import graft.operators.{SemanticDedup, SimilaritySearch}
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
     val cents = SimilaritySearch.trainCentroids(spark, emb, 16, iters = 1)
-    check("assignViaIvf", finalOf(SemanticDedup.assignViaIvf(spark, emb, cents, probe = 2)))
+    assertCentKernel("assignViaIvf", finalExec(SemanticDedup.assignViaIvf(spark, emb, cents, probe = 2)))
   }
 
   test("cdc dedup aggregates chunk occurrences hash-side with no cartesian") {
@@ -653,7 +674,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("cluster-cap sample: quota via bounded partial top-k, no corpus window") {
-    val plan = finalPlan(graft.SparkEntry.queries("q_sample_cluster_cap")(spark, sfDir))
+    val df = graft.SparkEntry.queries("q_sample_cluster_cap")(spark, sfDir)
+    assertCentKernel("q_sample_cluster_cap", finalExec(df))
+    val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"),
       s"corpus-scale cartesian in cluster-cap sample:\n$plan")
     // the per-cid quota is the bounded TopK aggregator (partial+final),
